@@ -58,6 +58,10 @@ def main() -> int:
         if name not in oracles:
             print(f"  [rows-only] {name}: {len(srows)} rows, cols={scols}")
             continue
+        if oracles[name] is None:
+            failures.append(name)
+            print(f"  [FAIL] {name}: no oracle SQL generated")
+            continue
         orel = con.execute(oracles[name])
         ocols = [d[0] for d in orel.description]
         orows = orel.fetchall()

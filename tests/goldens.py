@@ -1,16 +1,17 @@
 """Golden values replayed from the reference RSpec suite.
 
-Literal expectations from /root/reference/spec/upton_spec.rb:14-40 and the
-unit specs; fixture pages are read from the reference's spec/data directory
-(read-only test data, mirroring the WebMock stubs at spec/upton_spec.rb:44-53).
+Literal expectations from the reference's spec/upton_spec.rb:14-40 and the
+unit specs; fixture pages are read from ``upton_spark.sources.fixtures``'s
+FIXTURE_DIR (the reference's spec/data when present, else the in-repo
+``tests/fixtures/`` pages), mirroring the WebMock stubs at
+spec/upton_spec.rb:44-53.
 """
 
 from __future__ import annotations
 
 import os
 
-FIXTURE_DIR = "/root/reference/spec/data"
-BASE = "http://www.example.com"
+from upton_spark.sources.fixtures import BASE, FIXTURE_DIR
 
 HEADLINES = [
     "Webinar: How to Use Prescriber Checkup to Power Your Reporting",

@@ -1,6 +1,6 @@
 """Fast-tokenizer equivalence: the regex scanner must produce byte-identical
-extraction output to the stdlib html.parser path over (a) every reference
-RSpec fixture page, (b) synthetic Common-Crawl-style pages, (c) a battery of
+extraction output to the stdlib html.parser path over (a) every fixture
+page (``fixtures.FIXTURE_DIR``), (b) synthetic Common-Crawl-style pages, (c) a battery of
 quirky-markup cases. The goldens themselves (tests/test_html_goldens.py,
 reference spec/upton_spec.rb:14-40) run against the default engine, so this
 file is what licenses the fast path.
@@ -8,7 +8,7 @@ file is what licenses the fast path.
 
 from __future__ import annotations
 
-import glob
+import os
 
 import pytest
 
@@ -20,8 +20,9 @@ from upton_spark.html.extract import (
     extract_text,
 )
 from upton_spark.sources.corpus import _index_html, _instance_html
+from upton_spark.sources.fixtures import FIXTURE_DIR, fixture_paths
 
-FIXTURES = sorted(glob.glob("/root/reference/spec/data/*.html"))
+FIXTURES = fixture_paths()
 
 SELECTORS = [
     "section#river section h1 a",
@@ -95,14 +96,14 @@ def test_fixture_pages_equivalent(path):
 
 def test_fixture_links_and_tables_equivalent(monkeypatch):
     base = "http://www.example.com/propublica.html"
-    html = _texts_of_fixture("/root/reference/spec/data/propublica.html")
+    html = _texts_of_fixture(os.path.join(FIXTURE_DIR, "propublica.html"))
     monkeypatch.setenv("UPTON_SPARK_HTML_ENGINE", "fast")
     fast_links = extract_links(html, "section#river section h1 a", base)
     monkeypatch.setenv("UPTON_SPARK_HTML_ENGINE", "stdlib")
     std_links = extract_links(html, "section#river section h1 a", base)
     assert fast_links == std_links
 
-    wiki = _texts_of_fixture("/root/reference/spec/data/easttimor.html")
+    wiki = _texts_of_fixture(os.path.join(FIXTURE_DIR, "easttimor.html"))
     xpath = (
         '//table[contains(concat(" ", normalize-space(@class), " "),'
         ' " wikitable ")][2]'
@@ -162,7 +163,7 @@ def test_fuzzed_markup_equivalent():
 
 
 def test_list_helper_equivalent(monkeypatch):
-    html = _texts_of_fixture("/root/reference/spec/data/propublica.html")
+    html = _texts_of_fixture(os.path.join(FIXTURE_DIR, "propublica.html"))
     sel = "#jamb.wNarrow #most-commented li a"
     monkeypatch.setenv("UPTON_SPARK_HTML_ENGINE", "fast")
     fast = extract_list(html, sel)

@@ -1,7 +1,8 @@
 """HTML engine goldens — replay of the reference RSpec extraction suite
 (spec/upton_spec.rb:43-171, spec/unit/parsing_spec.rb:18-39) against the
-checked-in fixture pages. Byte-identity is the contract (BASELINE.json
-north_star)."""
+fixture pages. Byte-identity is the contract (BASELINE.json north_star);
+it is checked against the reference bytes when ``fixtures.REFERENCE_FIXTURES``
+is true, else against the in-repo pages written from the same goldens."""
 
 from upton_spark.html import (
     decode_html_bytes,
@@ -142,7 +143,7 @@ def test_extract_anchors_fixture_goldens():
     golden headlines with their resolved instance urls, in DOM order."""
     from upton_spark.html.extract import extract_anchors
 
-    html = open("/root/reference/spec/data/propublica.html").read()
+    html = goldens.fixture_html("propublica.html")
     got = extract_anchors(
         html, "section#river section h1 a", "http://www.example.com/propublica.html"
     )

@@ -230,10 +230,11 @@ def test_extract_builds_only_present_kind_branches(spark):
     assert "extract_list_udf" not in plan
 
 
-def test_prescan_in_pushdown_prunes_files(spark, tmp_path):
-    """Driver-known candidate urls prescan as an IN predicate pushed to the
-    parquet scan (row-group stats prune it), and the matched-file list is a
-    strict subset of the corpus files."""
+def test_prescan_probes_url_file_map(spark, tmp_path):
+    """The first prescan of a corpus builds its cached url→file map and
+    every prescan probes that map, never the corpus scan: a driver-known
+    candidate list filters it, other candidates semi-join it, and both give
+    the same matched-file list, a strict subset of the corpus files."""
     from pyspark.sql import functions as F
 
     from upton_spark.crawler import Crawler, SeedSpec
@@ -250,19 +251,17 @@ def test_prescan_in_pushdown_prunes_files(spark, tmp_path):
     ]
     crawler = Crawler(spark, pages, seeds, assume_unique_urls=True, pages_path=path)
     key_urls = [f"{BASE}/propublica.html"]
-    files = crawler._prune_file_list(
-        spark.createDataFrame([(u,) for u in key_urls], "url string"),
-        "url",
-        key_urls=key_urls,
-    )
+    keys = spark.createDataFrame([(u,) for u in key_urls], "url string")
+    files = crawler._prune_file_list(keys, "url", key_urls=key_urls)
     assert files is not None
     assert 0 < len(files) < len(pages.inputFiles())
-    probe = pages.filter(F.col("url").isin(key_urls)).select(F.input_file_name())
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    # a single-url IN folds to EqualTo; either way the url predicate must
-    # appear inside the scan's PushedFilters
-    pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
-    assert "In(url" in pushed or "EqualTo(url" in pushed
+    fmap = crawler._url_file_map()
+    assert fmap.storageLevel.useMemory  # built and cached by the prescan
+    plan = (
+        fmap.filter(F.col("url").isin(key_urls))._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "InMemoryTableScan" in plan
+    assert sorted(crawler._prune_file_list(keys, "url")) == sorted(files)
 
 
 def test_body_join_prunes_corpus_scan_to_url_html(spark, tmp_path):

@@ -37,6 +37,10 @@ def _texts(result):
     ]
 
 
+def _links(result):
+    return sorted(tuple(r) for r in result.links.collect())
+
+
 def test_politeness_deferral_spreads_rounds(spark, pages):
     """sleep=30 & budget=30 → 1 token/host/round → the 4 same-host instance
     fetches spread across 4 rounds as deferred-by-politeness lineage."""
@@ -91,7 +95,8 @@ def test_bloom_path_equivalent_when_active(spark, pages):
 
 def test_kill_and_resume_identical(spark, pages, tmp_path):
     """Kill after the first committed fetch round; resume must produce the
-    identical extraction set and URL-seen set (north_star resume rule)."""
+    identical extraction set, URL-seen set and links (north_star resume
+    rule)."""
     # uninterrupted reference run
     ref = Crawler(
         spark, pages, [basic_seed(sleep_time_between_requests=30.0)], round_budget_s=30.0
@@ -119,6 +124,36 @@ def test_kill_and_resume_identical(spark, pages, tmp_path):
     ).resume()
     assert _texts(resumed) == ref_texts
     assert sorted(r["url"] for r in resumed.urls_seen.collect()) == ref_seen
+    assert _links(resumed) == _links(ref)
+
+
+def test_resume_over_finished_crawl_returns_its_own_links(spark, pages, tmp_path):
+    """A catalog that already holds a finished crawl's links: a crawl over
+    it, killed and resumed, must return its OWN links (written with its
+    first full snapshot), never the earlier crawl's."""
+    seed = basic_seed(sleep_time_between_requests=30.0)
+    ref = Crawler(spark, pages, [seed], round_budget_s=30.0).crawl()
+    cat = ManifestCatalog(spark, str(tmp_path / "cat_reused"))
+    search = SeedSpec(
+        0,
+        seed_url=f"{BASE}/propublica_search.html",
+        index_selector=".compact-list a.title-link",
+        extract_selector="h1.article-title",
+        extract_kind="text",
+        paginated=True,
+        pagination_param="p",
+        pagination_max_pages=3,
+        sleep_time_between_requests=0.0,
+    )
+    earlier = Crawler(spark, pages, [search], catalog=cat).crawl()
+    assert _links(earlier) != _links(ref)
+    with pytest.raises(KilledCrawl):
+        Crawler(spark, pages, [seed], round_budget_s=30.0, catalog=cat).crawl(
+            stop_after_round=0
+        )
+    resumed = Crawler(spark, pages, [seed], round_budget_s=30.0, catalog=cat).resume()
+    assert _links(resumed) == _links(ref)
+    assert _texts(resumed) == _texts(ref)
 
 
 def test_delta_commits_and_resume_across_compaction(spark, pages, tmp_path):
@@ -155,6 +190,7 @@ def test_delta_commits_and_resume_across_compaction(spark, pages, tmp_path):
         compact_every=2,
     ).resume()
     assert _texts(resumed) == ref_texts
+    assert _links(resumed) == _links(ref)
     # final commit supersedes all deltas
     final = cat.latest()
     assert not any(n.startswith("frontier_delta_r") for n in final.tables)
@@ -232,6 +268,7 @@ def test_retry_state_survives_kill_and_resume(spark, pages, tmp_path):
     assert res_rows[f"{BASE}/prosecutor.html"] == ("failed", 3)
     assert res_rows[f"{BASE}/discussion.html"] == ("fetched", 2)
     assert _texts(resumed) == _texts(ref)
+    assert _links(resumed) == _links(ref)
 
 
 def test_fetched_at_and_readable_key(spark, pages):
@@ -532,6 +569,28 @@ def test_oneshot_matches_loop_with_robots_and_delay(spark, pages, monkeypatch):
     assert run(force_loop=False) == run(force_loop=True)
 
 
+def test_closed_form_decisions_pin_released_on_close(spark, pages):
+    """The closed-form fetch phase pins its decisions in the crawler's
+    scratch parquet, not the Spark cache: crawls leave no persisted
+    DataFrame behind whether or not the crawler is closed, and close()
+    removes the pin with the scratch dir."""
+    import os
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    c = Crawler(
+        spark, pages, [basic_seed(sleep_time_between_requests=30.0)], round_budget_s=30.0
+    )
+    assert c._oneshot_eligible(None)
+    n_cached = persisted().size()
+    for _ in range(2):
+        assert _texts(c.crawl()) == goldens.HEADLINES
+    assert persisted().size() == n_cached
+    assert any("decisions" in d for d in os.listdir(c._scratch))
+    c.close()
+    assert not os.path.exists(c._scratch)
+    assert persisted().size() == n_cached
+
+
 def test_oneshot_ineligible_cases_fall_back(spark, pages):
     """Failure injection, catalogs, kill-simulation, and heterogeneous seed
     sleeps must keep the stateful loop (the closed form would be wrong or
@@ -545,15 +604,33 @@ def test_oneshot_ineligible_cases_fall_back(spark, pages):
     assert Crawler(spark, pages, [basic_seed()])._oneshot_eligible(None)
 
 
-def test_index_oneshot_matches_sequential_loop(spark, pages, monkeypatch):
-    """The simulated index schedule (one distributed pass) must reproduce
+# case -> (index seeds' sleep, Crawler kwargs, add a url_list seed with a
+# different sleep, closed form expected)
+INDEX_GRID = {
+    "sleep0": (0.0, {}, False, True),
+    "sleep30": (30.0, {}, False, True),
+    "sleep0_index_cached": (0.0, {"index_cached": True}, False, True),
+    "sleep30_index_cached": (30.0, {"index_cached": True}, False, False),
+    "sleep30_catalog": (30.0, {"catalog": True}, False, True),
+    "sleep30_url_list_other_sleep": (30.0, {}, True, True),
+}
+
+
+@pytest.mark.parametrize("case", sorted(INDEX_GRID))
+def test_index_oneshot_matches_sequential_loop(spark, pages, monkeypatch, tmp_path, case):
+    """The closed-form index schedule (one distributed pass) must reproduce
     the sequential round loop exactly — per-round lineage, link rows incl.
-    page_round, extraction — on the contended case: two sleeping paginated
-    chains sharing one host at 1 token/round."""
+    page_round, seen-set incl. first_round, extraction — on the contended
+    case: two paginated chains sharing one host, at unlimited tokens and at
+    1 token/round, with stash checks, a catalog, and a url_list seed whose
+    sleep differs from the index seeds'. Finite tokens with index_cached
+    must keep the loop. The loop is forced through the single eligibility
+    predicate."""
+    sleep, kwargs, url_list_seed, closed_form = INDEX_GRID[case]
 
     def seeds():
-        return [
-            basic_seed(sleep_time_between_requests=30.0),
+        out = [
+            basic_seed(sleep_time_between_requests=sleep),
             SeedSpec(
                 1,
                 seed_url=f"{BASE}/propublica_search.html",
@@ -563,23 +640,32 @@ def test_index_oneshot_matches_sequential_loop(spark, pages, monkeypatch):
                 paginated=True,
                 pagination_param="p",
                 pagination_max_pages=3,
-                sleep_time_between_requests=30.0,
+                sleep_time_between_requests=sleep,
             ),
         ]
+        if url_list_seed:
+            out.append(SeedSpec(2, url_list=[f"{BASE}/easttimor.html"],
+                                extract_selector="h1.firstHeading", extract_kind="text",
+                                sleep_time_between_requests=5.0))
+        return out
 
     def run(force_loop):
         with monkeypatch.context() as m:
             if force_loop:
                 m.setattr(Crawler, "_index_oneshot_eligible", lambda self: False)
+            kw = dict(kwargs)
+            if kw.pop("catalog", False):
+                kw["catalog"] = ManifestCatalog(spark, str(tmp_path / f"cat_{force_loop}"))
             c = Crawler(spark, pages, seeds(), round_budget_s=30.0,
-                        clock="2024-03-01 12:00:00")
-            assert c._index_oneshot_eligible() is not force_loop
+                        clock="2024-03-01 12:00:00", **kw)
+            assert c._index_oneshot_eligible() is (closed_form and not force_loop)
             res = c.crawl()
             return (
                 _texts(res),
                 sorted(tuple(r) for r in res.lineage.collect()),
                 sorted(tuple(r) for r in res.links.collect()),
                 sorted((r["url"], r["status"]) for r in res.frontier.collect()),
+                sorted((r["url"], r["first_round"]) for r in res.urls_seen.collect()),
             )
 
     assert run(force_loop=False) == run(force_loop=True)

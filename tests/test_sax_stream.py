@@ -9,8 +9,6 @@ corpus pages, nested/comma/child-combinator cases.
 
 from __future__ import annotations
 
-import glob
-
 import pytest
 
 from upton_spark.html.dom import decode_html_bytes, parse_html
@@ -18,8 +16,9 @@ from upton_spark.html.extract import node_set_text, text_of
 from upton_spark.html.sax import stream_hrefs, stream_texts
 from upton_spark.html.selector import search
 from upton_spark.sources.corpus import _index_html, _instance_html
+from upton_spark.sources.fixtures import fixture_paths
 
-FIXTURES = sorted(glob.glob("/root/reference/spec/data/*.html"))
+FIXTURES = fixture_paths()
 
 SUPPORTED = [
     "section#river section h1 a",

@@ -1,19 +1,32 @@
-"""The crawl engine — Upton's scrape lifecycle as a Spark round loop.
+"""The crawl engine — Upton's scrape lifecycle as Spark jobs.
 
 Reproduces the reference lifecycle (SURVEY.md §3: index resolution →
 pagination → instance fetch → per-page block → flatten) as driver-side
-iterative batch over DataFrames:
+batch over DataFrames. Each fetch phase has exactly two implementations:
+one closed-form schedule and one stateful round loop.
 
-* **index phase** — one pagination page per seed per round (the chain is
-  inherently sequential per seed: page k+1's URL depends on page k's body
-  emptiness, lib/upton.rb:295-311), parallel across seeds/hosts; link
-  projection via the vectorized extraction UDF with NULL hrefs preserved.
-* **instance phase** — frontier rows `(seed, instance_index, url)`; fetch =
-  join against the ``pages`` corpus (the corpus *is* the stash:
+* **index phase** — every candidate pagination page of every index seed is
+  generated up front and fetched in one join (a chain's URLs are
+  predictable; only its END depends on bodies, lib/upton.rb:295-311, and a
+  window over the fetched bodies recovers it). The closed form then assigns
+  each page its fetch round: with unlimited tokens page k is fetched in
+  round k; with finite tokens a per-host ``applyInPandas`` simulation
+  replays the loop's admission. The loop (``run_index_phase_sequential``,
+  one page per alive seed per round) runs only when the index seeds'
+  tokens differ, or when tokens are finite and either a live transport
+  paces real requests or ``index_cached`` can turn a later page into a
+  stash hit mid-phase.
+* **instance phase** — frontier rows ``(seed, instance_index, url)``; fetch
+  = join against the ``pages`` corpus (the corpus *is* the stash:
   lib/upton/downloader.rb:70-98 becomes an anti-join + join); dedup via
-  broadcast Bloom + exact-confirm anti-join; robots gate; per-host
-  token-bucket politeness with deferral; every round is a catalog snapshot
-  commit carrying per-partition lineage → kill/resume-safe.
+  broadcast Bloom + exact-confirm anti-join; robots/blocklist gate;
+  per-host token politeness. The closed form computes every round at once
+  — a url of per-host rank r is fetched in round (r-1) div tokens
+  (``politeness.schedule_per_host``). The loop runs when something
+  perturbs rounds or needs a boundary per round: injected fetch failures,
+  a live transport, a catalog (every round is a snapshot commit carrying
+  per-partition lineage → kill/resume-safe), a simulated kill, or
+  heterogeneous seed sleeps.
 * **extraction phase** — the user "block" as a pandas UDF over the html
   column, in the reference's three canned shapes (text / list / table,
   lib/upton/utils.rb:20-40) plus identity (the reference's default block
@@ -38,6 +51,7 @@ from __future__ import annotations
 
 import atexit
 import contextlib
+import functools
 import os
 import shutil
 import tempfile
@@ -76,6 +90,11 @@ JOB_DIET_MAX_ROWS = 20_000
 # partition stay trivially in memory, narrow enough that task launches
 # stop dominating tiny stages
 JOB_DIET_SHUFFLE_WIDTH = 4
+# extraction prunes the corpus scan to the frontier's files only up to this
+# many frontier rows; past it the frontier touches most files anyway
+EXTRACT_PRUNE_MAX_URLS = 20_000
+# salted frontier partitioning: rows per salt bucket of a hot host
+FRONTIER_ROWS_PER_BUCKET = 100_000
 
 
 @dataclass
@@ -130,15 +149,9 @@ class KilledCrawl(RuntimeError):
 # session-lifetime inverted file index per corpus (see _url_file_map),
 # keyed by SparkSession identity so a map never outlives its session;
 # single entry — a new corpus unpersists and replaces the previous map.
+# The engine's only process-global cache: repeated crawls of one corpus
+# reuse it.
 _URL_FILE_MAP_CACHE: dict[tuple, DataFrame] = {}
-# per-(session, corpus) count of driver-known-IN prescans, driving the
-# build-on-second-prescan policy in _prune_file_list
-_PRESCAN_COUNTS: dict[tuple, int] = {}
-# single-slot cache of the latest oneshot decisions pin per session (see
-# _run_fetch_rounds_oneshot): the pin must outlive its crawl (the returned
-# frontier/seen read it lazily), but without a slot every oneshot crawl in
-# a long-lived session would leak one cached DataFrame
-_ONESHOT_DECISIONS_PIN: dict[str, DataFrame] = {}
 
 
 def _tokens_col(sleep_col, round_budget_s: float):
@@ -150,6 +163,20 @@ def _tokens_col(sleep_col, round_budget_s: float):
         .otherwise(F.greatest(F.lit(1), F.floor(F.lit(round_budget_s) / sleep_col)))
         .cast("long")
     )
+
+
+def _decision_col():
+    """The index phases' per-row decision: deferred, stash hit or live."""
+    return (
+        F.when(~F.col("admitted"), "deferred")
+        .when(F.col("cache_hit"), "cache_hit")
+        .otherwise("fetched")
+    )
+
+
+def _total(counts: dict[tuple[str, int], int], decision: str) -> int:
+    """All host buckets' rows of one decision in a lineage count map."""
+    return sum(v for (d, _), v in counts.items() if d == decision)
 
 
 def _csv_quote(col, sep: str):
@@ -177,8 +204,6 @@ class Crawler:
         max_instance_pages: int = 16,
         expected_url_capacity: int = 1 << 20,
         bloom_fpr: float = 1e-3,
-        index_sequential: bool = False,
-        extract_prune_max_urls: int = 20_000,
         assume_unique_urls: bool = False,
         broadcast_frontier: bool = True,
         fetch_failures: DataFrame | None = None,
@@ -186,7 +211,6 @@ class Crawler:
         index_fn: Callable[[DataFrame], DataFrame] | None = None,
         clock: str | None = None,
         compact_every: int = 8,
-        frontier_rows_per_bucket: int = 100_000,
         url_priorities: DataFrame | None = None,
         host_budgets: DataFrame | None = None,
         blocklist_hosts: DataFrame | None = None,
@@ -230,8 +254,6 @@ class Crawler:
                     f"seed {s.seed_id}: unknown extract_kind {s.extract_kind!r} "
                     f"(expected one of {sorted(known_kinds)})"
                 )
-        self.index_sequential = index_sequential
-        self.extract_prune_max_urls = extract_prune_max_urls
         # corpus contract flags:
         # - assume_unique_urls: pages has one capture per url (synthetic
         #   corpora; Iceberg tables maintained by MERGE) -> skip the
@@ -247,7 +269,6 @@ class Crawler:
         self.index_fn = index_fn
         self.clock = clock
         self.compact_every = max(1, compact_every)
-        self.frontier_rows_per_bucket = frontier_rows_per_bucket
         # Crawl-planning inputs (operators.webgraph family), composed into
         # the loop the way the reference's `scrape` composes its pieces
         # (lib/upton.rb:47-51) — a prioritized re-crawl is one constructor
@@ -264,9 +285,9 @@ class Crawler:
         # - ``blocklist_hosts`` (host) / ``blocklist_url_patterns``: the
         #   webgraph.blocklist_gate admission check, run beside the robots
         #   gate — hits go terminal status='blocked', never fetched.
-        # All three are uniform per host / static per url, so the one-shot
-        # closed-form schedule stays exact (no new _oneshot_eligible
-        # disqualifiers; equivalence pinned by test_planned_crawl_*).
+        # All three are uniform per host / static per url, so the closed-form
+        # schedule stays exact (no new _oneshot_eligible disqualifiers;
+        # equivalence pinned by test_planned_crawl_*).
         # - ``redirect_map`` (src, final_url): a known redirect table (e.g.
         #   webgraph.resolve_redirects over the previous crawl's
         #   meta_refresh_redirects edges) rewrites frontier urls to their
@@ -274,7 +295,7 @@ class Crawler:
         #   finals, politeness charges the final host, and the fetch never
         #   wastes a token on a hop page. Unresolved rows (final_url NULL)
         #   are ignored (the original url is kept). Static per url, so the
-        #   one-shot schedule stays exact.
+        #   closed-form schedule stays exact.
         self.url_priorities = url_priorities
         self.host_budgets = host_budgets
         self.blocklist_hosts = blocklist_hosts
@@ -287,7 +308,7 @@ class Crawler:
         #   log (closed-loop backpressure). Merged with robots Crawl-delay
         #   via greatest(): the most conservative source wins, same rule the
         #   robots delay already applies against the seed sleep. Uniform per
-        #   host, so the one-shot closed-form schedule stays exact.
+        #   host, so the closed-form schedule stays exact.
         self.host_delays = (
             host_delays.select("host", F.col("crawl_delay").cast("double"))
             if host_delays is not None
@@ -307,10 +328,10 @@ class Crawler:
         # performs them internally (the engine's bounded-retry rounds stay
         # driven by the deterministic fetch_failures injection). Must be
         # picklable (it ships to executors). Deferred rows NEVER reach the
-        # transport — only admitted live decisions do — and the one-shot
-        # closed-form schedules are disqualified (a live transport must
-        # fetch round-by-round under the real politeness pacing, not in one
-        # speculative pass).
+        # transport — only admitted live decisions do — and a live transport
+        # keeps the instance round loop, and the index loop whenever tokens
+        # are finite (it must fetch round-by-round under the real politeness
+        # pacing, not in one pass).
         self.fetch_fn = fetch_fn
         # Scratch dir for per-round state materialization: parquet
         # write+re-read truncates Catalyst lineage each round (the same thing
@@ -357,6 +378,9 @@ class Crawler:
         self._lineage_rows: list[tuple] = []
         self._seen_count = 0
         self._frontier_rows: int | None = None  # set by build_frontier
+        # links of a catalog crawl, written with the fetch phase's first full
+        # snapshot so a resumed crawl returns them (see run_fetch_rounds)
+        self._uncommitted_links: DataFrame | None = None
         self.seeds_df = spark.createDataFrame(
             [
                 (
@@ -515,15 +539,7 @@ class Crawler:
         shuffle) is skipped; at scale the same effect comes from Iceberg
         MERGE keeping one row per url."""
         if self._pages_latest is None:
-            if self.assume_unique_urls:
-                self._pages_latest = self.pages.select("url", "html")
-            else:
-                w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc_nulls_last())
-                self._pages_latest = (
-                    self.pages.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .select("url", "html")
-                )
+            self._pages_latest = self._latest_of(self.pages)
         return self._pages_latest
 
     def _pruned_pages(
@@ -545,39 +561,30 @@ class Crawler:
             return None
         return self._latest_of(self.spark.read.parquet(*files))
 
-    def _url_file_map(self, build: bool = False) -> DataFrame | None:
+    def _url_file_map(self) -> DataFrame:
         """(url, _f) inverted file index over the raw corpus scan,
-        Spark-cached per (session, pages_path, file set). Built ONLY when a
-        prescan must stream the full url column anyway (the semi-join
-        path, ``build=True``) — caching what that scan reads costs no
-        extra corpus IO, and from then on EVERY prescan (index candidates,
-        extraction prune, later crawls of the same corpus) is a tiny probe
-        of the map. Driver-known candidate sets keep the row-group-pruned
-        IN path until a map exists, so no workload ever pays a url-column
-        pass it wasn't already paying. The 100-TB analogue is table
-        metadata (Iceberg manifests / file url stats) — local parquet has
-        no such index, so the engine materializes one. Single entry: a new
-        corpus evicts (unpersists) the old map."""
-        if self.pages_path is None or not self._pages_is_raw_scan():
-            return None
+        Spark-cached per (session, pages_path, file set) and built on a
+        corpus's first prescan: every prescan (index candidates, extraction
+        prune, later crawls of the same corpus) is then a probe of the
+        cached map instead of a pass over the corpus url column. The
+        100-TB analogue is table metadata (Iceberg manifests / file url
+        stats) — local parquet has no such index, so the engine
+        materializes one. Single entry: a new corpus evicts (unpersists)
+        the old map."""
         # applicationId is stable for a session's lifetime and never reused,
         # unlike id(self.spark) which CPython can recycle after a stopped
         # session is GC'd (resurrecting a DataFrame bound to a dead session)
         app_id = self.spark.sparkContext.applicationId
         key = (app_id, self.pages_path, tuple(sorted(self.pages.inputFiles())))
         cached = _URL_FILE_MAP_CACHE.get(key)
-        if cached is not None or not build:
+        if cached is not None:
             return cached
         for k, old in list(_URL_FILE_MAP_CACHE.items()):
-            if k[0] != app_id:
-                # never unpersist a map owned by another live session;
-                # stopped sessions free their cache blocks on their own
-                del _URL_FILE_MAP_CACHE[k]
-                continue
-            try:
-                old.unpersist()
-            except Exception:
-                pass  # a map from a stopped session has nothing to free
+            # never unpersist a map owned by another live session; stopped
+            # sessions free their cache blocks on their own
+            if k[0] == app_id:
+                with contextlib.suppress(Exception):
+                    old.unpersist()
             del _URL_FILE_MAP_CACHE[k]
         fmap = (
             self.spark.read.parquet(self.pages_path)
@@ -591,62 +598,21 @@ class Crawler:
         self, keys: DataFrame, url_col: str, key_urls: list[str] | None = None
     ) -> list[str] | None:
         """The corpus files containing any candidate url, or None when
-        pruning is unavailable / not worthwhile (see _pruned_pages)."""
+        pruning is unavailable / not worthwhile (see _pruned_pages). A
+        driver-known candidate list (``key_urls``) probes the map with an IN
+        filter; otherwise ``keys`` is broadcast into a semi-join."""
         if self.pages_path is None or not self.broadcast_frontier:
             return None
         if not self._pages_is_raw_scan():
             return None
-        # map-build policy: the semi-join path always builds (it streams the
-        # url column anyway); the driver-known IN path keeps the cheaper
-        # row-group-pruned scan for a corpus's FIRST prescan, but from the
-        # second prescan on (same session+corpus: the index prescan and the
-        # extraction prescan of one crawl, or repeated crawls) the one-off
-        # scans have already cost more than one map build, so build it and
-        # turn every later prescan into a cached tiny probe
-        build = key_urls is None
-        if not build:
-            mkey = (
-                self.spark.sparkContext.applicationId,
-                self.pages_path,
-                tuple(sorted(self.pages.inputFiles())),
-            )
-            _PRESCAN_COUNTS[mkey] = _PRESCAN_COUNTS.get(mkey, 0) + 1
-            build = _PRESCAN_COUNTS[mkey] >= 2
-        fmap = self._url_file_map(build=build)
-        if fmap is not None:
-            if key_urls is not None:
-                probe = fmap.filter(F.col("url").isin(key_urls))
-            else:
-                probe = fmap.join(
-                    F.broadcast(keys.select(F.col(url_col).alias("url"))),
-                    "url",
-                    "left_semi",
-                )
-            files = [r["_f"] for r in probe.select("_f").distinct().collect()]
-        elif key_urls is not None:
-            # driver-known candidate set (e.g. index-chain urls, a pure
-            # function of the seed list): an IN predicate pushes down to the
-            # parquet scan, so row-group url stats prune the prescan itself —
-            # cheaper than the semi-join prescan, which must stream the whole
-            # url column
-            files = [
-                r["_f"]
-                for r in self.pages.filter(F.col("url").isin(key_urls))
-                .select(F.input_file_name().alias("_f"))
-                .distinct()
-                .collect()
-            ]
+        fmap = self._url_file_map()
+        if key_urls is not None:
+            probe = fmap.filter(F.col("url").isin(key_urls))
         else:
-            files = [
-                r["_f"]
-                for r in self.pages.select(
-                    F.col("url").alias(url_col), F.input_file_name().alias("_f")
-                )
-                .join(F.broadcast(keys), url_col, "left_semi")
-                .select("_f")
-                .distinct()
-                .collect()
-            ]
+            probe = fmap.join(
+                F.broadcast(keys.select(F.col(url_col).alias("url"))), "url", "left_semi"
+            )
+        files = [r["_f"] for r in probe.select("_f").distinct().collect()]
         if not files or not all(files):
             return None
         if len(files) >= max(1, len(self.pages.inputFiles())) * 0.5:
@@ -810,114 +776,150 @@ class Crawler:
             )
 
     def _mark_seen(
-        self, seen: DataFrame, new_urls: DataFrame, round_no: int, n_new: int,
+        self, seen: DataFrame, fetched: DataFrame, round_col,
         update_bloom: bool = True, materialize: bool = True,
     ) -> tuple[DataFrame, DataFrame]:
-        """seen ∪ new → (merged, new_rows); merges the round's new URLs into
-        the cumulative Bloom via distributed partial bitmaps (driver
-        OR-merge). update_bloom may be False ONLY when no later round will
-        consult the filter — a stale Bloom would produce false negatives,
-        which (unlike false positives) break the no-refetch contract.
-        ``materialize=False`` returns the lazy union (delta-based rounds:
-        the caller compacts every compact_every rounds); ``new_rows`` is the
-        round's seen-set delta for catalog commits."""
-        distinct_new = dedup_ops.with_url_hashes(new_urls.select("url").distinct())
+        """seen ∪ fetched urls → (merged, new_rows). ``fetched`` carries
+        ``url``; ``round_col`` is each row's fetch round and a url's lowest
+        one becomes its first_round. Callers advance self._seen_count
+        first. The new urls merge into the cumulative Bloom via
+        distributed partial bitmaps (driver OR-merge). update_bloom may be
+        False ONLY when no later round will consult the filter — a stale
+        Bloom would produce false negatives, which (unlike false positives)
+        break the no-refetch contract. ``materialize=False`` returns the
+        lazy union (delta-based rounds: the caller compacts every
+        compact_every rounds); ``new_rows`` is the seen-set delta for
+        catalog commits."""
+        hashed = dedup_ops.with_url_hashes(
+            fetched.groupBy("url").agg(F.min(round_col).cast("int").alias("first_round"))
+        )
         # frozen to a driver-side literal: with delta-based (lazy) seen
         # merges a current_timestamp() expression would re-evaluate on every
         # downstream action, stamping different times per consumer
         stamp = self.clock or datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
-        fetched_at = F.to_timestamp(F.lit(stamp))
-        new_rows = (
-            distinct_new.withColumn("first_round", F.lit(round_no))
-            .withColumn("fetched_at", fetched_at)
-            .select("url_hash", "url", "first_round", "fetched_at")
+        new_rows = hashed.select(
+            "url_hash", "url", "first_round", F.to_timestamp(F.lit(stamp)).alias("fetched_at")
         )
-        self._seen_count += n_new
         merged = seen.unionByName(new_rows)
-        if update_bloom and self._bloom_active:
-            dedup_ops.build_bloom(distinct_new, into=self._bloom)
-        elif update_bloom and self._seen_count >= self._bloom_min_seen:
+        if not update_bloom:
+            return merged, new_rows
+        if self._bloom_active:
+            dedup_ops.build_bloom(hashed, into=self._bloom)
+        elif self._seen_count >= self._bloom_min_seen:
             self._bloom_active = True
             dedup_ops.build_bloom(
                 dedup_ops.with_url_hashes(merged.select("url")), into=self._bloom
             )
-        if not materialize or not update_bloom:
+        if not materialize:
             return merged, new_rows
         return self._materialize(merged, "urls_seen"), new_rows
 
     # ----------------------------------------------------------- index phase
     def run_index_phase(self, seen: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """Speculative (one distributed pass) when every index seed has an
-        unlimited live-fetch budget; sequential otherwise. The speculative
-        pass generates and fetches every candidate pagination page in one
-        join with no token-bucket admission — fine for replay corpora, but
-        it would silently break the per-round politeness contract (at most
-        budget/sleep live fetches per host per round) for sleeping seeds, so
-        those auto-select the sequential chain."""
-        any_index_sleep = any(
-            s.seed_url
-            and s.index_selector is not None
-            and (s.sleep_time_between_requests or 0) > 0
-            for s in self.seeds
-        )
-        if not (self.index_sequential or any_index_sleep):
-            return self.run_index_phase_speculative(seen)
-        if any_index_sleep and self._index_oneshot_eligible():
+        """The closed-form index schedule when _index_oneshot_eligible,
+        else the sequential round loop. Returns (links, seen)."""
+        if self._index_oneshot_eligible():
             return self.run_index_phase_oneshot(seen)
         return self.run_index_phase_sequential(seen)
+
+    def _index_seeds(self) -> list[SeedSpec]:
+        return [s for s in self.seeds if s.seed_url and s.index_selector is not None]
+
+    def _index_seeds_df(self) -> DataFrame:
+        return self.seeds_df.filter(
+            (F.col("seed_url") != "") & F.col("index_selector").isNotNull()
+        )
+
+    def _index_tokens(self) -> set[int]:
+        return {
+            polite_ops.tokens_for(s.sleep_time_between_requests, self.round_budget_s)
+            for s in self._index_seeds()
+        }
+
+    def _index_oneshot_eligible(self) -> bool:
+        """The closed-form index schedule equals the loop when every index
+        seed has the same tokens (the loop ranks a host's alive chains by
+        (pagination_index, seed_id) against one constant budget) and no
+        per-round state can change the outcome. With unlimited tokens
+        nothing waits: chain page k is fetched in round k. With finite
+        tokens two loop-only effects remain — a live transport must fetch
+        round by round under the real pacing, and under index_cached a page
+        fetched in one round can make a later candidate a token-free stash
+        hit. Only index seeds count: url_list seeds never reach this phase,
+        and the phase never commits to a catalog."""
+        tokens = self._index_tokens()
+        if len(tokens) > 1:
+            return False
+        if tokens <= {polite_ops.UNLIMITED}:
+            return True
+        return self.fetch_fn is None and not self.index_cached
+
+    @staticmethod
+    def _with_index_page_url(df: DataFrame) -> DataFrame:
+        """The index page at each row's ``pagination_index``: fetch_url,
+        host and url hashes; rows past their seed's last page drop out."""
+        df = df.withColumn(
+            "next_url_raw",
+            next_index_page_url_udf(
+                F.col("seed_url"),
+                F.col("pagination_index"),
+                F.col("paginated"),
+                F.col("pagination_param"),
+                F.col("pagination_max_pages"),
+            ),
+        ).filter(F.col("next_url_raw") != "")
+        df = df.withColumn(
+            "fetch_url", resolve_url_udf(F.col("next_url_raw"), F.col("seed_url"))
+        ).withColumn("host", host_col(F.col("fetch_url")))
+        return dedup_ops.with_url_hashes(df, "fetch_url")
 
     def _index_page_candidates(self) -> DataFrame:
         """Every candidate index-pagination page URL, generated up front —
         the URLs of a chain are predictable (only chain TERMINATION depends
-        on fetched bodies, lib/upton.rb:295-311), so both index phases can
-        know the full candidate universe: the speculative phase fetches it
-        in one pass, the sequential phase uses it to prescan-prune the
-        corpus once for all of its rounds."""
-        index_seeds = self.seeds_df.filter(
-            (F.col("seed_url") != "") & F.col("index_selector").isNotNull()
+        on fetched bodies, lib/upton.rb:295-311): the closed form fetches
+        them all in one pass, and both index phases prescan-prune the
+        corpus once with them."""
+        pages = self._index_seeds_df().withColumn(
+            "page_k",
+            F.explode(
+                F.when(
+                    F.col("paginated"),
+                    F.sequence(F.lit(0), F.col("pagination_max_pages") - 1),
+                ).otherwise(F.array(F.lit(0)))
+            ),
         )
-        cand = (
-            index_seeds.withColumn(
-                "page_k",
-                F.explode(
-                    F.when(
-                        F.col("paginated"),
-                        F.sequence(F.lit(0), F.col("pagination_max_pages") - 1),
-                    ).otherwise(F.array(F.lit(0)))
-                ),
-            )
-            .withColumn(
+        return self._with_index_page_url(
+            pages.withColumn(
                 "pagination_index",
                 F.col("pagination_start_index") + F.col("page_k") * F.col("pagination_interval"),
             )
-            .withColumn(
-                "next_url_raw",
-                next_index_page_url_udf(
-                    F.col("seed_url"),
-                    F.col("pagination_index"),
-                    F.col("paginated"),
-                    F.col("pagination_param"),
-                    F.col("pagination_max_pages"),
-                ),
-            )
-            .filter(F.col("next_url_raw") != "")
-            .withColumn("fetch_url", resolve_url_udf(F.col("next_url_raw"), F.col("seed_url")))
-            .withColumn("host", host_col(F.col("fetch_url")))
         )
-        return dedup_ops.with_url_hashes(cand, "fetch_url")
+
+    def _tag_cache_hits(self, cand: DataFrame, seen: DataFrame) -> DataFrame:
+        """Boolean ``cache_hit``: the index page is already in the seen-set
+        (the reference's @index_debug stash check); False without
+        index_cached."""
+        if not self.index_cached:
+            return cand.withColumn("cache_hit", F.lit(False))
+        hits = seen.select("url_hash").distinct().withColumn("cache_hit", F.lit(True))
+        return cand.join(hits, "url_hash", "left").withColumn(
+            "cache_hit", F.coalesce("cache_hit", F.lit(False))
+        )
 
     def _index_pruned_corpus(self) -> tuple[DataFrame | None, bool]:
-        """(pruned index corpus, broadcast-it?) shared by every index phase.
+        """(pruned index corpus, broadcast-it?) shared by both index phases.
 
         The candidate pagination URLs are predictable up front, so the
-        corpus file-prune prescan runs ONCE for the whole phase — and when
-        the candidate list is driver-computable (bounded seeds), as an
-        IN-pushdown that lets row-group url stats prune the prescan itself
-        rather than a full url-column scan. When the pruned files are small
-        on disk the caller should BROADCAST the corpus side and plain-left-
-        join the candidate chain: _join_bodies' matched/unmatched
-        decomposition would evaluate the candidate UDF chain ~3x (broadcast
-        build + anti-join probe), the dominant cost at few-seeds scale."""
+        corpus file-prune prescan runs ONCE for the whole phase — with the
+        driver-computed candidate list as an IN probe of the url→file map
+        when the seed list is bounded. When the pruned files are small on
+        disk the caller should BROADCAST the corpus side and plain-left-join
+        the candidate chain: _join_bodies' matched/unmatched decomposition
+        would evaluate the candidate UDF chain ~3x (broadcast build +
+        anti-join probe), the dominant cost at few-seeds scale. Live mode
+        reads no corpus for live pages, so it skips the prescan."""
+        if self.fetch_fn is not None:
+            return None, False
         prune_files = self._prune_file_list(
             self._index_page_candidates()
             .select(F.col("fetch_url").alias("url"))
@@ -935,70 +937,66 @@ class Crawler:
             bcast = False
         return pl, bcast
 
-    def _fetch_all_index_pages(self, seen: DataFrame) -> DataFrame:
-        """ONE distributed pass over the whole candidate-page universe:
-        bodies joined, chain validity (no earlier empty page per seed) via a
-        window, stash hits tagged when index_cached, hrefs projected in the
-        same pass (unless an index_fn override needs the two-pass shape).
-        Materialized — the per-round/lineage logic of both one-pass index
-        phases derives lazily from this parquet. The materialization drops
-        ``html`` when hrefs were projected in-pass (nothing downstream reads
-        it then — the write stays slim even for fat index pages)."""
-        cand = self._index_page_candidates()
+    def _index_bodies(
+        self, cand: DataFrame, corpus: tuple[DataFrame | None, bool],
+        admitted: str | None = None,
+    ) -> DataFrame:
+        """Index candidates + ``html`` + ``body_empty``. Corpus replay joins
+        every row (a join row is not a live fetch — lineage/politeness
+        accounting is decision-based) against the phase's pruned corpus.
+        Live mode: ONLY admitted non-cache-hit rows (the token consumers)
+        reach the transport, admitted cache hits read the stash, and rows
+        not admitted carry a NULL body (unread — they re-enter admission
+        next round; a stale stash body would feed the chain logic content
+        the live crawl never fetched this round). ``admitted`` names the
+        admission column; None admits every row."""
         if self.fetch_fn is not None:
-            # live mode: the speculative pass is only reachable for
-            # zero-sleep seeds (sleeping seeds take the sequential loop —
-            # _index_oneshot_eligible is False with a transport), so
-            # fetching the whole candidate universe live is politeness-safe
-            # and bounded by pagination_max_pages per seed (pages past the
-            # chain end return empty and are discarded by chain_valid,
-            # like the reference's stop-on-empty probe fetch)
-            if self.index_cached:
-                seen_keys = seen.select("url_hash").distinct()
-                cand = cand.join(
-                    seen_keys.withColumn("cache_hit", F.lit(True)), "url_hash", "left"
-                ).withColumn("cache_hit", F.coalesce("cache_hit", F.lit(False)))
-            else:
-                cand = cand.withColumn("cache_hit", F.lit(False))
-            fetched = self._transport_bodies(
-                cand.filter(~F.col("cache_hit")), "fetch_url"
-            ).unionByName(
-                self._join_bodies(cand.filter(F.col("cache_hit")), "fetch_url")
+            go = F.col(admitted) if admitted else F.lit(True)
+            hit = F.col("cache_hit")
+            fetched = self._transport_bodies(cand.filter(go & ~hit), "fetch_url").unionByName(
+                self._join_bodies(cand.filter(go & hit), "fetch_url")
             )
+            if admitted:
+                fetched = fetched.unionByName(
+                    cand.filter(~go).withColumn("html", F.lit(None).cast("binary"))
+                )
         else:
-            pl_index, bcast_pages = self._index_pruned_corpus()
+            pl_index, bcast_pages = corpus
             if bcast_pages:
                 fetched = cand.join(
                     F.broadcast(pl_index.withColumnRenamed("url", "fetch_url")),
                     "fetch_url",
                     "left",
                 )
-            elif pl_index is not None:
-                fetched = self._join_bodies(cand, "fetch_url", pages_override=pl_index)
             else:
-                fetched = self._join_bodies(cand, "fetch_url")
-        fetched = fetched.withColumn(
+                fetched = self._join_bodies(cand, "fetch_url", pages_override=pl_index)
+        return fetched.withColumn(
             "body_empty", F.col("html").isNull() | (F.length("html") == 0)
         )
-        w = Window.partitionBy("seed_id").orderBy("page_k")
+
+    def _fetch_all_index_pages(self, seen: DataFrame) -> DataFrame:
+        """ONE distributed pass over the whole candidate-page universe:
+        stash hits tagged, bodies joined, chain validity (no earlier empty
+        page per seed) via a window, hrefs projected in the same pass
+        (unless an index_fn override needs the two-pass shape).
+        Materialized — the closed form's rounds, lineage and links derive
+        lazily from this parquet. The materialization drops ``html`` when
+        hrefs were projected in-pass (nothing downstream reads it then —
+        the write stays slim even for fat index pages). In live mode this
+        pass is reachable only with unlimited tokens, so fetching the whole
+        candidate universe is politeness-safe and bounded by
+        pagination_max_pages per seed (pages past the chain end come back
+        empty and are discarded by chain_valid, like the reference's
+        stop-on-empty probe fetch)."""
+        cand = self._tag_cache_hits(self._index_page_candidates(), seen)
+        fetched = self._index_bodies(cand, self._index_pruned_corpus())
+        before = Window.partitionBy("seed_id").orderBy("page_k").rowsBetween(
+            Window.unboundedPreceding, -1
+        )
         fetched = fetched.withColumn(
-            "empties_before",
-            F.coalesce(
-                F.sum(F.col("body_empty").cast("int")).over(
-                    w.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        ).withColumn("chain_valid", F.col("empties_before") == 0)
-        if "cache_hit" in fetched.columns:
-            pass  # live mode tagged cache hits before body acquisition
-        elif self.index_cached:
-            seen_keys = seen.select("url_hash").distinct()
-            fetched = fetched.join(
-                seen_keys.withColumn("cache_hit", F.lit(True)), "url_hash", "left"
-            ).withColumn("cache_hit", F.coalesce("cache_hit", F.lit(False)))
-        else:
-            fetched = fetched.withColumn("cache_hit", F.lit(False))
+            "chain_valid",
+            F.coalesce(F.sum(F.col("body_empty").cast("int")).over(before), F.lit(0)) == 0,
+        )
         if self.index_fn is None:
             # default link projection: run the extraction UDF in the SAME
             # pass that materializes the fetched index pages — link rows then
@@ -1014,214 +1012,141 @@ class Crawler:
         # lazy link projection beyond any cache eviction
         return self._materialize(fetched, "index_fetched")
 
-    def _index_oneshot_eligible(self) -> bool:
-        """Closed-form index phase for SLEEPING seeds: chain-page rounds are
-        a deterministic per-host simulation over the speculative fetch table
-        (the loop's admission ranks by (pagination_index, seed_id) with a
-        constant per-host token budget, and chain death is knowable from the
-        fetched bodies). Eligible when the corpus-replay speculative fetch
-        is allowed (not index_sequential), rounds need no commit boundary
-        (no catalog), the seen-set can't produce mid-phase stash hits (not
-        index_cached — duplicate seed_urls could hit the stash mid-phase),
-        and the sleep budget is uniform (constant tokens per host)."""
-        if self.index_sequential or self.catalog is not None or self.index_cached:
-            return False
-        if self.fetch_fn is not None:
-            return False  # same live-pacing rule as _oneshot_eligible
-        return len({s.sleep_time_between_requests for s in self.seeds}) <= 1
-
     def run_index_phase_oneshot(self, seen: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """Politeness-aware index phase in O(1) driver jobs (vs O(rounds) in
-        the sequential loop — a 53-page chain costs 53 round-trips there):
-        speculative fetch of every candidate page, then a per-host
-        ``applyInPandas`` simulation replaying the sequential loop's
-        round-by-round admission (rank next pages by (pagination_index,
+        """Closed-form index phase in O(1) driver jobs (vs O(rounds) in the
+        loop — a 53-page chain costs 53 round-trips there): one pass
+        fetches every candidate page, then each valid chain page gets the
+        round the loop would fetch it in. With unlimited tokens nothing
+        waits, so page k is fetched in round k (computed with no extra
+        job). With finite tokens a per-host ``applyInPandas`` simulation
+        replays the loop's admission (rank next pages by (pagination_index,
         seed_id), admit ``tokens``, advance or die on empty body) to assign
-        each valid page its fetch round and each wait a deferred row.
-        Bit-identical lineage/links/extraction vs the loop is pinned by
+        each valid page its round and each wait a deferred row. Identical
+        lineage/links/seen-set/extraction vs the loop is pinned by
         test_index_oneshot_matches_sequential_loop."""
         fetched = self._fetch_all_index_pages(seen)
-        sleep = next(
-            (
-                s.sleep_time_between_requests
-                for s in self.seeds
-                if s.seed_url and s.index_selector is not None
-            ),
-            0.0,
-        )
-        tokens = polite_ops.tokens_for(sleep, self.round_budget_s)
-
-        def simulate(pdf: pd.DataFrame) -> pd.DataFrame:
-            chains: dict[int, list[tuple[int, int]]] = {}
-            for sid, page_k, pag_idx in zip(
-                pdf["seed_id"], pdf["page_k"], pdf["pagination_index"]
-            ):
-                chains.setdefault(int(sid), []).append((int(page_k), int(pag_idx)))
-            for pages in chains.values():
-                pages.sort()
-            ptr = {sid: 0 for sid in chains}
-            host = pdf["host"].iloc[0] if len(pdf) else ""
-            out = []
-            rnd = 0
-            while True:
-                alive = sorted(
-                    (chains[sid][ptr[sid]][1], sid)
-                    for sid in chains
-                    if ptr[sid] < len(chains[sid])
-                )
-                if not alive:
-                    break
-                for rank, (_pag, sid) in enumerate(alive):
-                    page_k = chains[sid][ptr[sid]][0]
-                    admitted = rank < tokens
-                    out.append((host, sid, page_k, rnd, admitted))
-                    if admitted:
-                        ptr[sid] += 1
-                rnd += 1
-            return pd.DataFrame(
-                out, columns=["host", "seed_id", "page_k", "round", "admitted"]
+        valid = fetched.filter("chain_valid")
+        tokens = next(iter(self._index_tokens()), polite_ops.UNLIMITED)
+        if tokens >= polite_ops.UNLIMITED:
+            assigned = valid.withColumn("round", F.col("page_k"))
+            schedule = assigned.select(
+                "host", "round", F.lit(True).alias("admitted"), "cache_hit"
             )
-
-        valid = fetched.filter("chain_valid").select(
-            "host", "seed_id", "page_k", "pagination_index"
-        )
-        # NOT materialized: the simulation is deterministic (sorted chains,
-        # pure function of the already-materialized index_fetched parquet),
-        # so its two consumers (lineage counts, the admitted-pages join) can
-        # each re-evaluate the tiny per-host groupBy cheaper than a
-        # write+read round-trip costs
-        schedule = valid.groupBy("host").applyInPandas(
-            lambda pdf: simulate(pdf),
-            schema="host string, seed_id int, page_k int, round int, admitted boolean",
-        )
-
-        pid = F.pmod(F.hash("host"), F.lit(N_LINEAGE_BUCKETS)).cast("int")
-        rows = (
-            schedule.groupBy("admitted", "round", pid.alias("pid")).count().collect()
-        )
-        per_round: dict[int, dict[tuple[str, int], int]] = {}
-        for r in rows:
-            d = "fetched" if r["admitted"] else "deferred"
-            per_round.setdefault(r["round"], {})[(d, r["pid"])] = r["count"]
-        if per_round:
-            for rnd in sorted(per_round):
-                self._note_lineage("index", rnd, per_round[rnd])
         else:
-            # no candidate pages at all — the loop still notes an empty
-            # round 0 for its index seeds
-            self._note_lineage("index", 0, {})
 
-        sched_adm = schedule.filter("admitted").select("seed_id", "page_k", "round")
-        if self.broadcast_frontier:
-            # schedule rows ~ chain pages (+ waits): slim; broadcasting keeps
-            # the html-bearing fetch table unshuffled. Past broadcastable
-            # scale, broadcast_frontier=False falls back to a shuffle join.
-            sched_adm = F.broadcast(sched_adm)
-        assigned = fetched.join(sched_adm, ["seed_id", "page_k"], "inner")
-        valid_pages = assigned.filter(~F.col("body_empty"))
-        if self.index_fn is None:
-            links = (
-                valid_pages.select(
-                    "seed_id",
-                    F.col("round").cast("int").alias("page_round"),
-                    F.posexplode_outer("hrefs").alias("pos", "url"),
+            def simulate(pdf: pd.DataFrame) -> pd.DataFrame:
+                chains: dict[int, list[tuple[int, int]]] = {}
+                for sid, page_k, pag_idx in zip(
+                    pdf["seed_id"], pdf["page_k"], pdf["pagination_index"]
+                ):
+                    chains.setdefault(int(sid), []).append((int(page_k), int(pag_idx)))
+                for pages in chains.values():
+                    pages.sort()
+                ptr = {sid: 0 for sid in chains}
+                host = pdf["host"].iloc[0] if len(pdf) else ""
+                out = []
+                rnd = 0
+                while True:
+                    alive = sorted(
+                        (chains[sid][ptr[sid]][1], sid)
+                        for sid in chains
+                        if ptr[sid] < len(chains[sid])
+                    )
+                    if not alive:
+                        break
+                    for rank, (_pag, sid) in enumerate(alive):
+                        admitted = rank < tokens
+                        out.append((host, sid, chains[sid][ptr[sid]][0], rnd, admitted))
+                        if admitted:
+                            ptr[sid] += 1
+                    rnd += 1
+                return pd.DataFrame(
+                    out, columns=["host", "seed_id", "page_k", "round", "admitted"]
                 )
-                .filter(F.col("pos").isNotNull())
-                .select("seed_id", "page_round", "pos", "url")
+
+            # NOT materialized: the simulation is deterministic (sorted
+            # chains, pure function of the materialized index_fetched
+            # parquet), so its two consumers (lineage counts, the
+            # admitted-pages join) each re-evaluate the tiny per-host
+            # groupBy cheaper than a write+read round-trip costs
+            schedule = valid.select("host", "seed_id", "page_k", "pagination_index").groupBy(
+                "host"
+            ).applyInPandas(
+                simulate,
+                schema="host string, seed_id int, page_k int, round int, admitted boolean",
             )
-            return links, seen
-        links = self._project_links(valid_pages, F.col("round"))
-        return self._materialize(links, "links"), seen
-
-    def run_index_phase_speculative(self, seen: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """Corpus-replay index phase: ONE distributed pass, no driver loop.
-
-        The reference's pagination chain is sequential only because page k's
-        *emptiness* gates page k+1 (lib/upton.rb:295-311) — the URLs
-        themselves are predictable. Against a replay corpus (where "fetch" is
-        a join, so speculative over-read is free) we can therefore generate
-        every candidate page URL up front with ``sequence``+``explode``, join
-        ``pages`` once, and recover the chain-termination semantics with a
-        window: a page belongs to the valid prefix iff no earlier page of its
-        seed was empty. Lineage counts only the valid prefix, so the
-        politeness sleep-count goldens hold exactly. A live-HTTP deployment
-        flips ``index_sequential=True`` to avoid speculative requests."""
-        fetched = self._fetch_all_index_pages(seen)
+            sched_adm = schedule.filter("admitted").select("seed_id", "page_k", "round")
+            if self.broadcast_frontier:
+                # schedule rows ~ chain pages (+ waits): slim; broadcasting
+                # keeps the fetch table unshuffled. Past broadcastable scale,
+                # broadcast_frontier=False falls back to a shuffle join.
+                sched_adm = F.broadcast(sched_adm)
+            assigned = fetched.join(sched_adm, ["seed_id", "page_k"], "inner")
+            schedule = schedule.withColumn("cache_hit", F.lit(False))
 
         pid = F.pmod(F.hash("host"), F.lit(N_LINEAGE_BUCKETS)).cast("int")
-        decision = F.when(F.col("cache_hit"), "cache_hit").otherwise("fetched")
-        counts = {
-            (r["decision"], r["pid"]): r["count"]
-            for r in fetched.filter("chain_valid")
-            .select(decision.alias("decision"), pid.alias("pid"))
-            .groupBy("decision", "pid")
+        per_round: dict[int, dict[tuple[str, int], int]] = {}
+        for r in (
+            schedule.groupBy(_decision_col().alias("d"), "round", pid.alias("pid"))
             .count()
             .collect()
-        }
-        n_live = sum(v for (d, _), v in counts.items() if d == "fetched")
-        if self.index_cached and n_live:
+        ):
+            per_round.setdefault(r["round"], {})[(r["d"], r["pid"])] = r["count"]
+        # no candidate pages at all: the loop still notes an empty round 0
+        for rnd in sorted(per_round) or [0]:
+            if self.index_cached:
+                self._seen_count += _total(per_round.get(rnd, {}), "fetched")
+            self._note_lineage("index", rnd, per_round.get(rnd, {}))
+        if self.index_cached and any(_total(c, "fetched") for c in per_round.values()):
             seen, _ = self._mark_seen(
                 seen,
-                fetched.filter(F.col("chain_valid") & ~F.col("cache_hit")).select(
-                    F.col("fetch_url").alias("url")
+                assigned.filter(~F.col("cache_hit")).select(
+                    F.col("fetch_url").alias("url"), "round"
                 ),
-                0,
-                n_live,
+                F.col("round"),
             )
-        self._note_lineage("index", 0, counts)
-
-        valid = fetched.filter(F.col("chain_valid") & ~F.col("body_empty"))
+        links = self._project_links(assigned.filter(~F.col("body_empty")), F.col("round"))
         if self.index_fn is None:
-            links = (
-                valid.select(
-                    "seed_id",
-                    F.col("page_k").cast("int").alias("page_round"),
-                    F.posexplode_outer("hrefs").alias("pos", "url"),
-                )
-                .filter(F.col("pos").isNotNull())
-                .select("seed_id", "page_round", "pos", "url")
-            )
-            # lazy: reads the materialized index_fetched parquet; the frontier
-            # build materializes downstream
+            # lazy: reads the materialized index_fetched parquet; the
+            # frontier build materializes downstream
             return links, seen
-        links = self._project_links(valid, F.col("page_k"))
         return self._materialize(links, "links"), seen
 
-    def _project_links(self, fetched: DataFrame, page_round_col) -> DataFrame:
-        """Index pages → link rows (seed_id, page_round, pos, url); the
-        default CSS-selector href projection (lib/upton.rb:281-288, NULL
-        hrefs preserved) or the user's ``index_fn`` override."""
-        src = fetched.select(
-            "seed_id",
-            page_round_col.cast("int").alias("page_round"),
-            "seed_url",
-            F.col("fetch_url").alias("url"),
-            "html",
-            "index_selector",
-        )
+    def _project_links(self, pages: DataFrame, page_round_col) -> DataFrame:
+        """Index pages → link rows (seed_id, page_round, pos, url): the
+        user's ``index_fn`` override, else the default CSS-selector href
+        projection (lib/upton.rb:281-288, NULL hrefs preserved), read from
+        ``hrefs`` when the fetch pass already projected them."""
         if self.index_fn is not None:
+            src = pages.select(
+                "seed_id",
+                page_round_col.cast("int").alias("page_round"),
+                "seed_url",
+                F.col("fetch_url").alias("url"),
+                "html",
+                "index_selector",
+            )
             return self.index_fn(src).select("seed_id", "page_round", "pos", "url")
-        return (
-            src.withColumn(
+        if "hrefs" not in pages.columns:
+            pages = pages.withColumn(
                 "hrefs",
                 extract_links_udf(F.col("html"), F.col("index_selector"), F.col("seed_url")),
             )
-            .select("seed_id", "page_round", F.posexplode_outer("hrefs").alias("pos", "url"))
-            .filter(F.col("pos").isNotNull())
-            .select("seed_id", "page_round", "pos", "url")
-        )
+        return pages.select(
+            "seed_id",
+            page_round_col.cast("int").alias("page_round"),
+            F.posexplode_outer("hrefs").alias("pos", "url"),
+        ).filter(F.col("pos").isNotNull())
 
     def _index_candidate_urls_local(self, max_urls: int = 10_000) -> list[str] | None:
         """Driver-side replica of _index_page_candidates' URL universe (the
-        same pure urlkit functions the UDFs wrap) — usable as a pushdown IN
-        filter for the prescan. None when the candidate set is too large to
-        inline (falls back to the distributed semi-join prescan)."""
+        same pure urlkit functions the UDFs wrap) — usable as an IN probe
+        for the prescan. None when the candidate set is too large to inline
+        (falls back to the distributed semi-join prescan)."""
         from upton_spark import urlkit
 
         urls: list[str] = []
-        for s in self.seeds:
-            if not s.seed_url or s.index_selector is None:
-                continue
+        for s in self._index_seeds():
             pages_n = s.pagination_max_pages if s.paginated else 1
             if len(urls) + pages_n > max_urls:
                 return None
@@ -1242,30 +1167,26 @@ class Crawler:
         return urls
 
     def run_index_phase_sequential(self, seen: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """Fetch paginated index chains, project links. Returns (links, seen).
+        """The index round loop. Returns (links, seen).
 
         One pagination page per alive seed per round; a seed's chain stops on
         empty next-url (past max pages), next==prev (non-paginated seeds
         after round 0), or empty body (lib/upton.rb:295-311).
 
-        Each round is TWO Spark jobs (down from five): candidates (UDF chain
-        + admission), body join, and body-emptiness land in a single
-        materialized round table; one tiny groupBy over that parquet then
-        yields the lineage counts AND the alive-next-round count together.
-        Links and the next round's chain state derive lazily from the round
-        parquet. Politeness-bounded crawls are round-dominated, so per-round
-        driver job count is the wall-clock at thousands of rounds."""
-        index_seeds = self.seeds_df.filter(
-            (F.col("seed_url") != "") & F.col("index_selector").isNotNull()
-        )
+        Each round is TWO Spark jobs: candidates (UDF chain + admission),
+        body join, and body-emptiness land in a single materialized round
+        table; one tiny groupBy over that parquet then yields the lineage
+        counts AND the alive-next-round count together. Links and the next
+        round's chain state derive lazily from the round parquet.
+        Politeness-bounded crawls are round-dominated, so per-round driver
+        job count is the wall-clock at thousands of rounds."""
+        index_seeds = self._index_seeds()
         state = (
-            index_seeds.withColumn("pagination_index", F.col("pagination_start_index"))
+            self._index_seeds_df()
+            .withColumn("pagination_index", F.col("pagination_start_index"))
             .withColumn("prev_url", F.lit(None).cast("string"))
         )
-        # initial alive count is known driver-side — no state.count() job
-        alive = sum(
-            1 for s in self.seeds if s.seed_url and s.index_selector is not None
-        )
+        alive = len(index_seeds)  # known driver-side — no state.count() job
         links_parts: list[DataFrame] = []
         round_no = 0
         # runaway backstop only — the loop exits on empty state. Must cover
@@ -1274,45 +1195,16 @@ class Crawler:
         # of chain caps, not the max.
         max_rounds = 2 + sum(
             (s.pagination_max_pages * max(1, s.pagination_interval) if s.paginated else 1)
-            for s in self.seeds
-            if s.seed_url and s.index_selector is not None
+            for s in index_seeds
         )
         seed_cols = [f.name for f in schemas.SEEDS.fields]
-        # one prescan for the whole phase; broadcast-corpus flip when small
-        # (see _index_pruned_corpus for both rationales)
-        pl_index, bcast_pages = self._index_pruned_corpus()
+        # one prescan for the whole phase (see _index_pruned_corpus)
+        corpus = self._index_pruned_corpus()
         while round_no < max_rounds and alive > 0:
-            cand = state.withColumn(
-                "next_url_raw",
-                next_index_page_url_udf(
-                    F.col("seed_url"),
-                    F.col("pagination_index"),
-                    F.col("paginated"),
-                    F.col("pagination_param"),
-                    F.col("pagination_max_pages"),
-                ),
+            cand = self._with_index_page_url(state).filter(
+                F.col("prev_url").isNull() | (F.col("fetch_url") != F.col("prev_url"))
             )
-            cand = cand.filter(F.col("next_url_raw") != "")
-            cand = cand.withColumn(
-                "fetch_url", resolve_url_udf(F.col("next_url_raw"), F.col("seed_url"))
-            ).filter(F.col("prev_url").isNull() | (F.col("fetch_url") != F.col("prev_url")))
-            cand = dedup_ops.with_url_hashes(
-                cand.withColumn("host", host_col(F.col("fetch_url"))), "fetch_url"
-            )
-
-            # stash-hit check for index pages (reference @index_debug)
-            if self.index_cached:
-                seen_keys = seen.select("url_hash").distinct()
-                hits = cand.join(seen_keys, "url_hash", "left_semi").withColumn(
-                    "cache_hit", F.lit(True)
-                )
-                misses = cand.join(seen_keys, "url_hash", "left_anti").withColumn(
-                    "cache_hit", F.lit(False)
-                )
-                cand = hits.unionByName(misses)
-            else:
-                cand = cand.withColumn("cache_hit", F.lit(False))
-
+            cand = self._tag_cache_hits(cand, seen)
             # politeness: live index fetches consume tokens (the reference
             # sleeps after every live request incl. index pages).
             cand = cand.withColumn(
@@ -1322,65 +1214,24 @@ class Crawler:
                 ),
             )
             cand = polite_ops.admit_per_host(cand, order_cols=("pagination_index", "seed_id"))
-
-            # fused round table: candidates + bodies in one write. The body
-            # join covers deferred rows too (corpus replay: a join row is not
-            # a live fetch — lineage/politeness accounting is decision-based)
-            # so admitted and deferred alike read back from one parquet.
-            if self.fetch_fn is not None:
-                # live mode: ONLY admitted non-cache-hit rows (the token
-                # consumers) reach the transport; admitted cache hits read
-                # the stash; deferred rows carry a NULL body this round
-                # (unread — they re-enter admission next round). Deferred
-                # rows must NOT read the stash here: a stale stash body
-                # would feed body_empty/chain logic with content the live
-                # crawl never fetched this round.
-                is_live = F.col("admitted") & ~F.col("cache_hit")
-                deferred = cand.filter(~F.col("admitted")).withColumn(
-                    "html", F.lit(None).cast("binary")
-                )
-                fused = (
-                    self._transport_bodies(cand.filter(is_live), "fetch_url")
-                    .unionByName(
-                        self._join_bodies(
-                            cand.filter(F.col("admitted") & F.col("cache_hit")),
-                            "fetch_url",
-                        )
-                    )
-                    .unionByName(deferred)
-                )
-            elif bcast_pages:
-                fused = cand.join(
-                    F.broadcast(pl_index.withColumnRenamed("url", "fetch_url")),
-                    "fetch_url",
-                    "left",
-                )
-            else:
-                fused = self._join_bodies(cand, "fetch_url", pages_override=pl_index)
-            fused = fused.withColumn(
-                "body_empty", F.col("html").isNull() | (F.length("html") == 0)
-            )
-            fused = self._materialize(fused, "index_round")
-            decision = (
-                F.when(~F.col("admitted"), "deferred")
-                .when(F.col("cache_hit"), "cache_hit")
-                .otherwise("fetched")
+            # fused round table: candidates + bodies in one write, admitted
+            # and deferred rows alike read back from one parquet
+            fused = self._materialize(
+                self._index_bodies(cand, corpus, admitted="admitted"), "index_round"
             )
             counts, extra = self._collect_decision_counts(
-                fused, decision,
+                fused, _decision_col(),
                 extra={"__advanced": F.col("admitted") & ~F.col("body_empty")},
             )
-
-            n_live = sum(v for (d, _), v in counts.items() if d == "fetched")
-            n_deferred = sum(v for (d, _), v in counts.items() if d == "deferred")
+            n_live = _total(counts, "fetched")
             if self.index_cached and n_live:
+                self._seen_count += n_live
                 seen, _ = self._mark_seen(
                     seen,
                     fused.filter(F.col("admitted") & ~F.col("cache_hit")).select(
                         F.col("fetch_url").alias("url")
                     ),
-                    round_no,
-                    n_live,
+                    F.lit(round_no),
                 )
             if counts or round_no == 0:  # trailing empty rounds add no lineage
                 self._note_lineage("index", round_no, counts)
@@ -1404,15 +1255,12 @@ class Crawler:
                 *seed_cols, "pagination_index", "prev_url"
             )
             state = advanced.unionByName(deferred_state)
-            alive = extra["__advanced"] + n_deferred
+            alive = extra["__advanced"] + _total(counts, "deferred")
             round_no += 1
 
-        if links_parts:
-            links = links_parts[0]
-            for part in links_parts[1:]:
-                links = links.unionByName(part)
-        else:
-            links = self.spark.createDataFrame([], schema=_LINKS_SCHEMA)
+        if not links_parts:
+            links_parts = [self.spark.createDataFrame([], schema=_LINKS_SCHEMA)]
+        links = functools.reduce(DataFrame.unionByName, links_parts)
         return self._materialize(links, "links"), seen
 
     # one priority bucket past any plausible instance_index: unranked urls
@@ -1561,7 +1409,7 @@ class Crawler:
         salted = part_ops.salted_repartition(
             hashed,
             n_parts,
-            rows_per_bucket=self.frontier_rows_per_bucket,
+            rows_per_bucket=FRONTIER_ROWS_PER_BUCKET,
         )
         return self._materialize(salted, "frontier")
 
@@ -1575,12 +1423,14 @@ class Crawler:
         stop_after_round: int | None = None,
         start_round: int = 0,
     ) -> tuple[DataFrame, DataFrame]:
-        """Politeness-bounded fetch loop over queued frontier rows.
+        """Politeness-bounded fetch of the queued frontier rows: the closed
+        form when _oneshot_eligible, else the round loop.
 
-        Each round: robots gate → Bloom+anti-join dedup (cache hits free) →
-        per-host token admission → mark fetched, merge seen → snapshot
-        commit with per-host-bucket lineage. Deferred rows re-enter next
-        round. Returns (frontier, seen) with statuses resolved."""
+        Each loop round: admission setup (robots gate, Bloom+anti-join
+        dedup with free cache hits, tokens) → per-host token admission →
+        mark fetched, merge seen → snapshot commit with per-host-bucket
+        lineage. Deferred rows re-enter next round. Returns (frontier,
+        seen) with statuses resolved."""
         if self._oneshot_eligible(stop_after_round):
             return self._run_fetch_rounds_oneshot(
                 frontier, seen, phase=phase, max_rounds=max_rounds, start_round=start_round
@@ -1589,58 +1439,14 @@ class Crawler:
         rounds_done = 0
         seen_layers = 0  # lazy union layers on `seen` since its last write
         while rounds_done < max_rounds:
-            queued = frontier.filter(F.col("status") == "queued")
             # emptiness needs a driver check only on entry: later iterations
             # only continue when the previous round left deferred/retry rows
-            if rounds_done == 0 and queued.limit(1).count() == 0:
+            if (
+                rounds_done == 0
+                and frontier.filter(F.col("status") == "queued").limit(1).count() == 0
+            ):
                 break
-            # one fetch decision per distinct url; lowest-priority row wins
-            w = Window.partitionBy("url_hash").orderBy("priority", "seed_id", "instance_index")
-            cand = (
-                queued.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-            cand = self._apply_blocklist(self._get_robots_gate()(cand))
-            blocked = cand.filter(~F.col("robots_allowed"))
-            allowed_cand = cand.filter(F.col("robots_allowed"))
-
-            if self.instance_cached and self._seen_count > 0:
-                cache_hits = allowed_cand.join(
-                    seen.select("url_hash").distinct(), "url_hash", "left_semi"
-                )
-                new_urls = dedup_ops.dedup_against_seen(
-                    self.spark, allowed_cand, seen,
-                    self._bloom if self._bloom_active else None,
-                )
-            else:
-                # empty seen set (fresh crawl, round 0): the Bloom probe and
-                # both joins are identities — skip the jobs entirely
-                cache_hits = allowed_cand.limit(0)
-                new_urls = allowed_cand
-
-            new_urls = new_urls.join(
-                F.broadcast(self.seeds_df.select("seed_id", "sleep_time_between_requests")),
-                "seed_id",
-                "left",
-            )
-            delays = self._get_crawl_delays()
-            if delays is not None:
-                new_urls = (
-                    new_urls.join(F.broadcast(delays), "host", "left")
-                    .withColumn(
-                        "sleep_time_between_requests",
-                        F.greatest(
-                            F.col("sleep_time_between_requests"),
-                            F.coalesce("crawl_delay", F.lit(0.0)),
-                        ),
-                    )
-                    .drop("crawl_delay")
-                )
-            new_urls = new_urls.withColumn(
-                "host_tokens", _tokens_col(F.col("sleep_time_between_requests"), self.round_budget_s)
-            )
-            new_urls = self._cap_host_tokens(new_urls)
+            new_urls, cache_hits, blocked = self._admission_setup(frontier, seen)
             new_urls = polite_ops.admit_per_host(new_urls)
 
             # bounded retry: an admitted row whose url is still inside its
@@ -1662,35 +1468,22 @@ class Crawler:
             terminal = attempt_fails & (
                 F.col("attempts") + 1 >= F.lit(self.max_fetch_attempts)
             )
-
-            decisions = (
-                new_urls.select(
-                    "url_hash",
-                    "url",
-                    "host",
-                    F.when(~F.col("admitted"), "deferred")
-                    .when(terminal, "failed")
-                    .when(attempt_fails, "retry")
-                    .otherwise("fetched")
-                    .alias("decision"),
-                )
-                .unionByName(
-                    cache_hits.select(
-                        "url_hash", "url", "host", F.lit("cache_hit").alias("decision")
-                    )
-                )
-                .unionByName(
-                    blocked.select("url_hash", "url", "host", F.lit("blocked").alias("decision"))
-                )
+            decision = (
+                F.when(~F.col("admitted"), "deferred")
+                .when(terminal, "failed")
+                .when(attempt_fails, "retry")
+                .otherwise("fetched")
             )
-            decisions = self._materialize(decisions, "decisions")
+            decisions = self._materialize(
+                self._decision_rows(
+                    new_urls, decision, F.lit(round_no), cache_hits, blocked, round_no
+                ),
+                "decisions",
+            )
             counts, _ = self._collect_decision_counts(decisions, F.col("decision"))
-            n_admitted = sum(v for (d, _), v in counts.items() if d == "fetched")
-            n_deferred = sum(v for (d, _), v in counts.items() if d == "deferred")
-            n_retry = sum(v for (d, _), v in counts.items() if d == "retry")
-            n_failed = sum(v for (d, _), v in counts.items() if d == "failed")
+            n_admitted = _total(counts, "fetched")
 
-            ending = n_deferred == 0 and n_retry == 0
+            ending = _total(counts, "deferred") == 0 and _total(counts, "retry") == 0
             seen_delta = None
             if self.instance_cached and n_admitted:
                 # a later probe of the bloom happens only if more rounds run
@@ -1698,27 +1491,18 @@ class Crawler:
                 will_probe_again = (
                     not ending or self.next_instance_page_url_fn is not None
                 )
+                self._seen_count += n_admitted
                 seen, seen_delta = self._mark_seen(
                     seen,
-                    decisions.filter(F.col("decision") == "fetched").select("url"),
-                    round_no,
-                    n_admitted,
+                    decisions.filter(F.col("decision") == "fetched"),
+                    F.col("round"),
                     update_bloom=will_probe_again,
                     materialize=False,
                 )
+                seen_layers += 1
             self._note_lineage(phase, round_no, counts)
 
-            status_map = decisions.filter(F.col("decision") != "deferred").select(
-                "url_hash", F.col("decision").alias("new_status")
-            )
-            if not self.instance_cached:
-                status_map = status_map.withColumn(
-                    "new_status",
-                    F.when(F.col("new_status") == "cache_hit", "fetched").otherwise(
-                        F.col("new_status")
-                    ),
-                )
-            status_map = status_map.dropDuplicates(["url_hash"])
+            status_map = self._status_map(decisions.filter(F.col("decision") != "deferred"))
             frontier = self._merge_status(frontier, status_map)
 
             # delta-based rounds: the whole frontier/seen-set is rewritten
@@ -1727,8 +1511,6 @@ class Crawler:
             # broadcast-join/union layers over the last compacted parquet
             # and the catalog carries per-round deltas (politeness-bounded
             # size — never O(frontier)).
-            if seen_delta is not None:
-                seen_layers += 1
             compact = ending or (rounds_done + 1) % self.compact_every == 0
             if compact:
                 frontier = self._materialize(frontier, "frontier_round")
@@ -1740,11 +1522,11 @@ class Crawler:
                     "phase": phase,
                     "round": round_no,
                     "fetched": n_admitted,
-                    "deferred_by_politeness": n_deferred,
-                    "cache_hits": sum(v for (d, _), v in counts.items() if d == "cache_hit"),
-                    "blocked_by_robots": sum(v for (d, _), v in counts.items() if d == "blocked"),
-                    "retried": n_retry,
-                    "failed": n_failed,
+                    "deferred_by_politeness": _total(counts, "deferred"),
+                    "cache_hits": _total(counts, "cache_hit"),
+                    "blocked_by_robots": _total(counts, "blocked"),
+                    "retried": _total(counts, "retry"),
+                    "failed": _total(counts, "failed"),
                     "urls_seen": self._seen_count,
                 }
                 # rounds_done == 0 forces a FULL commit at the start of
@@ -1753,10 +1535,15 @@ class Crawler:
                 # therefore always relative to a full table from the SAME
                 # invocation — phases can never mix delta round keys
                 if compact or rounds_done == 0:
+                    tables = {"frontier": frontier, "urls_seen": seen,
+                              "lineage": self.lineage_df()}
+                    if self._uncommitted_links is not None:
+                        # the crawl's first full snapshot carries its links,
+                        # so a resume after any later kill returns them
+                        tables["links"] = self._uncommitted_links
+                        self._uncommitted_links = None
                     self.catalog.commit(
-                        round_no,
-                        {"frontier": frontier, "urls_seen": seen, "lineage": self.lineage_df()},
-                        metrics=metrics,
+                        round_no, tables, metrics=metrics,
                         drop_prefixes=("frontier_delta_r", "urls_seen_delta_r"),
                     )
                 else:
@@ -1773,71 +1560,37 @@ class Crawler:
                 break
         return frontier, seen
 
-    def _oneshot_eligible(self, stop_after_round: int | None) -> bool:
-        """The politeness round schedule is PREDICTABLE — a queued url with
-        per-host admission rank r is fetched in round (r-1) div host_tokens —
-        whenever nothing perturbs it between rounds. One distributed pass can
-        then compute every round's decisions, statuses, per-round lineage,
-        and the seen-set, bit-identical to the loop but with O(1) driver jobs
-        instead of O(rounds): the wall-clock unlock for politeness-bounded
-        crawls (round-dominated by construction). Requirements:
-
-        * no injected fetch failures (retries re-enter admission and shift
-          later rows' rounds),
-        * no catalog (the per-round delta-commit contract wants a commit
-          boundary per round; resumability keeps the loop),
-        * no kill-simulation (stop_after_round targets the loop),
-        * a uniform seed sleep budget: with one sleep across seeds, every
-          row on a host shares host_tokens (robots Crawl-delay maxes in
-          per-host, so it stays uniform), making the closed form exact.
-          Heterogeneous budgets make admission rank interleaving
-          state-dependent -> loop.
-        Equivalence is pinned by test_oneshot_matches_loop_*."""
-        if self.fetch_failures is not None or self.catalog is not None:
-            return False
-        if stop_after_round is not None:
-            return False
-        # a live transport must fetch round-by-round under the real
-        # politeness pacing — the closed form would issue every round's
-        # fetches in one wall-clock instant
-        if self.fetch_fn is not None:
-            return False
-        return len({s.sleep_time_between_requests for s in self.seeds}) <= 1
-
-    def _run_fetch_rounds_oneshot(
-        self,
-        frontier: DataFrame,
-        seen: DataFrame,
-        *,
-        phase: str,
-        max_rounds: int,
-        start_round: int,
-    ) -> tuple[DataFrame, DataFrame]:
-        """Closed-form fetch phase (see _oneshot_eligible): one decisions
-        write + one tiny counts collect, then driver-side lineage replay."""
-        queued = frontier.filter(F.col("status") == "queued")
+    def _admission_setup(
+        self, frontier: DataFrame, seen: DataFrame
+    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """(new, cache_hits, blocked) rows of the queued frontier — the
+        admission inputs the loop and the closed form share: one decision
+        per distinct url (lowest priority wins), the robots/blocklist gate,
+        the stash semi-join and the seen anti-join (Bloom-prefiltered once
+        active), then ``host_tokens`` on the new rows from the seed sleep,
+        the Crawl-delay dimension and the host budget cap."""
         w = Window.partitionBy("url_hash").orderBy("priority", "seed_id", "instance_index")
         cand = (
-            queued.withColumn("_rn", F.row_number().over(w))
+            frontier.filter(F.col("status") == "queued")
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
         cand = self._apply_blocklist(self._get_robots_gate()(cand))
         blocked = cand.filter(~F.col("robots_allowed"))
-        allowed_cand = cand.filter(F.col("robots_allowed"))
-
+        allowed = cand.filter(F.col("robots_allowed"))
         if self.instance_cached and self._seen_count > 0:
-            cache_hits = allowed_cand.join(
+            cache_hits = allowed.join(
                 seen.select("url_hash").distinct(), "url_hash", "left_semi"
             )
             new_urls = dedup_ops.dedup_against_seen(
-                self.spark, allowed_cand, seen,
-                self._bloom if self._bloom_active else None,
+                self.spark, allowed, seen, self._bloom if self._bloom_active else None
             )
         else:
-            cache_hits = allowed_cand.limit(0)
-            new_urls = allowed_cand
-
+            # empty seen set (fresh crawl, round 0): the Bloom probe and
+            # both joins are identities — skip the jobs entirely
+            cache_hits = allowed.limit(0)
+            new_urls = allowed
         new_urls = new_urls.join(
             F.broadcast(self.seeds_df.select("seed_id", "sleep_time_between_requests")),
             "seed_id",
@@ -1859,62 +1612,96 @@ class Crawler:
         new_urls = new_urls.withColumn(
             "host_tokens", _tokens_col(F.col("sleep_time_between_requests"), self.round_budget_s)
         )
-        new_urls = self._cap_host_tokens(new_urls)
-        # the loop's admit_per_host re-ranks remaining rows each round with
-        # constant per-host tokens; closed form: round = (rank-1) div tokens
-        order_cols = ("priority", "seed_id", "instance_index", "pagination_index", "url")
-        present = [c for c in order_cols if c in new_urls.columns]
-        wh = Window.partitionBy("host").orderBy(
-            *[F.col(c).asc_nulls_last() for c in present]
-        )
-        round_rel = F.floor((F.row_number().over(wh) - 1) / F.col("host_tokens"))
-        decisions = (
+        return self._cap_host_tokens(new_urls), cache_hits, blocked
+
+    @staticmethod
+    def _decision_rows(
+        new_urls: DataFrame, decision, round_col, cache_hits: DataFrame,
+        blocked: DataFrame, first_round: int,
+    ) -> DataFrame:
+        """(url_hash, url, host, decision, round) per decided url: the new
+        rows' ``decision`` in ``round_col``, stash hits and blocked rows in
+        ``first_round``."""
+        cols = ("url_hash", "url", "host")
+        return (
             new_urls.select(
-                "url_hash",
-                "url",
-                "host",
-                F.lit("fetched").alias("decision"),
-                (F.lit(start_round) + round_rel).cast("int").alias("round_assigned"),
+                *cols, decision.alias("decision"), round_col.cast("int").alias("round")
             )
             .unionByName(
                 cache_hits.select(
-                    "url_hash", "url", "host",
-                    F.lit("cache_hit").alias("decision"),
-                    F.lit(start_round).cast("int").alias("round_assigned"),
+                    *cols, F.lit("cache_hit").alias("decision"), F.lit(first_round).alias("round")
                 )
             )
             .unionByName(
                 blocked.select(
-                    "url_hash", "url", "host",
-                    F.lit("blocked").alias("decision"),
-                    F.lit(start_round).cast("int").alias("round_assigned"),
+                    *cols, F.lit("blocked").alias("decision"), F.lit(first_round).alias("round")
                 )
             )
         )
-        # persist + counts-collect fuses the oneshot's pin and its lineage
-        # aggregation into ONE job (the loop's parquet write+read round trip
-        # is for unbounded round iteration; the oneshot is a single pass, so
-        # a cached plan never grows). Later consumers (status_map, seen)
-        # read the cached rows. Single-slot per session: the previous
-        # oneshot crawl's pin is released here (its result DataFrames stay
-        # correct — they recompute from pinned parquet inputs if re-acted
-        # on), so repeated crawls never accumulate dead cache blocks.
-        app_id = self.spark.sparkContext.applicationId
-        for k in list(_ONESHOT_DECISIONS_PIN):
-            old = _ONESHOT_DECISIONS_PIN.pop(k)
-            if k == app_id:
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass  # a pin from a stopped session has nothing to free
-        decisions = decisions.persist()
-        _ONESHOT_DECISIONS_PIN[app_id] = decisions
-        pid = F.pmod(F.hash("host"), F.lit(N_LINEAGE_BUCKETS)).cast("int")
-        rows = (
-            decisions.groupBy("decision", "round_assigned", pid.alias("pid"))
-            .count()
-            .collect()
+
+    def _status_map(self, decided: DataFrame) -> DataFrame:
+        """(url_hash, new_status) for _merge_status; without instance_cached
+        a stash hit counts as an ordinary fetch."""
+        status = F.col("decision")
+        if not self.instance_cached:
+            status = F.when(status == "cache_hit", "fetched").otherwise(status)
+        return decided.select("url_hash", status.alias("new_status")).dropDuplicates(
+            ["url_hash"]
         )
+
+    def _oneshot_eligible(self, stop_after_round: int | None) -> bool:
+        """The politeness round schedule is PREDICTABLE — a queued url with
+        per-host admission rank r is fetched in round (r-1) div host_tokens
+        (politeness.schedule_per_host) — whenever nothing perturbs it
+        between rounds. One distributed pass can then compute every round's
+        decisions, statuses, per-round lineage, and the seen-set,
+        bit-identical to the loop but with O(1) driver jobs instead of
+        O(rounds): the wall-clock unlock for politeness-bounded crawls
+        (round-dominated by construction). Requirements:
+
+        * no injected fetch failures (retries re-enter admission and shift
+          later rows' rounds),
+        * no catalog (the per-round delta-commit contract wants a commit
+          boundary per round; resumability keeps the loop),
+        * no kill-simulation (stop_after_round targets the loop),
+        * no live transport (it must fetch round-by-round under the real
+          politeness pacing, not every round's fetches in one instant),
+        * a uniform seed sleep budget: with one sleep across seeds, every
+          row on a host shares host_tokens (robots Crawl-delay maxes in
+          per-host, so it stays uniform), making the closed form exact.
+          Heterogeneous budgets make admission rank interleaving
+          state-dependent -> loop.
+        Equivalence is pinned by test_oneshot_matches_loop_*."""
+        if self.fetch_failures is not None or self.catalog is not None:
+            return False
+        if stop_after_round is not None or self.fetch_fn is not None:
+            return False
+        return len({s.sleep_time_between_requests for s in self.seeds}) <= 1
+
+    def _run_fetch_rounds_oneshot(
+        self,
+        frontier: DataFrame,
+        seen: DataFrame,
+        *,
+        phase: str,
+        max_rounds: int,
+        start_round: int,
+    ) -> tuple[DataFrame, DataFrame]:
+        """Closed-form fetch phase (see _oneshot_eligible): one decisions
+        write + one tiny counts collect, then driver-side lineage replay."""
+        new_urls, cache_hits, blocked = self._admission_setup(frontier, seen)
+        new_urls = polite_ops.schedule_per_host(new_urls)
+        decisions = self._decision_rows(
+            new_urls, F.lit("fetched"), F.lit(start_round) + F.col("round"),
+            cache_hits, blocked, start_round,
+        )
+        # pinned in scratch parquet: the counts collect and every later
+        # consumer (status_map, seen, the returned frontier) read the written
+        # rows, and the pin lives exactly as long as the results — until
+        # close() removes the scratch dir
+        decisions = self._materialize(decisions, "decisions")
+        pid = F.pmod(F.hash("host"), F.lit(N_LINEAGE_BUCKETS)).cast("int")
+        rows = decisions.groupBy("decision", "round", pid.alias("pid")).count().collect()
         if not rows:
             return frontier, seen  # nothing queued: loop parity = no lineage
 
@@ -1926,10 +1713,10 @@ class Crawler:
         first_round_counts: dict[tuple[str, int], int] = {}
         for r in rows:
             if r["decision"] == "fetched":
-                if r["round_assigned"] >= cap:
+                if r["round"] >= cap:
                     overflow[r["pid"]] = overflow.get(r["pid"], 0) + r["count"]
                 else:
-                    by_pid = fetched_by_round.setdefault(r["round_assigned"], {})
+                    by_pid = fetched_by_round.setdefault(r["round"], {})
                     by_pid[r["pid"]] = by_pid.get(r["pid"], 0) + r["count"]
             else:
                 key = (r["decision"], r["pid"])
@@ -1961,27 +1748,13 @@ class Crawler:
                 self._seen_count += sum(fetched_by_round.get(r, {}).values())
             self._note_lineage(phase, r, per_pid)
 
-        status_map = decisions.filter(
-            (F.col("decision") != "fetched") | (F.col("round_assigned") < cap)
-        ).select("url_hash", F.col("decision").alias("new_status"))
-        if not self.instance_cached:
-            status_map = status_map.withColumn(
-                "new_status",
-                F.when(F.col("new_status") == "cache_hit", "fetched").otherwise(
-                    F.col("new_status")
-                ),
-            )
-        status_map = status_map.dropDuplicates(["url_hash"])
-        merged = self._merge_status(frontier, status_map)
+        in_cap = (F.col("decision") != "fetched") | (F.col("round") < cap)
+        merged = self._merge_status(frontier, self._status_map(decisions.filter(in_cap)))
         n_decided = sum(r["count"] for r in rows)
-        if (
-            self.catalog is not None
-            or self.next_instance_page_url_fn is not None
-            or n_decided > 20_000
-        ):
-            # later phases (delta commits, instance-pagination rounds) will
-            # re-read the frontier repeatedly, and bulk frontiers get
-            # re-evaluated by the extraction-prune probes: pin those
+        if self.next_instance_page_url_fn is not None or n_decided > 20_000:
+            # instance-pagination rounds re-read the frontier repeatedly, and
+            # bulk frontiers get re-evaluated by the extraction-prune probes:
+            # pin those
             frontier = self._materialize(merged, "frontier_round")
         else:
             # politeness-bounded crawl with nothing re-entering the loop:
@@ -1990,39 +1763,15 @@ class Crawler:
             frontier = merged
 
         if self.instance_cached and n_fetched_total:
-            seen = self._mark_seen_assigned(
+            # self._seen_count already advanced round by round above
+            seen, _ = self._mark_seen(
                 seen,
-                decisions.filter(
-                    (F.col("decision") == "fetched") & (F.col("round_assigned") < cap)
-                ),
+                decisions.filter(in_cap & (F.col("decision") == "fetched")),
+                F.col("round"),
                 update_bloom=self.next_instance_page_url_fn is not None,
+                materialize=False,
             )
         return frontier, seen
-
-    def _mark_seen_assigned(
-        self, seen: DataFrame, fetched: DataFrame, update_bloom: bool
-    ) -> DataFrame:
-        """One-shot seen merge: per-row first_round = the round the closed
-        form fetched it in (loop parity). self._seen_count was already
-        advanced round-by-round by the lineage replay — no double count."""
-        stamp = self.clock or datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
-        new_rows = dedup_ops.with_url_hashes(fetched.select("url", "round_assigned")).select(
-            "url_hash",
-            "url",
-            F.col("round_assigned").cast("int").alias("first_round"),
-            F.to_timestamp(F.lit(stamp)).alias("fetched_at"),
-        )
-        merged = seen.unionByName(new_rows)
-        if update_bloom and self._bloom_active:
-            dedup_ops.build_bloom(
-                dedup_ops.with_url_hashes(new_rows.select("url")), into=self._bloom
-            )
-        elif update_bloom and self._seen_count >= self._bloom_min_seen:
-            self._bloom_active = True
-            dedup_ops.build_bloom(
-                dedup_ops.with_url_hashes(merged.select("url")), into=self._bloom
-            )
-        return merged
 
     def _merge_status(self, frontier: DataFrame, status_map: DataFrame) -> DataFrame:
         """Apply one round's status delta (url_hash, new_status) to the
@@ -2219,10 +1968,20 @@ class Crawler:
             links, seen = self.run_index_phase(seen)
             frontier = self.build_frontier(links)
         small = small and (self._frontier_rows or 0) <= JOB_DIET_MAX_ROWS
+        self._uncommitted_links = links if self.catalog is not None else None
         with self._maybe_job_diet(small):
             frontier, seen = self.run_fetch_rounds(
                 frontier, seen, max_rounds=max_fetch_rounds, stop_after_round=stop_after_round
             )
+        return self._finish(frontier, seen, links, small)
+
+    def _finish(
+        self, frontier: DataFrame, seen: DataFrame, links: DataFrame, small: bool = False
+    ) -> CrawlResult:
+        """The end of crawl() and resume(): instance pagination (job-dieted
+        when ``small``), extraction, then the final catalog commit (links
+        only if no round committed them)."""
+        with self._maybe_job_diet(small):
             frontier = self._instance_pagination(frontier, seen)
         # project the frontier down to what extraction consumes before it
         # rides the broadcast body join — the driver-side hash relation
@@ -2231,15 +1990,13 @@ class Crawler:
         extracted = self.extract(self.attach_bodies(slim, prune_files=self._extract_prune(frontier)))
         result = CrawlResult(extracted, frontier, seen, self.lineage_df(), links)
         if self.catalog is not None:
+            tables = {"extracted": extracted, "frontier": frontier,
+                      "urls_seen": seen, "lineage": result.lineage}
+            if self._uncommitted_links is not None:
+                tables["links"] = self._uncommitted_links
+                self._uncommitted_links = None
             self.catalog.commit(
-                -1,
-                {
-                    "extracted": extracted,
-                    "frontier": frontier,
-                    "urls_seen": seen,
-                    "lineage": result.lineage,
-                    "links": links,
-                },
+                -1, tables,
                 metrics={"phase": "final", "urls_seen": self._seen_count},
                 drop_prefixes=("frontier_delta_r", "urls_seen_delta_r"),
             )
@@ -2288,25 +2045,7 @@ class Crawler:
         frontier, seen = self.run_fetch_rounds(
             frontier, seen, max_rounds=max_fetch_rounds, start_round=start_round
         )
-        frontier = self._instance_pagination(frontier, seen)
-        # project the frontier down to what extraction consumes before it
-        # rides the broadcast body join — the driver-side hash relation
-        # shrinks ~2x vs broadcasting all frontier columns
-        slim = frontier.select("url", "seed_id", "instance_index", "pagination_index", "status")
-        extracted = self.extract(self.attach_bodies(slim, prune_files=self._extract_prune(frontier)))
-        result = CrawlResult(extracted, frontier, seen, self.lineage_df(), links)
-        self.catalog.commit(
-            -1,
-            {
-                "extracted": extracted,
-                "frontier": frontier,
-                "urls_seen": seen,
-                "lineage": result.lineage,
-            },
-            metrics={"phase": "final", "urls_seen": self._seen_count},
-            drop_prefixes=("frontier_delta_r", "urls_seen_delta_r"),
-        )
-        return result
+        return self._finish(frontier, seen, links)
 
     def _instance_pagination(self, frontier: DataFrame, seen: DataFrame) -> DataFrame:
         """Optional next_instance_page_url hook (lib/upton.rb:321-334):
@@ -2362,9 +2101,8 @@ class Crawler:
         threshold keeps bulk crawls (whose frontier touches most corpus
         files anyway) from paying a useless url-column prescan. Tiny
         frontiers return the driver-collected url list itself — the prescan
-        then pushes an IN predicate to the parquet scan (row-group url stats
-        prune it) instead of streaming the whole url column through a
-        semi-join."""
+        then probes the url→file map with an IN filter instead of
+        broadcasting the frontier into a semi-join."""
         if self.pages_path is None or not self.broadcast_frontier:
             return False
         # one limit-probe job covers the common small-frontier case (the
@@ -2374,7 +2112,7 @@ class Crawler:
         if len(rows) <= 10_000:
             urls = [r["url"] for r in rows if r["url"]]
             return urls if urls else True
-        if frontier.count() > self.extract_prune_max_urls:
+        if frontier.count() > EXTRACT_PRUNE_MAX_URLS:
             return False
         return True
 
@@ -2522,7 +2260,9 @@ def _demo() -> None:  # pragma: no cover - manual verification entry
     """Run the flagship golden crawl (reference spec/upton_spec.rb:43-67)
     over the fixture corpus and print the extracted headlines."""
     from upton_spark.plans.session import get_spark
-    from upton_spark.sources.fixtures import BASE, fixture_pages
+    from upton_spark.sources.fixtures import BASE, FIXTURE_DIR, FIXTURE_LABEL, fixture_pages
+
+    print(f"fixtures: {FIXTURE_LABEL} ({FIXTURE_DIR})")
 
     spark = get_spark("upton_spark_demo", cores=8, shuffle_partitions=8)
     seeds = [

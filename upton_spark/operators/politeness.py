@@ -67,21 +67,42 @@ def adaptive_delays(
     )
 
 
+ORDER_COLS = ("priority", "seed_id", "instance_index", "pagination_index", "url")
+
+
+def _host_rank(df: DataFrame, host_col: str, order_cols: tuple[str, ...]):
+    """1-based position of each row in its host's admission order."""
+    present = [c for c in order_cols if c in df.columns]
+    w = Window.partitionBy(host_col).orderBy(*[F.col(c).asc_nulls_last() for c in present])
+    return F.row_number().over(w)
+
+
+def schedule_per_host(df: DataFrame) -> DataFrame:
+    """Closed-form politeness schedule: int ``round`` = (rank-1) div
+    ``host_tokens``, where rank is the row's 1-based position in its
+    ``host``'s ORDER_COLS order.
+
+    A round loop that admits each host's first ``tokens`` remaining rows
+    per round, with tokens constant per host and nothing entering or
+    leaving between rounds, fetches exactly these rounds — rank r waits for
+    the (r-1) div tokens full rounds ahead of it. Tokens must be >= 1."""
+    rank = _host_rank(df, "host", ORDER_COLS)
+    return df.withColumn("round", F.floor((rank - 1) / F.col("host_tokens")).cast("int"))
+
+
 def admit_per_host(
     df: DataFrame,
     tokens_col: str = "host_tokens",
     host_col: str = "host",
-    order_cols: tuple[str, ...] = ("priority", "seed_id", "instance_index", "pagination_index", "url"),
+    order_cols: tuple[str, ...] = ORDER_COLS,
 ) -> DataFrame:
-    """Split candidate fetches into admitted vs deferred by per-host rank.
+    """Split candidate fetches into admitted vs deferred by per-host rank:
+    round 0 of :func:`schedule_per_host`, i.e. rank <= tokens (a host with
+    no tokens admits nothing).
 
     Adds boolean ``admitted``. ``tokens_col`` is per-row (joined from the
     seed's sleep budget and/or robots crawl_delay) so hosts can have
     different budgets."""
-    present = [c for c in order_cols if c in df.columns]
-    w = Window.partitionBy(host_col).orderBy(*[F.col(c).asc_nulls_last() for c in present])
-    return (
-        df.withColumn("_host_rank", F.row_number().over(w))
-        .withColumn("admitted", F.col("_host_rank") <= F.col(tokens_col))
-        .drop("_host_rank")
+    return df.withColumn(
+        "admitted", _host_rank(df, host_col, order_cols) <= F.col(tokens_col)
     )

@@ -4,13 +4,20 @@ Builds the Common-Crawl-style ``pages`` DataFrame (schemas.PAGES) holding the
 nine reference fixture pages under ``http://www.example.com/...``, mirroring
 the WebMock stubs (spec/upton_spec.rb:44-53,140-153) including the paginated
 search aliases (``?p=1`` = page 1 body, ``?p=3`` = empty body — the
-pagination terminator). Fixture bytes are read from the reference's spec/data
-directory at build time; nothing is copied into the repo.
+pagination terminator).
+
+Every fixture read resolves through ``FIXTURE_DIR``: the reference checkout's
+spec/data directory when it exists, else the hand-written pages under
+``tests/fixtures/``. Those pages are written from the golden literals in
+``tests/goldens.py`` (same selectors, same extracted strings), not copied
+from the reference, so byte-identity against the reference holds only when
+``REFERENCE_FIXTURES`` is true.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -18,6 +25,13 @@ from pyspark.sql import DataFrame, SparkSession
 from upton_spark import schemas
 
 FIXTURE_DIR = "/root/reference/spec/data"
+REFERENCE_FIXTURES = os.path.isdir(FIXTURE_DIR)
+if not REFERENCE_FIXTURES:
+    FIXTURE_DIR = os.path.normpath(
+        os.path.join(os.path.dirname(__file__), os.pardir, os.pardir, "tests", "fixtures")
+    )
+# what a run's goldens were checked against, for reports and the demo
+FIXTURE_LABEL = "reference spec/data" if REFERENCE_FIXTURES else "in-repo fixtures"
 BASE = "http://www.example.com"
 
 # Deterministic capture timestamp (never wall-clock — resume/replay must be
@@ -43,6 +57,15 @@ _ALIASES = [
     (f"{BASE}/propublica_search.html?p=3", None),
     (f"{BASE}/", None),  # bare-host stub used by the politeness specs
 ]
+
+
+def fixture_paths() -> list[str]:
+    """Every fixture page under FIXTURE_DIR; raises on an empty directory so
+    a test parametrized over it fails instead of collecting zero cases."""
+    paths = sorted(glob.glob(os.path.join(FIXTURE_DIR, "*.html")))
+    if not paths:
+        raise FileNotFoundError(f"no fixture pages under {FIXTURE_DIR}")
+    return paths
 
 
 def _read(name: str) -> bytes:
