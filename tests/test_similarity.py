@@ -419,6 +419,21 @@ class TestProductQuantization:
         with pytest.raises(ValueError, match="max_sample_rows"):
             train_pq_codebooks(emb, dim=64, m=4, max_sample_rows=3)
 
+    def test_sample_smaller_than_codebook_raises(self, spark):
+        import pytest
+
+        from upton_spark.operators.similarity import train_pq_codebooks
+
+        schema = "vec_id long, embedding array<double>"
+        few = spark.createDataFrame([(i, [float(i)] * 8) for i in range(3)], schema)
+        empty = spark.createDataFrame([], schema)
+        for df in (few, empty):
+            with pytest.raises(ValueError, match="PQ training sample too small"):
+                train_pq_codebooks(df, dim=8, m=2, n_centroids=4)
+        # exactly n_centroids rows is enough
+        books = train_pq_codebooks(few, dim=8, m=2, n_centroids=3)
+        assert books.shape == (2, 3, 4)
+
 
 class TestPqAdc:
     def test_adc_matches_numpy_and_recalls_exact_neighbors(self, spark):
@@ -482,3 +497,16 @@ class TestPqAdc:
         # scoring the CODES table involves no Python and ends in TakeOrdered
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
         assert "TakeOrderedAndProject" in plan
+
+    def test_query_length_must_match_codebooks(self, spark):
+        import numpy as np
+        import pytest
+
+        from upton_spark.operators.similarity import pq_adc_topk
+
+        books = np.zeros((4, 16, 16))
+        enc = spark.createDataFrame([(0, [0, 0, 0, 0])], "vec_id long, pq_code array<int>")
+        for n in (63, 65):
+            with pytest.raises(ValueError, match="query_vec shape"):
+                pq_adc_topk(enc, books, [0.0] * n, k=1)
+        assert pq_adc_topk(enc, books, [0.0] * 64, k=1).collect()[0]["vec_id"] == 0

@@ -510,10 +510,17 @@ def train_pq_codebooks(
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
     sample = embeddings.filter(F.col(id_col) % sample_mod == 0).select(id_col, vec_col)
-    if sample.limit(max_sample_rows + 1).count() > max_sample_rows:
+    n_sample = sample.limit(max_sample_rows + 1).count()
+    if n_sample > max_sample_rows:
         raise ValueError(
             f"PQ training sample exceeds max_sample_rows={max_sample_rows}: "
             f"raise sample_mod (currently {sample_mod})"
+        )
+    if n_sample < max(1, n_centroids):
+        # fewer rows than centroids would silently train truncated codebooks
+        raise ValueError(
+            f"PQ training sample too small: {n_sample} rows for "
+            f"n_centroids={n_centroids}: lower sample_mod (currently {sample_mod})"
         )
     pdf = sample.toPandas().sort_values(id_col)
     mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
@@ -596,6 +603,12 @@ def pq_adc_topk(
     books = np.asarray(codebooks, dtype=np.float64)
     m, _kc, sub = books.shape
     q = np.asarray(query_vec, dtype=np.float64)
+    if q.shape != (m * sub,):
+        # a longer query would silently score only its first m*sub dims
+        raise ValueError(
+            f"query_vec shape {q.shape} != ({m * sub},): codebooks are "
+            f"{m} subspaces x {sub} dims"
+        )
     luts = [
         np.round(((books[s] - q[s * sub : (s + 1) * sub]) ** 2).sum(axis=1), 6)
         for s in range(m)

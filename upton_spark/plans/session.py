@@ -73,9 +73,12 @@ def get_spark(
         # while keeping waves even
         .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.ui.enabled", "false")
-        # preload pandas/numpy/engine modules into the worker daemon so
-        # forked UDF workers don't pay a per-fork import storm (see
-        # upton_spark/spark_daemon.py)
+        # the worker daemon (upton_spark/spark_daemon.py) keeps each UDF task
+        # from re-reading pyspark.zip and the spark-core jar: every task's
+        # setup_spark_files calls importlib.invalidate_caches(), which on
+        # CPython < 3.13 eagerly re-reads every zip importer's directory. It
+        # also preloads pandas/numpy/engine modules so forked workers don't
+        # pay a per-fork import storm.
         .config("spark.python.daemon.module", "upton_spark.spark_daemon")
         # single-JVM local mode: driver heap IS the executor heap. Default to
         # ~1/4 of system RAM capped at 32g (sized for 32 concurrent
