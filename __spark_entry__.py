@@ -2603,9 +2603,9 @@ def q_tfidf_keywords(spark, sf_dir):
     tfidf_topk): token explode → partial-agg (doc, term) counts →
     vocab-sized df rollup joined back → ONE per-doc window bounded by the
     doc's own vocabulary; corpus size N arrives as a broadcast 1-row
-    aggregate, never a driver action. Ranking ties break by term
-    ascending — the only mathematically-equal scores are equal (tf, df)
-    pairs, so ordering is libm-ulp-proof; score surfaces at round 6."""
+    aggregate, never a driver action. Ranking reads the score rounded to
+    6 places, then the term ascending, so scores equal up to libm's last
+    ulp order the same on any engine; score surfaces at round 6."""
     from upton_spark.operators.textops import tfidf_topk
 
     docs = _t(spark, sf_dir, "documents")
@@ -5376,7 +5376,7 @@ def oracle_sql() -> dict[str, str | None]:
             ),
             r AS (
               SELECT *, CAST(row_number() OVER (
-                       PARTITION BY doc_id ORDER BY score DESC, term
+                       PARTITION BY doc_id ORDER BY round(score, 6) DESC, term
                      ) AS BIGINT) AS rank
               FROM s
             )

@@ -8,6 +8,7 @@ file is what licenses the fast path.
 
 from __future__ import annotations
 
+import functools
 import os
 
 import pytest
@@ -72,17 +73,18 @@ def _texts_of_fixture(name: str) -> str:
     return decode_html_bytes(open(name, "rb").read())
 
 
-def _assert_equivalent(html: str):
-    base = "http://www.example.com/page.html"
-    for sel in SELECTORS:
-        fast_tree = parse_html(html, engine="fast")
-        std_tree = parse_html(html, engine="stdlib")
-        assert extract_text(html, sel) is not None  # default engine runs
-        from upton_spark.html.selector import search
+def _nodes_per_engine(html: str, sel: str):
+    from upton_spark.html.selector import search
 
-        fast_nodes = search(fast_tree, sel)
-        std_nodes = search(std_tree, sel)
-        from upton_spark.html.extract import node_set_text, text_of
+    return [search(parse_html(html, engine=e), sel) for e in ("fast", "stdlib")]
+
+
+def _assert_equivalent(html: str):
+    from upton_spark.html.extract import node_set_text, text_of
+
+    for sel in SELECTORS:
+        assert extract_text(html, sel) is not None  # default engine runs
+        fast_nodes, std_nodes = _nodes_per_engine(html, sel)
 
         assert node_set_text(fast_nodes) == node_set_text(std_nodes), (sel, html[:80])
         assert [n.get("href") for n in fast_nodes] == [n.get("href") for n in std_nodes]
@@ -95,24 +97,33 @@ def test_fixture_pages_equivalent(path):
 
 
 def test_fixture_links_and_tables_equivalent(monkeypatch):
+    """Links: both DOM engines against the SAX path extract_links takes.
+    Tables: extract_table parses with each engine in turn."""
+    from upton_spark.html import extract as extract_mod
+    from upton_spark.urlkit import resolve_url_or_none
+
     base = "http://www.example.com/propublica.html"
     html = _texts_of_fixture(os.path.join(FIXTURE_DIR, "propublica.html"))
-    monkeypatch.setenv("UPTON_SPARK_HTML_ENGINE", "fast")
-    fast_links = extract_links(html, "section#river section h1 a", base)
-    monkeypatch.setenv("UPTON_SPARK_HTML_ENGINE", "stdlib")
-    std_links = extract_links(html, "section#river section h1 a", base)
-    assert fast_links == std_links
+    fast, std = (
+        [resolve_url_or_none(n.get("href"), base) for n in nodes]
+        for nodes in _nodes_per_engine(html, "section#river section h1 a")
+    )
+    assert fast == std == extract_links(html, "section#river section h1 a", base)
+    assert fast
 
     wiki = _texts_of_fixture(os.path.join(FIXTURE_DIR, "easttimor.html"))
     xpath = (
         '//table[contains(concat(" ", normalize-space(@class), " "),'
         ' " wikitable ")][2]'
     )
-    monkeypatch.setenv("UPTON_SPARK_HTML_ENGINE", "fast")
-    fast_table = extract_table(wiki, xpath)
-    monkeypatch.setenv("UPTON_SPARK_HTML_ENGINE", "stdlib")
-    std_table = extract_table(wiki, xpath)
-    assert fast_table == std_table
+    tables = []
+    for engine in ("fast", "stdlib"):
+        monkeypatch.setattr(
+            extract_mod, "parse_html", functools.partial(parse_html, engine=engine)
+        )
+        tables.append(extract_table(wiki, xpath))
+    assert tables[0] == tables[1]
+    assert len(tables[0]) > 1
 
 
 @pytest.mark.parametrize("i", range(12))
@@ -162,14 +173,15 @@ def test_fuzzed_markup_equivalent():
     check()
 
 
-def test_list_helper_equivalent(monkeypatch):
+def test_list_helper_equivalent():
+    """Both DOM engines against the SAX path extract_list takes."""
+    from upton_spark.html.extract import text_of
+
     html = _texts_of_fixture(os.path.join(FIXTURE_DIR, "propublica.html"))
     sel = "#jamb.wNarrow #most-commented li a"
-    monkeypatch.setenv("UPTON_SPARK_HTML_ENGINE", "fast")
-    fast = extract_list(html, sel)
-    monkeypatch.setenv("UPTON_SPARK_HTML_ENGINE", "stdlib")
-    std = extract_list(html, sel)
-    assert fast == std and len(fast) > 0
+    fast, std = ([text_of(n) for n in nodes] for nodes in _nodes_per_engine(html, sel))
+    assert fast == std == extract_list(html, sel)
+    assert fast
 
 
 def test_vendored_start_tag_regexes_match_stdlib():

@@ -2,8 +2,11 @@
 politeness deferral — the engine-side contracts from the north_star that the
 reference has no direct specs for."""
 
+from urllib.parse import parse_qs, urlparse
+
 import pytest
 
+from upton_spark import schemas, urlkit
 from upton_spark.crawler import Crawler, KilledCrawl, SeedSpec
 from upton_spark.operators.robots import robots_rules_df
 from upton_spark.sources.catalog import ManifestCatalog
@@ -616,8 +619,43 @@ INDEX_GRID = {
 }
 
 
-@pytest.mark.parametrize("case", sorted(INDEX_GRID))
-def test_index_oneshot_matches_sequential_loop(spark, pages, monkeypatch, tmp_path, case):
+# case -> (index seeds' sleep, per-chain SeedSpec overrides) over the chain
+# corpus: shapes whose chain pages the closed form and the loop once
+# decided differently (a 0-started chain, interval 0, three chains on one
+# host at 1 token per round)
+CHAIN_GRID = {
+    "chain_start0": (0.0, [dict(pagination_start_index=0)]),
+    "chain_interval0": (0.0, [dict(pagination_start_index=0, pagination_interval=0,
+                                   pagination_max_pages=3)]),
+    "chain_three_start0_one_token": (30.0, [dict(pagination_start_index=0)] * 3),
+}
+CHAIN_BASE = "http://chains.example"
+
+
+@pytest.fixture(scope="module")
+def chain_pages(spark):
+    """Index pages ``list{j}.html?page=0..3``, each linking to its own item
+    page, so a crawl's links name exactly the index pages it fetched."""
+    rows = []
+    for j in range(3):
+        for n in range(4):
+            index = f'<ul><li><a class="item" href="/item/{j}/{n}.html">i</a></li></ul>'
+            rows.append((f"{CHAIN_BASE}/list{j}.html?page={n}", None, index.encode(), None, None))
+            rows.append((f"{CHAIN_BASE}/item/{j}/{n}.html", None,
+                         f"<h1>item {j} {n}</h1>".encode(), None, None))
+    return spark.createDataFrame(rows, schemas.PAGES).cache()
+
+
+def _chain_seed(j, sleep, **kw):
+    return SeedSpec(j, seed_url=f"{CHAIN_BASE}/list{j}.html", index_selector="a.item",
+                    extract_selector="h1", extract_kind="text", paginated=True,
+                    sleep_time_between_requests=sleep, **kw)
+
+
+@pytest.mark.parametrize("case", sorted(INDEX_GRID) + sorted(CHAIN_GRID))
+def test_index_oneshot_matches_sequential_loop(
+    spark, pages, chain_pages, monkeypatch, tmp_path, case
+):
     """The closed-form index schedule (one distributed pass) must reproduce
     the sequential round loop exactly — per-round lineage, link rows incl.
     page_round, seen-set incl. first_round, extraction — on the contended
@@ -625,29 +663,38 @@ def test_index_oneshot_matches_sequential_loop(spark, pages, monkeypatch, tmp_pa
     1 token/round, with stash checks, a catalog, and a url_list seed whose
     sleep differs from the index seeds'. Finite tokens with index_cached
     must keep the loop. The loop is forced through the single eligibility
-    predicate."""
-    sleep, kwargs, url_list_seed, closed_form = INDEX_GRID[case]
+    predicate. The chain cases also check that both fetch exactly the
+    pages ``urlkit.index_page_urls`` lists."""
+    if case in CHAIN_GRID:
+        sleep, chains = CHAIN_GRID[case]
+        corpus, kwargs, closed_form = chain_pages, {}, True
 
-    def seeds():
-        out = [
-            basic_seed(sleep_time_between_requests=sleep),
-            SeedSpec(
-                1,
-                seed_url=f"{BASE}/propublica_search.html",
-                index_selector=".compact-list a.title-link",
-                extract_selector="h1.article-title",
-                extract_kind="text",
-                paginated=True,
-                pagination_param="p",
-                pagination_max_pages=3,
-                sleep_time_between_requests=sleep,
-            ),
-        ]
-        if url_list_seed:
-            out.append(SeedSpec(2, url_list=[f"{BASE}/easttimor.html"],
-                                extract_selector="h1.firstHeading", extract_kind="text",
-                                sleep_time_between_requests=5.0))
-        return out
+        def seeds():
+            return [_chain_seed(j, sleep, **kw) for j, kw in enumerate(chains)]
+    else:
+        sleep, kwargs, url_list_seed, closed_form = INDEX_GRID[case]
+        corpus = pages
+
+        def seeds():
+            out = [
+                basic_seed(sleep_time_between_requests=sleep),
+                SeedSpec(
+                    1,
+                    seed_url=f"{BASE}/propublica_search.html",
+                    index_selector=".compact-list a.title-link",
+                    extract_selector="h1.article-title",
+                    extract_kind="text",
+                    paginated=True,
+                    pagination_param="p",
+                    pagination_max_pages=3,
+                    sleep_time_between_requests=sleep,
+                ),
+            ]
+            if url_list_seed:
+                out.append(SeedSpec(2, url_list=[f"{BASE}/easttimor.html"],
+                                    extract_selector="h1.firstHeading", extract_kind="text",
+                                    sleep_time_between_requests=5.0))
+            return out
 
     def run(force_loop):
         with monkeypatch.context() as m:
@@ -656,7 +703,7 @@ def test_index_oneshot_matches_sequential_loop(spark, pages, monkeypatch, tmp_pa
             kw = dict(kwargs)
             if kw.pop("catalog", False):
                 kw["catalog"] = ManifestCatalog(spark, str(tmp_path / f"cat_{force_loop}"))
-            c = Crawler(spark, pages, seeds(), round_budget_s=30.0,
+            c = Crawler(spark, corpus, seeds(), round_budget_s=30.0,
                         clock="2024-03-01 12:00:00", **kw)
             assert c._index_oneshot_eligible() is (closed_form and not force_loop)
             res = c.crawl()
@@ -668,7 +715,31 @@ def test_index_oneshot_matches_sequential_loop(spark, pages, monkeypatch, tmp_pa
                 sorted((r["url"], r["first_round"]) for r in res.urls_seen.collect()),
             )
 
-    assert run(force_loop=False) == run(force_loop=True)
+    closed = run(force_loop=False)
+    assert closed == run(force_loop=True)
+    if case in CHAIN_GRID:
+        listed = [
+            (s.seed_id, parse_qs(urlparse(u).query)["page"][0])
+            for s in seeds()
+            for u in urlkit.index_page_urls(
+                s.seed_url, paginated=True, pagination_param=s.pagination_param,
+                pagination_start_index=s.pagination_start_index,
+                pagination_interval=s.pagination_interval,
+                pagination_max_pages=s.pagination_max_pages,
+            )
+        ]
+        lineage, links = closed[1], closed[2]
+        assert sum(r[4] for r in lineage if r[0] == "index") == len(listed)
+        assert sorted((sid, url) for sid, _, _, url in links) == sorted(
+            (sid, f"{CHAIN_BASE}/item/{sid}/{n}.html") for sid, n in listed
+        )
+
+
+def test_negative_pagination_interval_rejected(spark, pages):
+    """A paginated chain stepping backwards never passes
+    pagination_max_pages, so the constructor refuses it."""
+    with pytest.raises(ValueError, match="pagination_interval -1"):
+        Crawler(spark, pages, [basic_seed(paginated=True, pagination_interval=-1)])
 
 
 def test_index_fetched_materializes_without_html(spark, pages):

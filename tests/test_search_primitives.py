@@ -88,6 +88,19 @@ class TestTfidfTopk:
         assert [r["term"] for r in by_doc[3]] == ["zebra", "apple"]
         assert all(len(v) <= 2 for v in by_doc.values())
 
+    def test_rank_reads_rounded_score(self, spark):
+        """Doc 0 has a at tf=2/df=11 and b at tf=1/df=8 over 15 docs: both
+        score ln(16/9), but the raw doubles differ in the last ulp (b's is
+        larger in Spark). The rounded score ties them, and a wins on term."""
+        from upton_spark.operators.textops import tfidf_topk
+
+        docs = [(0, "a a b")]
+        docs += [(i, "a b" if i <= 7 else "a") for i in range(1, 11)]
+        docs += [(i, "c") for i in range(11, 15)]
+        df = spark.createDataFrame(docs, "doc_id long, text string")
+        top = tfidf_topk(df, k=1).filter("doc_id = 0").collect()
+        assert [(r["term"], r["tf"], r["df"]) for r in top] == [("a", 2, 11)]
+
     def test_no_driver_action_for_corpus_size(self, spark):
         """N arrives as a broadcast 1-row aggregate: building the plan must
         not run any job (lazy end-to-end)."""
@@ -187,6 +200,9 @@ class TestCharsetSniffing:
         )
         plan = detect_charset(df)._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+        # the meta probe decodes only the sliced head, never the whole page
+        assert "cast(substring(html#" in plan
+        assert "cast(html#" not in plan
 
 
 class TestCompressionRatio:

@@ -100,6 +100,29 @@ class TestNextIndexPageUrl:
         assert got == "http://www.example.com/propublica_search.html?p=1"
 
 
+class TestIndexPageUrls:
+    SEED = "http://www.example.com/propublica_search.html"
+
+    def pages(self, **kw):
+        args = dict(paginated=True, pagination_param="p", pagination_start_index=1,
+                    pagination_interval=1, pagination_max_pages=3)
+        args.update(kw)
+        return urlkit.index_page_urls(self.SEED, **args)
+
+    def test_paginated_chain_runs_to_max_pages(self):
+        assert self.pages(pagination_start_index=0, pagination_max_pages=2) == [
+            f"{self.SEED}?p=0", f"{self.SEED}?p=1", f"{self.SEED}?p=2"
+        ]
+
+    def test_repeat_ends_chain(self):
+        assert self.pages(paginated=False) == [self.SEED]
+        assert self.pages(pagination_interval=0) == [f"{self.SEED}?p=1"]
+
+    def test_negative_interval_rejected(self):
+        with pytest.raises(ValueError, match="pagination_interval"):
+            self.pages(pagination_interval=-1)
+
+
 class TestMisc:
     def test_next_instance_page_url_default_empty(self):
         assert urlkit.next_instance_page_url("http://x/a?page=1", 2) == ""

@@ -89,6 +89,43 @@ def test_next_index_page_url_bounds(url, param, index, max_pages):
         assert dict(parse_qsl(urlparse(out).query))[param] == str(index)
 
 
+def _reference_index_pages(url, start, interval, max_pages, paginated, param):
+    """lib/upton.rb:295-311 get_index_pages, transcribed, with every fetched
+    body non-empty: next url, stop on '', resolve, stop on a repeat."""
+    pages, prev_url, index = [], None, start
+    while True:
+        next_url = urlkit.next_index_page_url(
+            url, index, paginated=paginated, pagination_param=param,
+            pagination_max_pages=max_pages,
+        )
+        if next_url == "":
+            return pages
+        next_url = urlkit.resolve_url(next_url, url)
+        if next_url == prev_url:
+            return pages
+        pages.append(next_url)
+        prev_url = next_url
+        index += interval
+
+
+@given(
+    absolute_urls(), _PARAM, st.booleans(),
+    st.integers(min_value=-3, max_value=6), st.integers(min_value=0, max_value=3),
+    st.integers(min_value=0, max_value=6),
+)
+@settings(max_examples=300, deadline=None)
+def test_index_page_urls_is_the_reference_walk(url, param, paginated, start, interval, max_pages):
+    pages = urlkit.index_page_urls(
+        url, paginated=paginated, pagination_param=param, pagination_start_index=start,
+        pagination_interval=interval, pagination_max_pages=max_pages,
+    )
+    assert pages == _reference_index_pages(url, start, interval, max_pages, paginated, param)
+    if not paginated or interval == 0:
+        assert len(pages) == (1 if not paginated or start <= max_pages else 0)
+    else:
+        assert len(pages) == max(0, (max_pages - start) // interval + 1)
+
+
 @given(absolute_urls())
 @settings(max_examples=200, deadline=None)
 def test_slug_has_no_separator_query_or_html_tail(url):

@@ -5,13 +5,13 @@ pagination → instance fetch → per-page block → flatten) as driver-side
 batch over DataFrames. Each fetch phase has exactly two implementations:
 one closed-form schedule and one stateful round loop.
 
-* **index phase** — every candidate pagination page of every index seed is
-  generated up front and fetched in one join (a chain's URLs are
-  predictable; only its END depends on bodies, lib/upton.rb:295-311, and a
-  window over the fetched bodies recovers it). The closed form then assigns
-  each page its fetch round: with unlimited tokens page k is fetched in
-  round k; with finite tokens a per-host ``applyInPandas`` simulation
-  replays the loop's admission. The loop (``run_index_phase_sequential``,
+* **index phase** — every page of every index chain
+  (``urlkit.index_page_urls``) is generated up front and fetched in one
+  join (a chain's URLs are predictable; only its END depends on bodies,
+  lib/upton.rb:295-311, and a window over the fetched bodies recovers
+  it). The closed form then assigns each page its fetch round: with
+  unlimited tokens page k is fetched in round k; with finite tokens a
+  per-host ``applyInPandas`` simulation replays the loop's admission. The loop (``run_index_phase_sequential``,
   one page per alive seed per round) runs only when the index seeds'
   tokens differ, or when tokens are finite and either a live transport
   paces real requests or ``index_cached`` can turn a later page into a
@@ -62,7 +62,7 @@ from typing import Callable
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
-from upton_spark import schemas
+from upton_spark import schemas, urlkit
 from upton_spark.functions.udfs import (
     decode_html_udf,
     extract_links_udf,
@@ -70,9 +70,8 @@ from upton_spark.functions.udfs import (
     extract_table_udf,
     extract_text_udf,
     host_col,
+    index_page_urls_udf,
     main_content_udf,
-    next_index_page_url_udf,
-    resolve_url_udf,
 )
 from upton_spark.operators import dedup as dedup_ops
 from upton_spark.operators import partitioning as part_ops
@@ -253,6 +252,10 @@ class Crawler:
                 raise ValueError(
                     f"seed {s.seed_id}: unknown extract_kind {s.extract_kind!r} "
                     f"(expected one of {sorted(known_kinds)})"
+                )
+            if s.paginated and s.pagination_interval < 0:
+                raise ValueError(
+                    f"seed {s.seed_id}: pagination_interval {s.pagination_interval} < 0 never ends"
                 )
         # corpus contract flags:
         # - assume_unique_urls: pages has one capture per url (synthetic
@@ -826,8 +829,22 @@ class Crawler:
         return [s for s in self.seeds if s.seed_url and s.index_selector is not None]
 
     def _index_seeds_df(self) -> DataFrame:
+        """Index seeds plus ``pages``: each chain's page URLs in fetch order
+        (``urlkit.index_page_urls``, the only definition of a chain)."""
         return self.seeds_df.filter(
             (F.col("seed_url") != "") & F.col("index_selector").isNotNull()
+        ).withColumn(
+            "pages",
+            index_page_urls_udf(
+                F.struct(
+                    "seed_url",
+                    "paginated",
+                    "pagination_param",
+                    "pagination_start_index",
+                    "pagination_interval",
+                    "pagination_max_pages",
+                )
+            ),
         )
 
     def _index_tokens(self) -> set[int]:
@@ -855,44 +872,25 @@ class Crawler:
         return self.fetch_fn is None and not self.index_cached
 
     @staticmethod
-    def _with_index_page_url(df: DataFrame) -> DataFrame:
-        """The index page at each row's ``pagination_index``: fetch_url,
-        host and url hashes; rows past their seed's last page drop out."""
+    def _with_index_page(df: DataFrame) -> DataFrame:
+        """pagination_index, host and url hashes of each row's chain page
+        ``page_k`` at ``fetch_url``."""
         df = df.withColumn(
-            "next_url_raw",
-            next_index_page_url_udf(
-                F.col("seed_url"),
-                F.col("pagination_index"),
-                F.col("paginated"),
-                F.col("pagination_param"),
-                F.col("pagination_max_pages"),
-            ),
-        ).filter(F.col("next_url_raw") != "")
-        df = df.withColumn(
-            "fetch_url", resolve_url_udf(F.col("next_url_raw"), F.col("seed_url"))
+            "pagination_index",
+            F.col("pagination_start_index") + F.col("page_k") * F.col("pagination_interval"),
         ).withColumn("host", host_col(F.col("fetch_url")))
         return dedup_ops.with_url_hashes(df, "fetch_url")
 
     def _index_page_candidates(self) -> DataFrame:
-        """Every candidate index-pagination page URL, generated up front —
-        the URLs of a chain are predictable (only chain TERMINATION depends
-        on fetched bodies, lib/upton.rb:295-311): the closed form fetches
-        them all in one pass, and both index phases prescan-prune the
-        corpus once with them."""
-        pages = self._index_seeds_df().withColumn(
-            "page_k",
-            F.explode(
-                F.when(
-                    F.col("paginated"),
-                    F.sequence(F.lit(0), F.col("pagination_max_pages") - 1),
-                ).otherwise(F.array(F.lit(0)))
-            ),
-        )
-        return self._with_index_page_url(
-            pages.withColumn(
-                "pagination_index",
-                F.col("pagination_start_index") + F.col("page_k") * F.col("pagination_interval"),
-            )
+        """Every page of every index chain, generated up front — the URLs
+        of a chain are predictable (only chain TERMINATION depends on
+        fetched bodies, lib/upton.rb:295-311): the closed form fetches them
+        all in one pass, and both index phases prescan-prune the corpus
+        once with them."""
+        return self._with_index_page(
+            self._index_seeds_df()
+            .select("*", F.posexplode("pages").alias("page_k", "fetch_url"))
+            .drop("pages")
         )
 
     def _tag_cache_hits(self, cand: DataFrame, seen: DataFrame) -> DataFrame:
@@ -1139,70 +1137,50 @@ class Crawler:
         ).filter(F.col("pos").isNotNull())
 
     def _index_candidate_urls_local(self, max_urls: int = 10_000) -> list[str] | None:
-        """Driver-side replica of _index_page_candidates' URL universe (the
-        same pure urlkit functions the UDFs wrap) — usable as an IN probe
-        for the prescan. None when the candidate set is too large to inline
-        (falls back to the distributed semi-join prescan)."""
-        from upton_spark import urlkit
-
+        """_index_page_candidates' URLs computed on the driver — usable as
+        an IN probe for the prescan. None when the candidate set is too
+        large to inline (falls back to the distributed semi-join prescan)."""
         urls: list[str] = []
         for s in self._index_seeds():
-            pages_n = s.pagination_max_pages if s.paginated else 1
-            if len(urls) + pages_n > max_urls:
+            urls += urlkit.index_page_urls(
+                s.seed_url,
+                paginated=s.paginated,
+                pagination_param=s.pagination_param,
+                pagination_start_index=s.pagination_start_index,
+                pagination_interval=s.pagination_interval,
+                pagination_max_pages=s.pagination_max_pages,
+            )
+            if len(urls) > max_urls:
                 return None
-            for k in range(pages_n):
-                pi = s.pagination_start_index + k * s.pagination_interval
-                raw = urlkit.next_index_page_url(
-                    s.seed_url,
-                    pi,
-                    paginated=s.paginated,
-                    pagination_param=s.pagination_param,
-                    pagination_max_pages=s.pagination_max_pages,
-                )
-                if not raw:
-                    continue
-                u = urlkit.resolve_url_or_none(raw, s.seed_url)
-                if u:
-                    urls.append(u)
         return urls
 
     def run_index_phase_sequential(self, seen: DataFrame) -> tuple[DataFrame, DataFrame]:
         """The index round loop. Returns (links, seen).
 
-        One pagination page per alive seed per round; a seed's chain stops on
-        empty next-url (past max pages), next==prev (non-paginated seeds
-        after round 0), or empty body (lib/upton.rb:295-311).
+        One page per alive chain per round: each seed carries its chain's
+        ``pages`` and the index ``page_k`` of its next page, and stops past
+        its last page or on an empty body (lib/upton.rb:295-311). Every
+        host admits at least one page per round, so the loop ends.
 
-        Each round is TWO Spark jobs: candidates (UDF chain + admission),
+        Each round is TWO Spark jobs: candidates (admission),
         body join, and body-emptiness land in a single materialized round
         table; one tiny groupBy over that parquet then yields the lineage
         counts AND the alive-next-round count together. Links and the next
         round's chain state derive lazily from the round parquet.
         Politeness-bounded crawls are round-dominated, so per-round driver
         job count is the wall-clock at thousands of rounds."""
-        index_seeds = self._index_seeds()
-        state = (
-            self._index_seeds_df()
-            .withColumn("pagination_index", F.col("pagination_start_index"))
-            .withColumn("prev_url", F.lit(None).cast("string"))
-        )
-        alive = len(index_seeds)  # known driver-side — no state.count() job
+        state = self._index_seeds_df().withColumn("page_k", F.lit(0))
+        alive = len(self._index_seeds())  # known driver-side — no state.count() job
         links_parts: list[DataFrame] = []
         round_no = 0
-        # runaway backstop only — the loop exits on empty state. Must cover
-        # host CONTENTION: seeds sharing a host serialize on tokens, so the
-        # worst case is every chain on one host at 1 token/round = the SUM
-        # of chain caps, not the max.
-        max_rounds = 2 + sum(
-            (s.pagination_max_pages * max(1, s.pagination_interval) if s.paginated else 1)
-            for s in index_seeds
-        )
-        seed_cols = [f.name for f in schemas.SEEDS.fields]
+        state_cols = [f.name for f in schemas.SEEDS.fields] + ["pages", "page_k"]
         # one prescan for the whole phase (see _index_pruned_corpus)
         corpus = self._index_pruned_corpus()
-        while round_no < max_rounds and alive > 0:
-            cand = self._with_index_page_url(state).filter(
-                F.col("prev_url").isNull() | (F.col("fetch_url") != F.col("prev_url"))
+        while alive > 0:
+            cand = self._with_index_page(
+                state.withColumn("fetch_url", F.get("pages", "page_k")).filter(
+                    F.col("fetch_url").isNotNull()
+                )
             )
             cand = self._tag_cache_hits(cand, seen)
             # politeness: live index fetches consume tokens (the reference
@@ -1241,19 +1219,16 @@ class Crawler:
                 self._project_links(fetched.filter(~F.col("body_empty")), F.lit(round_no))
             )
 
-            # advance: admitted seeds move to the next pagination index and
+            # advance: admitted seeds move to their chain's next page and
             # survive only with a non-empty body; deferred seeds retry as-is.
             # Lazy over the round parquet — exactly one filter/union layer,
-            # so the next round's UDF chain stays one parquet read deep.
+            # so the next round's plan stays one parquet read deep.
             advanced = (
                 fetched.filter(~F.col("body_empty"))
-                .withColumn("pagination_index", F.col("pagination_index") + F.col("pagination_interval"))
-                .withColumn("prev_url", F.col("fetch_url"))
-                .select(*seed_cols, "pagination_index", "prev_url")
+                .withColumn("page_k", F.col("page_k") + 1)
+                .select(*state_cols)
             )
-            deferred_state = fused.filter(~F.col("admitted")).select(
-                *seed_cols, "pagination_index", "prev_url"
-            )
+            deferred_state = fused.filter(~F.col("admitted")).select(*state_cols)
             state = advanced.unionByName(deferred_state)
             alive = extra["__advanced"] + _total(counts, "deferred")
             round_no += 1

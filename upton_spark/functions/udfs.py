@@ -83,28 +83,11 @@ def resolve_url_udf(href: pd.Series, base_url: pd.Series) -> pd.Series:
     return pd.Series([urlkit.resolve_url_or_none(h, b) for h, b in zip(href, base_url)])
 
 
-@F.pandas_udf(T.StringType())
-def next_index_page_url_udf(
-    url: pd.Series,
-    pagination_index: pd.Series,
-    paginated: pd.Series,
-    pagination_param: pd.Series,
-    pagination_max_pages: pd.Series,
-) -> pd.Series:
-    return pd.Series(
-        [
-            urlkit.next_index_page_url(
-                u,
-                int(i),
-                paginated=bool(p),
-                pagination_param=pp or "page",
-                pagination_max_pages=int(mp) if mp is not None else 2,
-            )
-            if u is not None
-            else ""
-            for u, i, p, pp, mp in zip(url, pagination_index, paginated, pagination_param, pagination_max_pages)
-        ]
-    )
+@F.pandas_udf(T.ArrayType(T.StringType()))
+def index_page_urls_udf(seed: pd.DataFrame) -> pd.Series:
+    """Each index seed's chain of page URLs: ``seed`` is a struct of
+    ``urlkit.index_page_urls``' arguments, by name."""
+    return pd.Series([urlkit.index_page_urls(**kw) for kw in seed.to_dict("records")])
 
 
 @F.pandas_udf(T.StringType())

@@ -15,7 +15,6 @@ the acceptance test (tests/test_html_goldens.py).
 
 from __future__ import annotations
 
-import os
 import re
 from html.parser import HTMLParser
 
@@ -129,15 +128,14 @@ class _TreeBuilder(HTMLParser):
             self._top().children.append(data)
 
 
-def parse_html(text: str, engine: str | None = None) -> Element:
+def parse_html(text: str, engine: str = "fast") -> Element:
     """Parse an HTML string into a DOM tree rooted at a ``#document`` node.
 
     ``engine``: "fast" (default; compiled-regex scanner feeding the same
     builder callbacks, ~3x faster at 150KB pages) or "stdlib"
     (html.parser). The fast path falls back to stdlib on any scanner
     error; both produce identical extraction output (comparative goldens
-    in tests/test_fast_html.py). Env override: UPTON_SPARK_HTML_ENGINE."""
-    engine = engine or os.environ.get("UPTON_SPARK_HTML_ENGINE", "fast")
+    in tests/test_fast_html.py)."""
     if engine == "fast":
         from upton_spark.html import fast
 

@@ -19,15 +19,10 @@ which is Nokogiri's behavior and the byte-identity contract.
 
 from __future__ import annotations
 
-import os
-
 from upton_spark.html.dom import Element, parse_html
+from upton_spark.html.sax import stream_hrefs, stream_texts
 from upton_spark.html.selector import css_select_many, search
 from upton_spark.urlkit import resolve_url_or_none
-
-
-def _streaming_enabled() -> bool:
-    return os.environ.get("UPTON_SPARK_HTML_STREAM", "1") != "0"
 
 
 def text_of(el: Element) -> str:
@@ -59,11 +54,7 @@ def extract_links(html: str, selector: str, base_url: str) -> list[str | None]:
     engine for everything else."""
     if not html:
         return []
-    hrefs: list[str | None] | None = None
-    if _streaming_enabled():
-        from upton_spark.html.sax import stream_hrefs
-
-        hrefs = stream_hrefs(html, selector)
+    hrefs = stream_hrefs(html, selector)
     if hrefs is None:
         hrefs = [el.get("href") for el in search(parse_html(html), selector)]
     return [resolve_url_or_none(h, base_url) if h is not None else None for h in hrefs]
@@ -72,24 +63,18 @@ def extract_links(html: str, selector: str, base_url: str) -> list[str | None]:
 def extract_text(html: str, selector: str) -> str:
     if not html:
         return ""
-    if _streaming_enabled():
-        from upton_spark.html.sax import stream_texts
-
-        texts = stream_texts(html, selector)
-        if texts is not None:
-            return "".join(texts)
+    texts = stream_texts(html, selector)
+    if texts is not None:
+        return "".join(texts)
     return node_set_text(search(parse_html(html), selector))
 
 
 def extract_list(html: str, selector: str) -> list[str]:
     if not html:
         return []
-    if _streaming_enabled():
-        from upton_spark.html.sax import stream_texts
-
-        texts = stream_texts(html, selector)
-        if texts is not None:
-            return texts
+    texts = stream_texts(html, selector)
+    if texts is not None:
+        return texts
     return [text_of(el) for el in search(parse_html(html), selector)]
 
 

@@ -811,13 +811,15 @@ def detect_charset(
     charset.
 
     100-TB shape: ENTIRELY whole-stage codegen — one hex(substring())
-    probe for the BOM plus one regexp_extract over the cast head (ASCII
-    meta tags survive a lenient utf-8 cast even in mislabeled single-byte
-    pages); no Python, no shuffle, runs inside the scan.
+    probe for the BOM plus one regexp_extract over the first
+    ``probe_bytes`` bytes, sliced before the cast so a page's decode cost
+    stays bounded (ASCII meta tags survive a lenient utf-8 cast even in
+    mislabeled single-byte pages); no Python, no shuffle, runs inside the
+    scan.
     """
     col = F.col(payload_col)
     hx = F.hex(F.substring(col, 1, 3))
-    head = F.lower(F.substring(col.cast("string"), 1, probe_bytes))
+    head = F.lower(F.substring(col, 1, probe_bytes).cast("string"))
     declared = F.regexp_extract(
         head, r"""<meta[^>]+charset\s*=\s*["']?\s*([a-z0-9_\-]+)""", 1
     )

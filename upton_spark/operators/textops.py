@@ -510,10 +510,11 @@ def tfidf_topk(
     signal (anchor-free document labeling, dedup explainability, topic
     mixing reports).
 
-    score = tf * ln((N+1)/(df+1)) with add-one smoothing; ranking ties
-    break by term ascending, so equal (tf, df) pairs — the only case two
-    scores can be mathematically equal — order identically on any engine
-    regardless of libm's last ulp.
+    score = tf * ln((N+1)/(df+1)) with add-one smoothing. The ranking
+    reads the score rounded to 6 places, then the term ascending: distinct
+    (tf, df) pairs can score mathematically equal (tf=2/df=11 and tf=1/df=8
+    at N=15 both give ln(16/9)), and the raw doubles then differ only in
+    libm's last ulp, which no two engines need agree on.
 
     Scale shape: token explode (linear in corpus tokens) → partial-agg
     (doc, term) counts → vocab-sized df rollup joined back on term → ONE
@@ -541,7 +542,7 @@ def tfidf_topk(
         )
     )
     w = Window.partitionBy(key_col).orderBy(
-        F.desc("score"), F.asc("term")
+        F.desc(F.round("score", 6)), F.asc("term")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))

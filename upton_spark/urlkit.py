@@ -14,6 +14,8 @@ Reference behaviors reproduced:
   paginated; past ``pagination_max_pages`` returns ``""``; otherwise the
   pagination query parameter is set (existing params keep their order, a new
   param is appended — golden ``"#{url}&current_page=2"``).
+* ``index_page_urls`` — lib/upton.rb:295-311: the pages of one index
+  chain, the ``get_index_pages`` walk without its empty-body stop.
 * ``next_instance_page_url`` — lib/upton.rb:127-129: default ``""`` (no
   instance pagination) unless the job supplies a hook.
 * ``slug`` — lib/upton.rb:348-350 (regexes copied semantically, including
@@ -101,6 +103,40 @@ def next_index_page_url(
     if pagination_index > pagination_max_pages:
         return EMPTY_STRING
     return set_query_param(url, pagination_param, pagination_index)
+
+
+def index_page_urls(
+    seed_url: str,
+    *,
+    paginated: bool,
+    pagination_param: str,
+    pagination_start_index: int,
+    pagination_interval: int,
+    pagination_max_pages: int,
+) -> list[str]:
+    """Every page of one index chain in fetch order — the reference's
+    ``get_index_pages`` walk (lib/upton.rb:295-311) without its stop on an
+    empty body, which needs the fetched pages. Page k has pagination_index
+    ``start + k * interval``; the chain ends where ``next_index_page_url``
+    returns ``""``, where the resolved URL repeats the previous page's
+    (unpaginated chains, interval 0), or at an unresolvable URL."""
+    if paginated and pagination_interval < 0:
+        raise ValueError(f"pagination_interval {pagination_interval} < 0 never ends the chain")
+    urls: list[str] = []
+    index = pagination_start_index
+    while True:
+        raw = next_index_page_url(
+            seed_url,
+            index,
+            paginated=paginated,
+            pagination_param=pagination_param,
+            pagination_max_pages=pagination_max_pages,
+        )
+        url = resolve_url_or_none(raw, seed_url) if raw else None
+        if url is None or (urls and url == urls[-1]):
+            return urls
+        urls.append(url)
+        index += pagination_interval
 
 
 def next_instance_page_url(url: str, pagination_index: int) -> str:
