@@ -3,11 +3,16 @@
 Runs (a) the frontier crawl bench on a deterministic synthetic Common-Crawl
 style corpus and (b) the headline operator queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1), on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON
-line:
+line, short enough (< 1 KB) for a log tail to hold it whole:
 
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...,
-   "frontier": {"urls": N, "seconds": s, "urls_per_sec": r}}
+  {"metric": "...", "value": <total sec>, "unit": "sec", "sf": ...,
+   "cpus": N, "protocol": "...", "detail": "<path>"}
+
+and writes the per-query timings and the frontier and politeness stats to
+the "detail" file (bench_detail.json next to this script):
+
+  {"queries": {name: sec, ...},
+   "frontier": {"urls": N, "seconds": s, "urls_per_sec": r}, ...}
 
 The crawl corpus is THE scaling-bench corpus (same hosts/ipp/page size as
 scripts/scaling_bench.py, cached at the same path), so the per-round
@@ -48,6 +53,7 @@ def _pretouch(corpus_path: str) -> None:
 #   v3 (r05+):    pretouch, >=3 frontier runs, MEDIAN as headline
 #                 (best disclosed as best_seconds) — ADVICE r04 bench.py:69
 PROTOCOL = "v3-median-headline"
+DETAIL_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_detail.json")
 
 
 def run_crawl_bench(
@@ -320,20 +326,28 @@ def main() -> None:
         total += dt
 
     sf = sf_dir.rstrip("/").split("sf")[-1]
+    with open(DETAIL_PATH, "w") as f:
+        json.dump(
+            {
+                "queries": timings,
+                "frontier": frontier_stats,
+                "politeness_rounds": politeness_stats,
+                "politeness_rounds_deep": politeness_deep,
+                "politeness_chain_deep": chain_deep,
+            },
+            f,
+            indent=1,
+        )
     print(
         json.dumps(
             {
                 "metric": "frontier throughput (URLs scheduled+extracted/sec) + headline operator suite",
                 "value": round(total, 2),
                 "unit": "sec",
-                "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "cpus": cpus,
                 "protocol": PROTOCOL,
-                "frontier": frontier_stats,
-                "politeness_rounds": politeness_stats,
-                "politeness_rounds_deep": politeness_deep,
-                "politeness_chain_deep": chain_deep,
+                "detail": DETAIL_PATH,
             }
         )
     )

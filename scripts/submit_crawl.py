@@ -34,20 +34,15 @@ def main() -> None:
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args()
 
-    # spark-submit owns master/deploy config; we only set SQL-level knobs.
-    builder = (
+    # spark-submit owns master/deploy config; we only set the engine's
+    # SQL-level settings, the same dict get_spark applies.
+    from upton_spark.plans.session import ENGINE_SQL_CONF
+
+    spark = (
         SparkSession.builder.appName("upton_spark_submit_crawl")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        .config("spark.sql.files.maxPartitionBytes", "6m")
-        .config("spark.sql.files.openCostInBytes", "1m")
-        # ~150KB html rows: the 4096-row default columnar batch is ~600MB
-        # per task in flight (see plans/session.py)
-        .config("spark.sql.parquet.columnarReaderBatchSize", "256")
+        .config(map=ENGINE_SQL_CONF)
+        .getOrCreate()
     )
-    spark = builder.getOrCreate()
     if args.shuffle_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
 

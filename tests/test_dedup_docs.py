@@ -427,10 +427,12 @@ class TestIncrementalNearDups:
         assert inc == crossing
         assert (2, 1) in inc and (4, 1) in inc  # the planted near-dups
 
-    def test_precomputed_old_bands_identical_to_inline(self, spark):
+    def test_precomputed_old_bands_identical_to_inline(self, spark, tmp_path):
         """The continuous-crawl path: passing the history's persisted
         minhash_band_table must yield bit-identical results to in-line
-        recomputation (old_bands is a pure function of the old texts)."""
+        recomputation (old_bands is a pure function of the old texts).
+        Persisted means a parquet round trip, which must keep the banding
+        parameters the call checks."""
         from upton_spark.operators.dedup_docs import (
             incremental_near_dups,
             minhash_band_table,
@@ -449,7 +451,8 @@ class TestIncrementalNearDups:
         inline = sorted(
             map(tuple, incremental_near_dups(new, old, threshold=0.5).collect())
         )
-        pre = minhash_band_table(old)
+        minhash_band_table(old).write.parquet(str(tmp_path / "bands"))
+        pre = spark.read.parquet(str(tmp_path / "bands"))
         reused = sorted(
             map(
                 tuple,
@@ -459,3 +462,27 @@ class TestIncrementalNearDups:
             )
         )
         assert inline == reused and inline
+
+    def test_old_bands_built_with_other_params_raise(self, spark):
+        """A history banded with other parameters collides on almost no
+        band, so it must be refused, as must a table with no parameters."""
+        from upton_spark.operators.dedup_docs import (
+            incremental_near_dups,
+            minhash_band_table,
+        )
+
+        df = spark.createDataFrame(
+            [(1, "alpha beta gamma delta epsilon zeta"), (2, "eta theta iota kappa")],
+            "doc_id long, text string",
+        )
+        new = df.filter("doc_id = 2")
+        old = df.filter("doc_id = 1")
+        with pytest.raises(ValueError, match="n_bands"):
+            incremental_near_dups(
+                new, old, n_bands=16, old_bands=minhash_band_table(old, n_bands=8)
+            )
+        bare = spark.createDataFrame(
+            minhash_band_table(old).collect(), "doc_id long, band int, band_hash long"
+        )
+        with pytest.raises(ValueError, match="old_bands"):
+            incremental_near_dups(new, old, old_bands=bare)

@@ -151,3 +151,23 @@ def test_frontier_overflow_restores_aqe_for_fetch(spark, pages, monkeypatch):
     assert seen == ["true"]
     # correctness unaffected by the mid-crawl regime flip
     assert result.extracted.agg(F.count("*")).collect()[0][0] == 4
+
+
+def test_warm_crawl_reuses_generated_classes(spark, pages):
+    """Spark's codegen cache holds one crawl's generated classes, so a
+    repeat of the same crawl compiles (Janino) almost nothing. At the
+    default cache size of 100 every repeat recompiled ~170 classes. A
+    warm repeat compiles 2: the driver's and the executors' copy of the
+    class that inlines the seen-set ``fetched_at`` stamp. Results are forced under the job
+    diet: with AQE on, codegen stage ids follow the order query stages
+    finish, so the same plan can name its classes differently."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    per_crawl = []
+    for _ in range(3):
+        before = compiles.getCount()
+        crawler = Crawler(spark, pages, [_seed()])
+        result = crawler.crawl()
+        with crawler.job_diet():
+            _fingerprint(result)
+        per_crawl.append(compiles.getCount() - before)
+    assert per_crawl[2] <= 4, per_crawl

@@ -773,6 +773,9 @@ def select_representatives(
     )
 
 
+_BAND_PARAMS = "minhash_band_params"
+
+
 def minhash_band_table(
     docs: DataFrame,
     key_col: str = "doc_id",
@@ -786,10 +789,14 @@ def minhash_band_table(
     persists it next to the snapshot, and feeds it to every later
     :func:`incremental_near_dups` call as ``old_bands`` instead of
     re-signing the unchanged history (the expensive per-doc shingle +
-    minhash pass) on every new shard."""
+    minhash pass) on every new shard. ``band_hash`` carries the banding
+    parameters as field metadata (it survives a parquet round trip), so
+    a persisted table built with other parameters is refused rather than
+    silently colliding on no band."""
+    params = {"n_hashes": n_hashes, "n_bands": n_bands, "shingle_k": shingle_k}
     return _band_table(
         minhash_signatures(docs, text_col, n_hashes, shingle_k), key_col, n_bands
-    )
+    ).withMetadata("band_hash", {_BAND_PARAMS: params})
 
 
 def incremental_near_dups(
@@ -826,7 +833,18 @@ def incremental_near_dups(
     is never re-signed; ``old_docs`` is then read only for the candidate
     pairs' verify texts. Omitting it recomputes the old side's bands
     in-line (fine at test scale, wasteful per shard at 10^10 pages).
+    Raises ``ValueError`` when ``old_bands`` was not built by
+    :func:`minhash_band_table` with this call's ``n_hashes``, ``n_bands``
+    and ``shingle_k``.
     """
+    if old_bands is not None:
+        params = {"n_hashes": n_hashes, "n_bands": n_bands, "shingle_k": shingle_k}
+        built = old_bands.schema["band_hash"].metadata.get(_BAND_PARAMS)
+        if built != params:
+            raise ValueError(
+                f"old_bands was built with {built}, not {params}: rebuild it with "
+                "minhash_band_table and this call's parameters"
+            )
     new_b = minhash_band_table(
         new_docs, key_col, text_col, n_hashes, n_bands, shingle_k
     ).withColumnRenamed(key_col, "new_id")

@@ -13,6 +13,43 @@ import os
 from pyspark.sql import SparkSession
 
 
+# The engine's SQL-level settings. get_spark and scripts/submit_crawl.py
+# (where spark-submit owns master and deploy config) both apply this one dict.
+ENGINE_SQL_CONF: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Pages rows carry ~10-100KB html payloads; the 10k-record default
+    # would make ~0.3-1GB Arrow batches per task and melt the heap at
+    # 32 concurrent tasks (observed: futex/GC stall, 1 core busy).
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+    # same story for the parquet vectorized reader: its default 4096-row
+    # columnar batch is ~680MB of html per task in flight — 32 concurrent
+    # tasks OOM a 32g heap. 256 rows ≈ 40MB/task at 150KB/page.
+    "spark.sql.parquet.columnarReaderBatchSize": "256",
+    # html-heavy parquet compresses 20-40x (repetitive markup): a default
+    # 128MB split decompresses to multi-GB per task and OOMs the heap at
+    # full task concurrency. Small splits ALSO kill last-wave task
+    # quantization: at 16m the bench corpus made 34 x ~7s extraction
+    # tasks, so the final wave idled 6 of 8 cores for a full task — 6m
+    # gives ~3x more, shorter tasks and near-even core packing at any
+    # level (spill-aware sizing, SURVEY.md §4).
+    "spark.sql.files.maxPartitionBytes": "6m",
+    # default 4MB open-cost forces one tiny html file per task; 1m packs
+    # ~2 of the corpus's ~2MB files per task — fewer task round-trips
+    # while keeping waves even
+    "spark.sql.files.openCostInBytes": "1m",
+    # Static: the JVM's LRU of generated classes. One crawl compiles about
+    # 130 distinct bodies on bulk_crawl, about 190 on resume_recrawl and
+    # about 180 for the fixture crawl, so the default of 100 evicts each
+    # body before the next crawl reuses it, and every crawl recompiles
+    # (Janino, then class loading and JIT) its whole working set.
+    "spark.sql.codegen.cache.maxEntries": "4000",
+}
+
+
 def _default_driver_mem() -> str:
     try:
         with open("/proc/meminfo") as f:
@@ -47,31 +84,7 @@ def get_spark(
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Pages rows carry ~10-100KB html payloads; the 10k-record default
-        # would make ~0.3-1GB Arrow batches per task and melt the heap at
-        # 32 concurrent tasks (observed: futex/GC stall, 1 core busy).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        # same story for the parquet vectorized reader: its default 4096-row
-        # columnar batch is ~680MB of html per task in flight — 32 concurrent
-        # tasks OOM a 32g heap. 256 rows ≈ 40MB/task at 150KB/page.
-        .config("spark.sql.parquet.columnarReaderBatchSize", "256")
-        # html-heavy parquet compresses 20-40x (repetitive markup): a default
-        # 128MB split decompresses to multi-GB per task and OOMs the heap at
-        # full task concurrency. Small splits ALSO kill last-wave task
-        # quantization: at 16m the bench corpus made 34 x ~7s extraction
-        # tasks, so the final wave idled 6 of 8 cores for a full task — 6m
-        # gives ~3x more, shorter tasks and near-even core packing at any
-        # level (spill-aware sizing, SURVEY.md §4).
-        .config("spark.sql.files.maxPartitionBytes", "6m")
-        # default 4MB open-cost forces one tiny html file per task; 1m packs
-        # ~2 of the corpus's ~2MB files per task — fewer task round-trips
-        # while keeping waves even
-        .config("spark.sql.files.openCostInBytes", "1m")
+        .config(map=ENGINE_SQL_CONF)
         .config("spark.ui.enabled", "false")
         # the worker daemon (upton_spark/spark_daemon.py) keeps each UDF task
         # from re-reading pyspark.zip and the spark-core jar: every task's
