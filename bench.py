@@ -92,8 +92,7 @@ def run_crawl_bench(
         # -> skip the dedup-latest window, the one full-corpus shuffle; at
         # scale the same invariant comes from Iceberg MERGE on url
         crawler = Crawler(
-            spark, pages, seeds, expected_url_capacity=1 << 21, assume_unique_urls=True,
-            pages_path=corpus_path,
+            spark, pages, seeds, assume_unique_urls=True, pages_path=corpus_path
         )
         result = crawler.crawl()
         # one action that FORCES the extraction UDF (a bare count() would let

@@ -72,9 +72,9 @@ All runs (URLs/sec): {all_runs_line}
 
 ## What closed the round-1 gap (0.75 -> here)
 
-Per-phase profiling (scripts/profile_crawl.py) attributed the round-1 miss
-to ~14-16s of per-run serial overhead and last-wave task quantization, not
-only memory bandwidth: 34 x ~7.5s extraction tasks left 6 of 8 cores idle
+Per-phase profiling (scripts/profile_crawl.py, since deleted) attributed
+the round-1 miss to ~14-16s of per-run serial overhead and last-wave task
+quantization, not only memory bandwidth: 34 x ~7.5s extraction tasks left 6 of 8 cores idle
 for the final wave, the index phase decompressed the full corpus html to
 fetch 2.4% of rows, and the fetch loop spent ~4s in driver-blocking small
 jobs. Round 2: 256-file kind-clustered corpus layout + 6m splits (~126
@@ -181,10 +181,7 @@ def run_child(cores: int) -> None:
 
     t0 = time.time()
     # one capture per url by construction -> no dedup-latest corpus shuffle
-    crawler = Crawler(
-        spark, pages, seeds, expected_url_capacity=1 << 21, assume_unique_urls=True,
-        pages_path=CORPUS,
-    )
+    crawler = Crawler(spark, pages, seeds, assume_unique_urls=True, pages_path=CORPUS)
     result = crawler.crawl()
     # force the extraction UDF: count() alone would let Catalyst prune the
     # text column and skip extraction

@@ -52,10 +52,7 @@ def main() -> None:
     pages = spark.read.parquet(args.corpus)
     seeds = synth_seeds(args.hosts, args.ipp)
     t0 = time.time()
-    crawler = Crawler(
-        spark, pages, seeds, expected_url_capacity=1 << 21, assume_unique_urls=True,
-        pages_path=args.corpus,
-    )
+    crawler = Crawler(spark, pages, seeds, assume_unique_urls=True, pages_path=args.corpus)
     result = crawler.crawl()
     # force the extraction UDF (a bare count() would let Catalyst prune the
     # text column and skip extraction entirely)

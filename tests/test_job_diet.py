@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 import upton_spark.crawler as crawler_mod
 from upton_spark.crawler import Crawler, SeedSpec
+from upton_spark.sources.catalog import ManifestCatalog
 from upton_spark.sources.fixtures import BASE, fixture_pages
 
 
@@ -153,21 +154,38 @@ def test_frontier_overflow_restores_aqe_for_fetch(spark, pages, monkeypatch):
     assert result.extracted.agg(F.count("*")).collect()[0][0] == 4
 
 
-def test_warm_crawl_reuses_generated_classes(spark, pages):
+def test_warm_crawl_reuses_generated_classes(spark, pages, tmp_path):
     """Spark's codegen cache holds one crawl's generated classes, so a
     repeat of the same crawl compiles (Janino) almost nothing. At the
     default cache size of 100 every repeat recompiled ~170 classes. A
     warm repeat compiles 2: the driver's and the executors' copy of the
     class that inlines the seen-set ``fetched_at`` stamp. Results are forced under the job
     diet: with AQE on, codegen stage ids follow the order query stages
-    finish, so the same plan can name its classes differently."""
+    finish, so the same plan can name its classes differently.
+
+    A catalog crawl runs the round loop, whose emptiness probe must not
+    name a fresh ``limit`` counter per call (``limit(1).count()`` does).
+    With the clock pinned the stamp repeats too, so a warm repeat
+    compiles nothing."""
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
-    per_crawl = []
-    for _ in range(3):
-        before = compiles.getCount()
-        crawler = Crawler(spark, pages, [_seed()])
-        result = crawler.crawl()
-        with crawler.job_diet():
-            _fingerprint(result)
-        per_crawl.append(compiles.getCount() - before)
+
+    def compiles_per_crawl(make_crawler):
+        per_crawl = []
+        for i in range(3):
+            before = compiles.getCount()
+            crawler = make_crawler(i)
+            result = crawler.crawl()
+            with crawler.job_diet():
+                _fingerprint(result)
+            per_crawl.append(compiles.getCount() - before)
+        return per_crawl
+
+    per_crawl = compiles_per_crawl(lambda i: Crawler(spark, pages, [_seed()]))
     assert per_crawl[2] <= 4, per_crawl
+    per_crawl = compiles_per_crawl(
+        lambda i: Crawler(
+            spark, pages, [_seed()], clock="2020-01-01 00:00:00",
+            catalog=ManifestCatalog(spark, str(tmp_path / f"cat{i}")),
+        )
+    )
+    assert per_crawl[2] == 0, per_crawl

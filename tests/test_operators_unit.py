@@ -1,11 +1,11 @@
-"""Unit tests for the engine-side operators: Bloom/cuckoo filters, robots
+"""Unit tests for the engine-side operators: the Bloom filter, robots
 parsing/matching, politeness token math."""
 
 import numpy as np
 import pytest
 
 from upton_spark.operators import politeness
-from upton_spark.operators.dedup import BloomFilter, CuckooFilter
+from upton_spark.operators.dedup import BloomFilter
 from upton_spark.operators.robots import allowed, parse_robots
 
 
@@ -32,26 +32,6 @@ class TestBloom:
     def test_empty(self):
         bf = BloomFilter.sized_for(10)
         assert bf.contains_hashes(np.array([], dtype=np.int64), np.array([], dtype=np.int64)).size == 0
-
-
-class TestCuckoo:
-    def test_add_contains_delete(self):
-        cf = CuckooFilter.sized_for(1000)
-        keys = [hash(f"url-{i}") for i in range(500)]
-        for k in keys:
-            assert cf.add(k)
-        assert all(cf.contains(k) for k in keys)
-        for k in keys[:100]:
-            assert cf.delete(k)
-        misses = sum(cf.contains(k) for k in keys[:100])
-        # deletions may leave a few fingerprint collisions but most are gone
-        assert misses < 10
-        assert all(cf.contains(k) for k in keys[100:])
-
-    def test_delete_absent_returns_false(self):
-        cf = CuckooFilter.sized_for(100)
-        cf.add(12345)
-        assert not cf.delete(99999999)
 
 
 class TestRobots:

@@ -77,23 +77,46 @@ def test_robots_crawl_delay_tightens_politeness(spark, pages):
     assert _texts(result) == goldens.HEADLINES
 
 
-def test_bloom_path_equivalent_when_active(spark, pages):
-    """The Bloom pre-filter activates only past a seen-set size threshold
-    (below it the exact anti-join is strictly cheaper). Forcing activation
-    must not change extraction, ordering, or the seen set — Bloom false
-    positives are confirmed away, false negatives cannot exist."""
-    ref = Crawler(
-        spark, pages, [basic_seed(sleep_time_between_requests=30.0)], round_budget_s=30.0
-    ).crawl()
-    c = Crawler(
-        spark, pages, [basic_seed(sleep_time_between_requests=30.0)], round_budget_s=30.0
+def test_large_history_seen_set_stays_one_exact_anti_join(spark, pages, tmp_path, monkeypatch):
+    """A catalog crawl over a history seen-set of 2^16 + 1 rows (past the
+    size where a Bloom pre-filter used to switch on) runs the same exact
+    seen-set joins as a small one: no Bloom is built, the known instance
+    URLs are stash hits, the others are fetched once, and the seen-set
+    grows by exactly the fetched URLs."""
+    from pyspark.sql import functions as F
+
+    from upton_spark.operators import dedup as dedup_ops
+
+    builds = []
+    orig_build = dedup_ops.build_bloom
+
+    def counting_build(*a, **kw):
+        builds.append(1)
+        return orig_build(*a, **kw)
+
+    monkeypatch.setattr(dedup_ops, "build_bloom", counting_build)
+    known = [f"{BASE}/webinar.html", f"{BASE}/prosecutor.html"]
+    n_history = (1 << 16) + 1
+    urls = spark.range(n_history - len(known)).select(
+        F.format_string(f"{BASE}/history/%d.html", "id").alias("url")
+    ).unionByName(spark.createDataFrame([(u,) for u in known], "url string"))
+    history = urls.select(
+        F.xxhash64("url").alias("url_hash"),
+        "url",
+        F.lit(0).alias("first_round"),
+        F.to_timestamp(F.lit("2020-01-01 00:00:00")).alias("fetched_at"),
     )
-    c._bloom_min_seen = 1  # activate after the first mark-seen
-    res = c.crawl()
-    assert _texts(res) == _texts(ref)
-    assert sorted(r["url"] for r in res.urls_seen.collect()) == sorted(
-        r["url"] for r in ref.urls_seen.collect()
-    )
+    cat = ManifestCatalog(spark, str(tmp_path / "cat"))
+    cat.commit(-1, {"urls_seen": history}, metrics={"phase": "history"})
+
+    result = Crawler(spark, pages, [basic_seed()], catalog=cat).crawl()
+    assert builds == []
+    assert _texts(result) == goldens.HEADLINES
+    statuses = {r["url"]: r["status"] for r in result.frontier.collect()}
+    assert {u: statuses[u] for u in known} == {u: "cache_hit" for u in known}
+    fetched = sorted(u for u, st in statuses.items() if st == "fetched")
+    assert fetched == [f"{BASE}/discussion.html", f"{BASE}/sixfacts.html"]
+    assert result.urls_seen.count() == n_history + len(fetched)
 
 
 def test_kill_and_resume_identical(spark, pages, tmp_path):

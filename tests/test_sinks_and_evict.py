@@ -134,6 +134,24 @@ def test_evict_forces_refetch(spark, pages, tmp_path):
     assert sum(r["cache_hits"] for r in rows) == 3
 
 
+def test_resume_and_evict_check_their_catalog(spark, pages, tmp_path):
+    """resume() and evict() reject a crawler without a catalog, or with an
+    empty one, by raising ValueError (an assert would vanish under -O)."""
+    seeds = [SeedSpec(0, url_list=[f"{BASE}/webinar.html"])]
+    no_catalog = Crawler(spark, pages, seeds)
+    with pytest.raises(ValueError, match="resume requires a catalog"):
+        no_catalog.resume()
+    with pytest.raises(ValueError, match="evict requires a catalog"):
+        no_catalog.evict([f"{BASE}/webinar.html"])
+    empty = Crawler(spark, pages, seeds, catalog=ManifestCatalog(spark, str(tmp_path / "cat")))
+    with pytest.raises(ValueError, match="nothing to resume"):
+        empty.resume()
+    with pytest.raises(ValueError, match="nothing to evict from"):
+        empty.evict([f"{BASE}/webinar.html"])
+    no_catalog.close()
+    empty.close()
+
+
 def test_scrape_guard_rejects_bulk_collects(spark, pages, monkeypatch):
     """scrape() mirrors the reference's list-returning API (a driver
     collect); past SCRAPE_MAX_ROWS it must raise and point at the

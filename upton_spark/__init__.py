@@ -6,8 +6,8 @@ Spark dataflow:
 
 * a **URL frontier + fetch scheduler** over an Iceberg-style table of
   Common-Crawl-style pages (``url, warc_ts, html, text, lang``),
-* **dedup** via a broadcast Bloom filter (cuckoo-filter fallback for
-  deletions) over murmur3/xxhash64-hashed canonical URLs,
+* **dedup** as an exact anti-join against the URL-seen set, keyed on
+  xxhash64-hashed canonical URLs,
 * **per-host politeness** as a token-bucket admission window
   (reference: sleep_time_between_requests, lib/upton.rb:96,220-223),
 * **CSS-selector extraction** as Arrow-vectorized pandas UDFs over the

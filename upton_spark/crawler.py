@@ -19,7 +19,7 @@ one closed-form schedule and one stateful round loop.
 * **instance phase** — frontier rows ``(seed, instance_index, url)``; fetch
   = join against the ``pages`` corpus (the corpus *is* the stash:
   lib/upton/downloader.rb:70-98 becomes an anti-join + join); dedup via
-  broadcast Bloom + exact-confirm anti-join; robots/blocklist gate;
+  one exact anti-join against the seen-set; robots/blocklist gate;
   per-host token politeness. The closed form computes every round at once
   — a url of per-host rank r is fetched in round (r-1) div tokens
   (``politeness.schedule_per_host``). The loop runs when something
@@ -41,9 +41,9 @@ exchange on ``host`` for politeness ranking — which is also the frontier's
 storage partitioning, so it amortizes; (b) the url join frontier×pages —
 sort-merge under AQE with skew-join splitting; hot hosts are additionally
 capped by politeness itself (per-host tokens bound per-host work per round).
-Selectors/config ride a broadcast seed dimension. Bloom membership runs
-JVM-hashed + numpy-vectorized; false-positive confirmation touches only the
-maybe-seen subset. Per-round decision accounting is ONE aggregation job
+Selectors/config ride a broadcast seed dimension. Seen-set membership is
+exact: the stash semi-join and the seen anti-join both key on the JVM-side
+``url_hash``. Per-round decision accounting is ONE aggregation job
 (groupBy decision × host-bucket), not N driver count() actions.
 """
 
@@ -186,6 +186,8 @@ def _csv_quote(col, sep: str):
 
 
 class Crawler:
+    _bloom_active = False  # read by perfbench; the seen-set has no Bloom layer
+
     def __init__(
         self,
         spark: SparkSession,
@@ -201,8 +203,6 @@ class Crawler:
         pages_path: str | None = None,
         next_instance_page_url_fn: Callable[[str, int], str] | None = None,
         max_instance_pages: int = 16,
-        expected_url_capacity: int = 1 << 20,
-        bloom_fpr: float = 1e-3,
         assume_unique_urls: bool = False,
         broadcast_frontier: bool = True,
         fetch_failures: DataFrame | None = None,
@@ -370,14 +370,6 @@ class Crawler:
         self.catalog = catalog
         self.next_instance_page_url_fn = next_instance_page_url_fn
         self.max_instance_pages = max_instance_pages
-        self._bloom = dedup_ops.BloomFilter.sized_for(expected_url_capacity, bloom_fpr)
-        # The Bloom pre-filter pays for itself only once the seen-set is big
-        # enough that the exact anti-join's build side hurts; below the
-        # threshold every round runs the plain anti-join (strictly cheaper:
-        # no bitmap build/broadcast jobs). On crossing it, the filter is
-        # built ONCE from the full seen-set, then maintained incrementally.
-        self._bloom_min_seen = 1 << 16
-        self._bloom_active = False
         self._lineage_rows: list[tuple] = []
         self._seen_count = 0
         self._frontier_rows: int | None = None  # set by build_frontier
@@ -743,21 +735,6 @@ class Crawler:
     def _empty_seen(self) -> DataFrame:
         return self.spark.createDataFrame([], schema=schemas.URLS_SEEN)
 
-    def _load_bloom_from(self, seen: DataFrame) -> int:
-        """Rebuild the cumulative Bloom from a persisted seen-set on resume.
-
-        Distributed: partition-local bitmaps OR-merged on the driver
-        (dedup_ops.build_bloom) — only n_partitions × bitmap-size bytes cross
-        the driver, never the seen rows themselves (a .toPandas() here would
-        pull ~10^10 hash rows through the driver at frontier scale)."""
-        n = seen.count()
-        if n >= self._bloom_min_seen:
-            self._bloom_active = True
-            dedup_ops.build_bloom(
-                dedup_ops.with_url_hashes(seen.select("url")), into=self._bloom
-            )
-        return n
-
     def _note_lineage(self, phase: str, round_no: int, per_pid: dict[tuple[str, int], int]) -> None:
         pids = sorted({pid for (_, pid) in per_pid})
         if not pids:
@@ -779,20 +756,14 @@ class Crawler:
             )
 
     def _mark_seen(
-        self, seen: DataFrame, fetched: DataFrame, round_col,
-        update_bloom: bool = True, materialize: bool = True,
+        self, seen: DataFrame, fetched: DataFrame, round_col, materialize: bool = True,
     ) -> tuple[DataFrame, DataFrame]:
         """seen ∪ fetched urls → (merged, new_rows). ``fetched`` carries
         ``url``; ``round_col`` is each row's fetch round and a url's lowest
         one becomes its first_round. Callers advance self._seen_count
-        first. The new urls merge into the cumulative Bloom via
-        distributed partial bitmaps (driver OR-merge). update_bloom may be
-        False ONLY when no later round will consult the filter — a stale
-        Bloom would produce false negatives, which (unlike false positives)
-        break the no-refetch contract. ``materialize=False`` returns the
-        lazy union (delta-based rounds: the caller compacts every
-        compact_every rounds); ``new_rows`` is the seen-set delta for
-        catalog commits."""
+        first. ``materialize=False`` returns the lazy union (delta-based
+        rounds: the caller compacts every compact_every rounds);
+        ``new_rows`` is the seen-set delta for catalog commits."""
         hashed = dedup_ops.with_url_hashes(
             fetched.groupBy("url").agg(F.min(round_col).cast("int").alias("first_round"))
         )
@@ -804,15 +775,6 @@ class Crawler:
             "url_hash", "url", "first_round", F.to_timestamp(F.lit(stamp)).alias("fetched_at")
         )
         merged = seen.unionByName(new_rows)
-        if not update_bloom:
-            return merged, new_rows
-        if self._bloom_active:
-            dedup_ops.build_bloom(hashed, into=self._bloom)
-        elif self._seen_count >= self._bloom_min_seen:
-            self._bloom_active = True
-            dedup_ops.build_bloom(
-                dedup_ops.with_url_hashes(merged.select("url")), into=self._bloom
-            )
         if not materialize:
             return merged, new_rows
         return self._materialize(merged, "urls_seen"), new_rows
@@ -1401,8 +1363,8 @@ class Crawler:
         """Politeness-bounded fetch of the queued frontier rows: the closed
         form when _oneshot_eligible, else the round loop.
 
-        Each loop round: admission setup (robots gate, Bloom+anti-join
-        dedup with free cache hits, tokens) → per-host token admission →
+        Each loop round: admission setup (robots gate, seen-set anti-join
+        with free cache hits, tokens) → per-host token admission →
         mark fetched, merge seen → snapshot commit with per-host-bucket
         lineage. Deferred rows re-enter next round. Returns (frontier,
         seen) with statuses resolved."""
@@ -1418,7 +1380,7 @@ class Crawler:
             # only continue when the previous round left deferred/retry rows
             if (
                 rounds_done == 0
-                and frontier.filter(F.col("status") == "queued").limit(1).count() == 0
+                and frontier.filter(F.col("status") == "queued").isEmpty()
             ):
                 break
             new_urls, cache_hits, blocked = self._admission_setup(frontier, seen)
@@ -1461,17 +1423,11 @@ class Crawler:
             ending = _total(counts, "deferred") == 0 and _total(counts, "retry") == 0
             seen_delta = None
             if self.instance_cached and n_admitted:
-                # a later probe of the bloom happens only if more rounds run
-                # (deferred/retry rows) or instance pagination will re-enter
-                will_probe_again = (
-                    not ending or self.next_instance_page_url_fn is not None
-                )
                 self._seen_count += n_admitted
                 seen, seen_delta = self._mark_seen(
                     seen,
                     decisions.filter(F.col("decision") == "fetched"),
                     F.col("round"),
-                    update_bloom=will_probe_again,
                     materialize=False,
                 )
                 seen_layers += 1
@@ -1541,9 +1497,9 @@ class Crawler:
         """(new, cache_hits, blocked) rows of the queued frontier — the
         admission inputs the loop and the closed form share: one decision
         per distinct url (lowest priority wins), the robots/blocklist gate,
-        the stash semi-join and the seen anti-join (Bloom-prefiltered once
-        active), then ``host_tokens`` on the new rows from the seed sleep,
-        the Crawl-delay dimension and the host budget cap."""
+        the stash semi-join and the exact seen anti-join, then
+        ``host_tokens`` on the new rows from the seed sleep, the Crawl-delay
+        dimension and the host budget cap."""
         w = Window.partitionBy("url_hash").orderBy("priority", "seed_id", "instance_index")
         cand = (
             frontier.filter(F.col("status") == "queued")
@@ -1555,15 +1511,12 @@ class Crawler:
         blocked = cand.filter(~F.col("robots_allowed"))
         allowed = cand.filter(F.col("robots_allowed"))
         if self.instance_cached and self._seen_count > 0:
-            cache_hits = allowed.join(
-                seen.select("url_hash").distinct(), "url_hash", "left_semi"
-            )
-            new_urls = dedup_ops.dedup_against_seen(
-                self.spark, allowed, seen, self._bloom if self._bloom_active else None
-            )
+            seen_keys = seen.select("url_hash").distinct()
+            cache_hits = allowed.join(seen_keys, "url_hash", "left_semi")
+            new_urls = allowed.join(seen_keys, "url_hash", "left_anti")
         else:
-            # empty seen set (fresh crawl, round 0): the Bloom probe and
-            # both joins are identities — skip the jobs entirely
+            # empty seen set (fresh crawl, round 0): both joins are
+            # identities — skip the jobs entirely
             cache_hits = allowed.limit(0)
             new_urls = allowed
         new_urls = new_urls.join(
@@ -1743,7 +1696,6 @@ class Crawler:
                 seen,
                 decisions.filter(in_cap & (F.col("decision") == "fetched")),
                 F.col("round"),
-                update_bloom=self.next_instance_page_url_fn is not None,
                 materialize=False,
             )
         return frontier, seen
@@ -1932,7 +1884,7 @@ class Crawler:
             snap = self.catalog.latest()
             if snap is not None and "urls_seen" in snap.tables:
                 seen = self._catalog_seen(snap)
-                self._seen_count = self._load_bloom_from(seen)
+                self._seen_count = seen.count()
         # small-crawl job diet (see job_diet): a bounded seed list keeps the
         # index-candidate universe bounded too (<= seeds x pagination_max_
         # pages), so the diet can start before any counting; the fetch phase
@@ -1980,15 +1932,14 @@ class Crawler:
     def evict(self, urls: list[str]) -> None:
         """Re-crawl eviction: forget URLs so the next crawl refetches them.
 
-        This is the deletion case a Bloom filter can't serve (north_star's
-        cuckoo-filter fallback — see operators.dedup.CuckooFilter): the
-        exact seen-set drops the rows via anti-join and the snapshot is
-        recommitted; the approximate layer for the next crawl is rebuilt
-        from the surviving rows (Bloom) or, in a long-lived service holding
-        the filter in memory, updated in place via CuckooFilter.delete."""
-        assert self.catalog is not None, "evict requires a catalog"
+        The seen-set is exact, so deletion is exact too: an anti-join drops
+        the rows and the snapshot is recommitted; the next crawl reads the
+        surviving rows."""
+        if self.catalog is None:
+            raise ValueError("evict requires a catalog")
         snap = self.catalog.latest()
-        assert snap is not None and "urls_seen" in snap.tables, "nothing to evict from"
+        if snap is None or "urls_seen" not in snap.tables:
+            raise ValueError("nothing to evict from")
         seen = self._catalog_seen(snap)
         gone = dedup_ops.with_url_hashes(
             self.spark.createDataFrame([(u,) for u in urls], "url string")
@@ -2005,9 +1956,11 @@ class Crawler:
         """Continue from the last committed snapshot: reload frontier/seen,
         re-run remaining fetch rounds, finish extraction. Identical ordering
         and seen-set vs an uninterrupted run (north_star resume contract)."""
-        assert self.catalog is not None, "resume requires a catalog"
+        if self.catalog is None:
+            raise ValueError("resume requires a catalog")
         snap = self.catalog.latest()
-        assert snap is not None, "nothing to resume"
+        if snap is None:
+            raise ValueError("nothing to resume")
         frontier = self._catalog_frontier(snap)
         seen = self._catalog_seen(snap)
         links = (
@@ -2015,7 +1968,7 @@ class Crawler:
             if "links" in snap.tables
             else self.spark.createDataFrame([], schema=_LINKS_SCHEMA)
         )
-        self._seen_count = self._load_bloom_from(seen)
+        self._seen_count = seen.count()
         start_round = snap.round + 1 if snap.round >= 0 else 0
         frontier, seen = self.run_fetch_rounds(
             frontier, seen, max_rounds=max_fetch_rounds, start_round=start_round
@@ -2052,7 +2005,7 @@ class Crawler:
                 .withColumn("next_url", next_page(F.col("orig_url"), F.lit(k)))
                 .filter((F.col("next_url") != "") & (F.col("next_url") != F.col("url")))
             )
-            if nxt.limit(1).count() == 0:
+            if nxt.isEmpty():
                 break
             new_rows = dedup_ops.with_url_hashes(
                 self._with_priority(

@@ -1,29 +1,17 @@
-"""URL-seen dedup — broadcast Bloom filter with exact confirm, cuckoo fallback.
+"""URL-seen helpers: the JVM-side URL hashes and a distributed Bloom build.
 
 Replaces the reference's stash-hit check ("if stashed, don't hit the server",
-lib/upton/downloader.rb:70-98) with the structure the north_star mandates for
-a 10^10-URL frontier:
+lib/upton/downloader.rb:70-98). The crawler's seen-set test is exact: a
+left-semi join finds cache hits and a left-anti join finds new URLs, both on
+``url_hash`` (``xxhash64`` of the canonical URL, computed in codegen, never in
+Python). No approximate layer sits in front of it: the crawler already
+semi-joins every allowed row against the seen-set, so a Bloom pre-test saves
+no probe and only adds a bitmap build, a broadcast and a Python UDF.
 
-1. canonical URL → two JVM-side hashes (``xxhash64``, murmur3 ``hash``) —
-   computed in codegen, never in Python;
-2. a **Bloom filter** membership pre-test (double hashing h1 + i*h2) inside a
-   vectorized numpy UDF over the broadcast bitmap;
-3. an exact **left-anti join** against the seen-set, run only on the
-   maybe-seen subset — Bloom false positives must never drop an unseen URL
-   (crawl-ordering/seen-set byte-equivalence is the correctness gate), and
-   the Bloom pre-filter keeps the anti-join's probe side tiny.
-
-Scale note (10^10 URLs): a single filter at FPR 1e-3 is ~1.4e11 bits ≈ 17 GB
-— too big to broadcast whole. The deployment shape is *partition-aligned*
-blooms: the frontier is hash-partitioned by host, so each executor only needs
-the bloom slice covering its host buckets (`n_buckets` here models that; the
-driver ships each bucket's bitmap only where it's probed, via the same
-broadcast mechanism at sandbox scale). FPR and sizing math in
-:func:`BloomFilter.sized_for`.
-
-Deletions (re-crawl eviction — e.g. forcing a page to be refetched after its
-TTL) don't exist in a Bloom filter; :class:`CuckooFilter` provides them
-(4-way buckets, 16-bit fingerprints, standard cuckoo kicking).
+:func:`with_url_hashes` also attaches murmur3 ``url_hash32``, the second hash
+of :class:`BloomFilter`'s double hashing. :func:`build_bloom` (partition-local
+numpy bitmaps OR-merged on the driver) is no longer called by the crawler; the
+benchmark's kernel microbench still times it.
 """
 
 from __future__ import annotations
@@ -32,7 +20,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 
 class BloomFilter:
@@ -124,110 +112,3 @@ def with_url_hashes(df: DataFrame, url_col: str = "url") -> DataFrame:
     return df.withColumn("url_hash", F.xxhash64(F.col(url_col))).withColumn(
         "url_hash32", F.hash(F.col(url_col))
     )
-
-
-def bloom_maybe_seen_col(spark, bloom: BloomFilter):
-    """Vectorized membership column over a broadcast bitmap."""
-    bc = spark.sparkContext.broadcast((bloom.to_bytes(), bloom.n_bits, bloom.n_hashes))
-
-    @F.pandas_udf(T.BooleanType())
-    def maybe_seen(h64: pd.Series, h32: pd.Series) -> pd.Series:
-        data, n_bits, n_hashes = bc.value
-        bf = BloomFilter.from_bytes(data, n_bits, n_hashes)
-        return pd.Series(bf.contains_hashes(h64.to_numpy(), h32.to_numpy()))
-
-    return maybe_seen
-
-
-def dedup_against_seen(
-    spark, candidates: DataFrame, seen: DataFrame, bloom: BloomFilter | None
-) -> DataFrame:
-    """Return candidate rows whose url is NOT in the seen set.
-
-    ``candidates`` and ``seen`` must both carry url_hash/url_hash32 (see
-    :func:`with_url_hashes`). With a bloom, rows testing negative skip the
-    join entirely (guaranteed unseen — no Bloom false negatives); only the
-    maybe-seen remainder is anti-joined for exactness."""
-    if bloom is None:
-        return candidates.join(seen.select("url_hash").distinct(), "url_hash", "left_anti")
-    maybe = bloom_maybe_seen_col(spark, bloom)
-    tagged = candidates.withColumn("_maybe_seen", maybe(F.col("url_hash"), F.col("url_hash32")))
-    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    suspects = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    confirmed_new = suspects.join(seen.select("url_hash").distinct(), "url_hash", "left_anti")
-    return definitely_new.unionByName(confirmed_new)
-
-
-class CuckooFilter:
-    """Cuckoo filter (Fan et al., CoNEXT'14): approximate membership *with
-    deletion*, used for re-crawl eviction where a Bloom filter can't forget.
-
-    4-slot buckets, 16-bit fingerprints, partial-key cuckoo hashing; ~95%
-    load factor at these parameters."""
-
-    SLOTS = 4
-    MAX_KICKS = 500
-
-    def __init__(self, n_buckets: int):
-        # power-of-two bucket count so alt-bucket xor stays in range
-        self.n_buckets = 1 << max(4, (n_buckets - 1).bit_length())
-        self.table = np.zeros((self.n_buckets, self.SLOTS), dtype=np.uint16)
-        self._rng_state = np.uint64(0x9E3779B97F4A7C15)
-
-    @classmethod
-    def sized_for(cls, n_items: int) -> "CuckooFilter":
-        return cls(max(16, int(n_items / (cls.SLOTS * 0.95)) + 1))
-
-    def _fingerprint(self, h64: int) -> int:
-        fp = (h64 >> 48) & 0xFFFF
-        return fp or 1  # 0 means empty slot
-
-    def _bucket1(self, h64: int) -> int:
-        return h64 & (self.n_buckets - 1)
-
-    def _bucket2(self, b1: int, fp: int) -> int:
-        # standard partial-key: i2 = i1 xor hash(fp)
-        return (b1 ^ (fp * 0x5BD1E995)) & (self.n_buckets - 1)
-
-    def _insert_at(self, bucket: int, fp: int) -> bool:
-        row = self.table[bucket]
-        for s in range(self.SLOTS):
-            if row[s] == 0:
-                row[s] = fp
-                return True
-        return False
-
-    def add(self, h64: int) -> bool:
-        h64 &= (1 << 64) - 1
-        fp = self._fingerprint(h64)
-        b1 = self._bucket1(h64)
-        b2 = self._bucket2(b1, fp)
-        if self._insert_at(b1, fp) or self._insert_at(b2, fp):
-            return True
-        # kick
-        bucket = b1 if (h64 & 1) else b2
-        for kick in range(self.MAX_KICKS):
-            slot = (h64 >> (kick % 32)) % self.SLOTS
-            fp, self.table[bucket][slot] = int(self.table[bucket][slot]), fp
-            bucket = self._bucket2(bucket, fp)
-            if self._insert_at(bucket, fp):
-                return True
-        return False  # table effectively full
-
-    def contains(self, h64: int) -> bool:
-        h64 &= (1 << 64) - 1
-        fp = self._fingerprint(h64)
-        b1 = self._bucket1(h64)
-        b2 = self._bucket2(b1, fp)
-        return bool((self.table[b1] == fp).any() or (self.table[b2] == fp).any())
-
-    def delete(self, h64: int) -> bool:
-        h64 &= (1 << 64) - 1
-        fp = self._fingerprint(h64)
-        for bucket in (self._bucket1(h64), self._bucket2(self._bucket1(h64), fp)):
-            row = self.table[bucket]
-            hit = np.nonzero(row == fp)[0]
-            if len(hit):
-                row[hit[0]] = 0
-                return True
-        return False

@@ -318,7 +318,7 @@ def duplicate_components(
     shuffles; iterations needed = graph diameter in label-hops (near-dup
     components are small and dense, so single digits even at corpus scale —
     this is the standard large-graph CC recipe absent GraphFrames).
-    Convergence is detected with one small count per iteration; plans stay
+    Convergence is detected with one emptiness probe per iteration; plans stay
     shallow because each round's labels are just (node, label) pairs.
 
     Returns (doc_id, component) where component = min doc_id reachable —
@@ -337,19 +337,16 @@ def duplicate_components(
     labels = (
         edges.select(F.col("x").alias("node")).distinct().withColumn("label", F.col("node"))
     )
-    def _improvable(lbls: DataFrame) -> int:
-        """1 if another propagation pass would still lower some label."""
+    def _improvable(lbls: DataFrame) -> bool:
+        """Whether another propagation pass would still lower some label."""
         neighbor_min = (
             edges.join(lbls, edges.y == lbls.node)
             .groupBy("x")
             .agg(F.min("label").alias("nlabel"))
             .withColumnRenamed("x", "node")
         )
-        return (
-            lbls.join(neighbor_min, "node")
-            .filter(F.col("nlabel") < F.col("label"))
-            .limit(1)
-            .count()
+        return not (
+            lbls.join(neighbor_min, "node").filter(F.col("nlabel") < F.col("label")).isEmpty()
         )
 
     changed = None
@@ -369,9 +366,9 @@ def duplicate_components(
             )
             .localCheckpoint()
         )
-        changed = new_labels.filter("_chg").limit(1).count()
+        changed = not new_labels.filter("_chg").isEmpty()
         labels = new_labels.drop("_chg")
-        if changed == 0:
+        if not changed:
             break
     # Convergence must be PROVEN, never assumed: if the loop's last pass
     # still changed labels (or never ran, max_iters=0), one extra probe
@@ -381,7 +378,7 @@ def duplicate_components(
     # doc per component" would under-dedup with no signal); label-hop
     # diameter of near-dup components is single digits, so an actual raise
     # means a pathological graph or a lowered max_iters.
-    if (changed is None or changed != 0) and _improvable(labels) != 0:
+    if (changed is None or changed) and _improvable(labels):
         raise RuntimeError(
             f"duplicate_components did not converge within max_iters={max_iters}; "
             "labels are partially propagated — raise max_iters"
