@@ -133,6 +133,22 @@ class TestPoliteness:
         assert politeness.tokens_for(30, 60) == 2
         assert politeness.tokens_for(120, 60) == 1  # min one: chains progress
 
+    def test_tokens_column_matches_tokens_for(self, spark):
+        """Admission's Column form and the closed-form eligibility check's
+        scalar form are one rule."""
+        from pyspark.sql import functions as F
+
+        sleeps = [None, -1.0, 0.0, 0.5, 7.0, 30.0, 61.0]
+        df = spark.createDataFrame([(s,) for s in sleeps], "sleep double")
+        for budget in (30.0, 60.0):
+            got = [
+                r["t"]
+                for r in df.select(
+                    politeness.tokens_for_col(F.col("sleep"), budget).alias("t")
+                ).collect()
+            ]
+            assert got == [politeness.tokens_for(s, budget) for s in sleeps], budget
+
 
 class TestPiiScrub:
     def test_redaction_and_counts(self, spark):

@@ -188,13 +188,13 @@ def test_pruned_pages_requires_raw_scan(spark, tmp_path):
     )
 
     ok = Crawler(spark, raw, seeds, pages_path=path)
-    assert ok._pruned_pages(keys, "url") is not None
+    assert ok._pruned_corpus(keys, 1) is not None
 
     filtered = Crawler(
         spark, raw.filter(F.col("url") != "http://www.example.com/webinar.html"),
         seeds, pages_path=path,
     )
-    assert filtered._pruned_pages(keys, "url") is None
+    assert filtered._pruned_corpus(keys, 1) is None
 
 
 def test_codegen_covers_quality_stats(spark, sf_dir):
@@ -231,10 +231,10 @@ def test_extract_builds_only_present_kind_branches(spark):
 
 
 def test_prescan_probes_url_file_map(spark, tmp_path):
-    """The first prescan of a corpus builds its cached url→file map and
-    every prescan probes that map, never the corpus scan: a driver-known
-    candidate list filters it, other candidates semi-join it, and both give
-    the same matched-file list, a strict subset of the corpus files."""
+    """The first corpus prune builds its cached url→file map and every
+    prune probes that map, never the corpus scan: a driver-known candidate
+    list filters it, other candidates semi-join it, and both read the same
+    matched files, a strict subset of the corpus files."""
     from pyspark.sql import functions as F
 
     from upton_spark.crawler import Crawler, SeedSpec
@@ -252,16 +252,17 @@ def test_prescan_probes_url_file_map(spark, tmp_path):
     crawler = Crawler(spark, pages, seeds, assume_unique_urls=True, pages_path=path)
     key_urls = [f"{BASE}/propublica.html"]
     keys = spark.createDataFrame([(u,) for u in key_urls], "url string")
-    files = crawler._prune_file_list(keys, "url", key_urls=key_urls)
-    assert files is not None
+    pruned = crawler._pruned_corpus(keys, len(key_urls), key_urls=key_urls)
+    assert pruned is not None
+    files = pruned.inputFiles()
     assert 0 < len(files) < len(pages.inputFiles())
-    fmap = crawler._url_file_map()
-    assert fmap.storageLevel.useMemory  # built and cached by the prescan
+    fmap, _ = crawler._url_file_map()
+    assert fmap.storageLevel.useMemory  # built and cached by the prune
     plan = (
         fmap.filter(F.col("url").isin(key_urls))._jdf.queryExecution().executedPlan().toString()
     )
     assert "InMemoryTableScan" in plan
-    assert sorted(crawler._prune_file_list(keys, "url")) == sorted(files)
+    assert sorted(crawler._pruned_corpus(keys, len(key_urls)).inputFiles()) == sorted(files)
 
 
 def test_body_join_prunes_corpus_scan_to_url_html(spark, tmp_path):

@@ -785,3 +785,50 @@ def test_index_fetched_materializes_without_html(spark, pages):
     c2 = Crawler(spark, pages, [basic_seed()], index_fn=keep_html)
     fetched2 = c2._fetch_all_index_pages(c2._empty_seen())
     assert "html" in fetched2.columns  # the two-pass shape still carries it
+
+
+def test_frontier_columns_are_the_frontier_schema(spark, pages, tmp_path):
+    """The frontier a crawl returns and the one it commits carry exactly
+    schemas.FRONTIER's columns."""
+    cat = ManifestCatalog(spark, str(tmp_path / "cat"))
+    result = Crawler(spark, pages, [basic_seed()], catalog=cat).crawl()
+    names = sorted(schemas.FRONTIER.fieldNames())
+    assert sorted(result.frontier.columns) == names
+    assert sorted(cat.table(cat.latest(), "frontier").columns) == names
+
+
+def test_resume_reads_a_frontier_committed_with_url_hash32(spark, pages, tmp_path):
+    """A catalog whose frontier still carries the murmur3 ``url_hash32``
+    column resumes to the extraction of an uninterrupted crawl, with
+    instance pagination adding rows to the reloaded frontier."""
+    from pyspark.sql import functions as F
+
+    def next_page(url, k):
+        if url == f"{BASE}/propublica_search.html" and k <= 2:
+            return f"{BASE}/propublica_search.html?p={k + 1}"
+        return ""
+
+    search = SeedSpec(
+        1,
+        url_list=[f"{BASE}/propublica_search.html"],
+        extract_selector=".compact-list a.title-link",
+        extract_kind="list",
+        sleep_time_between_requests=30.0,
+    )
+    seeds = [basic_seed(sleep_time_between_requests=30.0), search]
+
+    def mk(catalog=None):
+        return Crawler(
+            spark, pages, seeds, round_budget_s=30.0, catalog=catalog,
+            next_instance_page_url_fn=next_page,
+        )
+
+    ref = _texts(mk().crawl())
+    cat = ManifestCatalog(spark, str(tmp_path / "cat"))
+    with pytest.raises(KilledCrawl):
+        mk(cat).crawl(stop_after_round=0)
+    snap = cat.latest()
+    old_shape = cat.table(snap, "frontier").withColumn("url_hash32", F.hash("url"))
+    cat.commit(snap.round, {"frontier": old_shape}, metrics=snap.metrics)
+    assert "url_hash32" in cat.table(cat.latest(), "frontier").columns
+    assert _texts(mk(cat).resume()) == ref

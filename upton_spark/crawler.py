@@ -60,6 +60,7 @@ from datetime import datetime, timezone
 from typing import Callable
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from upton_spark import schemas, urlkit
@@ -73,7 +74,6 @@ from upton_spark.functions.udfs import (
     index_page_urls_udf,
     main_content_udf,
 )
-from upton_spark.operators import dedup as dedup_ops
 from upton_spark.operators import partitioning as part_ops
 from upton_spark.operators import politeness as polite_ops
 from upton_spark.operators import robots as robots_ops
@@ -89,9 +89,6 @@ JOB_DIET_MAX_ROWS = 20_000
 # partition stay trivially in memory, narrow enough that task launches
 # stop dominating tiny stages
 JOB_DIET_SHUFFLE_WIDTH = 4
-# extraction prunes the corpus scan to the frontier's files only up to this
-# many frontier rows; past it the frontier touches most files anyway
-EXTRACT_PRUNE_MAX_URLS = 20_000
 # salted frontier partitioning: rows per salt bucket of a hot host
 FRONTIER_ROWS_PER_BUCKET = 100_000
 
@@ -145,23 +142,12 @@ class KilledCrawl(RuntimeError):
         self.round_no = round_no
 
 
-# session-lifetime inverted file index per corpus (see _url_file_map),
-# keyed by SparkSession identity so a map never outlives its session;
-# single entry — a new corpus unpersists and replaces the previous map.
-# The engine's only process-global cache: repeated crawls of one corpus
+# session-lifetime inverted file index per corpus and its row count (see
+# _url_file_map), keyed by SparkSession identity so a map never outlives its
+# session; single entry — a new corpus unpersists and replaces the previous
+# map. The engine's only process-global cache: repeated crawls of one corpus
 # reuse it.
-_URL_FILE_MAP_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _tokens_col(sleep_col, round_budget_s: float):
-    """Live-fetch tokens per host per round — the reference's
-    sleep_time_between_requests (lib/upton.rb:96) re-expressed as
-    floor(budget/sleep), min 1 so chains always progress."""
-    return (
-        F.when(sleep_col.isNull() | (sleep_col <= 0), F.lit(polite_ops.UNLIMITED))
-        .otherwise(F.greatest(F.lit(1), F.floor(F.lit(round_budget_s) / sleep_col)))
-        .cast("long")
-    )
+_URL_FILE_MAP_CACHE: dict[tuple, tuple[DataFrame, int]] = {}
 
 
 def _decision_col():
@@ -355,8 +341,9 @@ class Crawler:
         self.pages = pages
         # pages_path: set when ``pages`` is a plain parquet/Iceberg table on
         # disk. Enables file-level pruning for small fetch sets (the index
-        # phase): a url-only prescan finds the files holding any candidate,
-        # and the html-bearing probe reads ONLY those — the poor man's
+        # phase, and the extraction while the frontier is under half the
+        # corpus): a url-only probe finds the files holding any candidate,
+        # and the html-bearing join reads ONLY those — the poor man's
         # Iceberg metadata pruning. Without it the index join decompresses
         # the whole corpus html column to fetch a few thousand index pages.
         self.pages_path = pages_path
@@ -372,7 +359,9 @@ class Crawler:
         self.max_instance_pages = max_instance_pages
         self._lineage_rows: list[tuple] = []
         self._seen_count = 0
-        self._frontier_rows: int | None = None  # set by build_frontier
+        # set by build_frontier and resume(); gates the job diet and the
+        # extraction's corpus prune
+        self._frontier_rows = 0
         # links of a catalog crawl, written with the fetch phase's first full
         # snapshot so a resumed crawl returns them (see run_fetch_rounds)
         self._uncommitted_links: DataFrame | None = None
@@ -517,15 +506,17 @@ class Crawler:
 
     def _pages_is_raw_scan(self) -> bool:
         """Contract check for file-level pruning: ``pages`` must be the
-        unmodified scan of ``pages_path`` (sameSemantics vs a fresh read —
-        catches filters, projections, unions; memoized once per crawler)."""
+        unmodified scan of ``pages_path`` (sameSemantics vs a fresh read
+        with ``pages``' schema, so no schema-inference job — catches
+        filters, projections, unions; memoized once per crawler). A
+        ``pages_path`` that cannot be read raises instead of silently
+        turning pruning off."""
         if self._pages_raw_scan_ok is None:
             try:
-                self._pages_raw_scan_ok = self.pages.sameSemantics(
-                    self.spark.read.parquet(self.pages_path)
-                )
-            except Exception:
-                self._pages_raw_scan_ok = False
+                raw = self.spark.read.schema(self.pages.schema).parquet(self.pages_path)
+            except AnalysisException as e:
+                raise ValueError(f"pages_path {self.pages_path!r} cannot be read: {e}") from e
+            self._pages_raw_scan_ok = self.pages.sameSemantics(raw)
         return self._pages_raw_scan_ok
 
     def pages_latest(self) -> DataFrame:
@@ -537,35 +528,46 @@ class Crawler:
             self._pages_latest = self._latest_of(self.pages)
         return self._pages_latest
 
-    def _pruned_pages(
-        self, keys: DataFrame, url_col: str, key_urls: list[str] | None = None
+    def _pruned_corpus(
+        self, keys: DataFrame, n_keys: int, key_urls: list[str] | None = None
     ) -> DataFrame | None:
-        """File-level pruning for a small fetch set: a url-column-only
-        prescan (no html decompression) finds which corpus files contain any
-        candidate url; the html-bearing probe then reads ONLY those files.
-        Correct under dedup-latest — every capture of a matched url lives in
-        a kept file, so the per-url latest window over the pruned subset
-        equals the global one. Returns None when unavailable (no
-        pages_path), not worthwhile (candidates touch most files), or when
-        ``pages`` is not the raw scan of ``pages_path`` — the pruned probe
-        re-reads matched files directly, which would silently bypass any
-        filter/projection a caller applied to ``pages``, so a transformed
-        ``pages`` falls back to the (always-correct) unpruned join."""
-        files = self._prune_file_list(keys, url_col, key_urls)
+        """The latest-capture corpus (url, html) read from only the files
+        that hold a candidate url (``keys``' ``url`` column; ``n_keys``
+        bounds their number), or None to read the whole corpus. Used by the
+        index phase and the extraction alike.
+
+        A probe of the url→file map (no html decompression) finds the
+        files. Correct under dedup-latest: every capture of a matched url
+        lives in a kept file, so the per-url latest window over them equals
+        the global one. The probe runs only while the candidates are under
+        half the corpus rows: the files of a fetch set of at least half the
+        corpus rows hold at least that many rows, so the full scan reads at
+        most twice what a pruned one would. None also when the matched
+        files are half the corpus or more, without ``pages_path`` or
+        broadcast_frontier, or when ``pages`` is not the raw scan of
+        ``pages_path`` — the kept files are re-read directly, which would
+        bypass a caller's filter or projection, so a transformed ``pages``
+        keeps the unpruned join."""
+        if self.pages_path is None or not self._pages_is_raw_scan() or not self.broadcast_frontier:
+            return None
+        fmap, corpus_rows = self._url_file_map()
+        if 2 * n_keys >= corpus_rows:
+            return None
+        files = self._prune_file_list(fmap, keys, key_urls)
         if files is None:
             return None
-        return self._latest_of(self.spark.read.parquet(*files))
+        return self._latest_of(self.spark.read.schema(self.pages.schema).parquet(*files))
 
-    def _url_file_map(self) -> DataFrame:
-        """(url, _f) inverted file index over the raw corpus scan,
-        Spark-cached per (session, pages_path, file set) and built on a
-        corpus's first prescan: every prescan (index candidates, extraction
-        prune, later crawls of the same corpus) is then a probe of the
-        cached map instead of a pass over the corpus url column. The
-        100-TB analogue is table metadata (Iceberg manifests / file url
-        stats) — local parquet has no such index, so the engine
-        materializes one. Single entry: a new corpus evicts (unpersists)
-        the old map."""
+    def _url_file_map(self) -> tuple[DataFrame, int]:
+        """(url, _f) inverted file index over the raw corpus scan and its
+        row count, Spark-cached per (session, pages_path, file set): the
+        count that fills the cache is the corpus size _pruned_corpus gates
+        on, and every later probe (index candidates, extraction, later
+        crawls of the same corpus) reads the cached map instead of the
+        corpus url column. The 100-TB analogue is table metadata (Iceberg
+        manifests / file url stats) — local parquet has no such index, so
+        the engine materializes one. Single entry: a new corpus evicts
+        (unpersists) the old map."""
         # applicationId is stable for a session's lifetime and never reused,
         # unlike id(self.spark) which CPython can recycle after a stopped
         # session is GC'd (resurrecting a DataFrame bound to a dead session)
@@ -574,43 +576,31 @@ class Crawler:
         cached = _URL_FILE_MAP_CACHE.get(key)
         if cached is not None:
             return cached
-        for k, old in list(_URL_FILE_MAP_CACHE.items()):
+        for k, (old, _) in list(_URL_FILE_MAP_CACHE.items()):
             # never unpersist a map owned by another live session; stopped
             # sessions free their cache blocks on their own
             if k[0] == app_id:
                 with contextlib.suppress(Exception):
                     old.unpersist()
             del _URL_FILE_MAP_CACHE[k]
-        fmap = (
-            self.spark.read.parquet(self.pages_path)
-            .select("url", F.input_file_name().alias("_f"))
-            .cache()
-        )
-        _URL_FILE_MAP_CACHE[key] = fmap
-        return fmap
+        # ``pages`` is the raw scan here (_pages_is_raw_scan)
+        fmap = self.pages.select("url", F.input_file_name().alias("_f")).cache()
+        entry = _URL_FILE_MAP_CACHE[key] = (fmap, fmap.count())
+        return entry
 
     def _prune_file_list(
-        self, keys: DataFrame, url_col: str, key_urls: list[str] | None = None
+        self, fmap: DataFrame, keys: DataFrame, key_urls: list[str] | None = None
     ) -> list[str] | None:
-        """The corpus files containing any candidate url, or None when
-        pruning is unavailable / not worthwhile (see _pruned_pages). A
-        driver-known candidate list (``key_urls``) probes the map with an IN
-        filter; otherwise ``keys`` is broadcast into a semi-join."""
-        if self.pages_path is None or not self.broadcast_frontier:
-            return None
-        if not self._pages_is_raw_scan():
-            return None
-        fmap = self._url_file_map()
+        """The corpus files of ``fmap`` holding any candidate url, or None
+        when they are half the corpus files or more. A driver-known
+        candidate list (``key_urls``) probes the map with an IN filter;
+        otherwise ``keys`` is broadcast into a semi-join."""
         if key_urls is not None:
             probe = fmap.filter(F.col("url").isin(key_urls))
         else:
-            probe = fmap.join(
-                F.broadcast(keys.select(F.col(url_col).alias("url"))), "url", "left_semi"
-            )
+            probe = fmap.join(F.broadcast(keys.select("url")), "url", "left_semi")
         files = [r["_f"] for r in probe.select("_f").distinct().collect()]
-        if not files or not all(files):
-            return None
-        if len(files) >= max(1, len(self.pages.inputFiles())) * 0.5:
+        if not files or not all(files) or len(files) >= len(self.pages.inputFiles()) * 0.5:
             return None
         return files
 
@@ -627,11 +617,7 @@ class Crawler:
         )
 
     def _join_bodies(
-        self,
-        small: DataFrame,
-        url_col: str = "url",
-        prune_files: bool | list[str] = False,
-        pages_override: DataFrame | None = None,
+        self, small: DataFrame, url_col: str = "url", corpus: DataFrame | None = None
     ) -> DataFrame:
         """small ⟕ pages on url, without ever shuffling the corpus.
 
@@ -642,30 +628,16 @@ class Crawler:
           matched   = pages ⋈ broadcast(small)         (inner, BuildRight ok)
           unmatched = small ⟕̸ broadcast(matched urls)  (anti, NULL body)
 
-        Both corpus scans stream column-pruned (url+html, then url-only);
-        with ``prune_files`` (and pages_path set) the html-bearing scan is
-        additionally restricted to the files a url-only prescan matched.
-        Past broadcastable frontier sizes set broadcast_frontier=False and
-        let AQE/SMJ handle it with bucketed tables."""
-        pl = None
-        if pages_override is not None:
-            pl = pages_override
-            if url_col != "url":
-                pl = pl.withColumnRenamed("url", url_col)
-        elif prune_files:
-            pl = self._pruned_pages(
-                small.select(url_col).distinct(),
-                url_col,
-                key_urls=prune_files if isinstance(prune_files, list) else None,
-            )
-            if pl is not None and url_col != "url":
-                pl = pl.withColumnRenamed("url", url_col)
-        if pl is None:
-            pl = self.pages_latest()
-            if url_col != "url":
-                pl = pl.withColumnRenamed("url", url_col)
-            if not self.broadcast_frontier:
-                return small.join(pl, url_col, "left")
+        Both corpus scans stream column-pruned (url+html, then url-only).
+        ``corpus`` replaces the latest-capture corpus with a pruned one
+        (_pruned_corpus). Past broadcastable frontier sizes set
+        broadcast_frontier=False and let AQE/SMJ handle it with bucketed
+        tables."""
+        pl = self.pages_latest() if corpus is None else corpus
+        if url_col != "url":
+            pl = pl.withColumnRenamed("url", url_col)
+        if not self.broadcast_frontier:
+            return small.join(pl, url_col, "left")
         matched = pl.join(F.broadcast(small), url_col, "inner")
         matched_keys = matched.select(url_col).distinct()
         unmatched = small.join(F.broadcast(matched_keys), url_col, "left_anti")
@@ -764,9 +736,9 @@ class Crawler:
         first. ``materialize=False`` returns the lazy union (delta-based
         rounds: the caller compacts every compact_every rounds);
         ``new_rows`` is the seen-set delta for catalog commits."""
-        hashed = dedup_ops.with_url_hashes(
-            fetched.groupBy("url").agg(F.min(round_col).cast("int").alias("first_round"))
-        )
+        hashed = fetched.groupBy("url").agg(
+            F.min(round_col).cast("int").alias("first_round")
+        ).withColumn("url_hash", F.xxhash64("url"))
         # frozen to a driver-side literal: with delta-based (lazy) seen
         # merges a current_timestamp() expression would re-evaluate on every
         # downstream action, stamping different times per consumer
@@ -841,14 +813,14 @@ class Crawler:
             "pagination_index",
             F.col("pagination_start_index") + F.col("page_k") * F.col("pagination_interval"),
         ).withColumn("host", host_col(F.col("fetch_url")))
-        return dedup_ops.with_url_hashes(df, "fetch_url")
+        return df.withColumn("url_hash", F.xxhash64("fetch_url"))
 
     def _index_page_candidates(self) -> DataFrame:
         """Every page of every index chain, generated up front — the URLs
         of a chain are predictable (only chain TERMINATION depends on
         fetched bodies, lib/upton.rb:295-311): the closed form fetches them
-        all in one pass, and both index phases prescan-prune the corpus
-        once with them."""
+        all in one pass, and both index phases prune the corpus once
+        with them."""
         return self._with_index_page(
             self._index_seeds_df()
             .select("*", F.posexplode("pages").alias("page_k", "fetch_url"))
@@ -870,28 +842,26 @@ class Crawler:
         """(pruned index corpus, broadcast-it?) shared by both index phases.
 
         The candidate pagination URLs are predictable up front, so the
-        corpus file-prune prescan runs ONCE for the whole phase — with the
-        driver-computed candidate list as an IN probe of the url→file map
-        when the seed list is bounded. When the pruned files are small on
-        disk the caller should BROADCAST the corpus side and plain-left-join
-        the candidate chain: _join_bodies' matched/unmatched decomposition
+        corpus is pruned ONCE for the whole phase — with the driver-computed
+        candidate list as an IN probe of the url→file map when it is
+        short. When the pruned files are small on disk the
+        caller should BROADCAST the corpus side and plain-left-join the
+        candidate chain: _join_bodies' matched/unmatched decomposition
         would evaluate the candidate UDF chain ~3x (broadcast build +
         anti-join probe), the dominant cost at few-seeds scale. Live mode
-        reads no corpus for live pages, so it skips the prescan."""
+        reads no corpus for live pages, so it skips the probe."""
         if self.fetch_fn is not None:
             return None, False
-        prune_files = self._prune_file_list(
-            self._index_page_candidates()
-            .select(F.col("fetch_url").alias("url"))
-            .distinct(),
-            "url",
-            key_urls=self._index_candidate_urls_local(),
+        urls = self._index_candidate_urls_local()
+        pl = self._pruned_corpus(
+            self._index_page_candidates().select(F.col("fetch_url").alias("url")),
+            len(urls),
+            key_urls=urls if len(urls) <= 10_000 else None,
         )
-        if prune_files is None:
+        if pl is None:
             return None, False
-        pl = self._latest_of(self.spark.read.parquet(*prune_files))
         try:
-            total = sum(os.path.getsize(f.removeprefix("file:")) for f in prune_files)
+            total = sum(os.path.getsize(f.removeprefix("file:")) for f in pl.inputFiles())
             bcast = total <= 64 << 20
         except OSError:
             bcast = False
@@ -929,7 +899,7 @@ class Crawler:
                     "left",
                 )
             else:
-                fetched = self._join_bodies(cand, "fetch_url", pages_override=pl_index)
+                fetched = self._join_bodies(cand, "fetch_url", pl_index)
         return fetched.withColumn(
             "body_empty", F.col("html").isNull() | (F.length("html") == 0)
         )
@@ -1098,13 +1068,13 @@ class Crawler:
             F.posexplode_outer("hrefs").alias("pos", "url"),
         ).filter(F.col("pos").isNotNull())
 
-    def _index_candidate_urls_local(self, max_urls: int = 10_000) -> list[str] | None:
-        """_index_page_candidates' URLs computed on the driver — usable as
-        an IN probe for the prescan. None when the candidate set is too
-        large to inline (falls back to the distributed semi-join prescan)."""
-        urls: list[str] = []
-        for s in self._index_seeds():
-            urls += urlkit.index_page_urls(
+    def _index_candidate_urls_local(self) -> list[str]:
+        """_index_page_candidates' URLs computed on the driver: their count
+        gates the corpus prune, and a short list is its IN probe."""
+        return [
+            u
+            for s in self._index_seeds()
+            for u in urlkit.index_page_urls(
                 s.seed_url,
                 paginated=s.paginated,
                 pagination_param=s.pagination_param,
@@ -1112,9 +1082,7 @@ class Crawler:
                 pagination_interval=s.pagination_interval,
                 pagination_max_pages=s.pagination_max_pages,
             )
-            if len(urls) > max_urls:
-                return None
-        return urls
+        ]
 
     def run_index_phase_sequential(self, seen: DataFrame) -> tuple[DataFrame, DataFrame]:
         """The index round loop. Returns (links, seen).
@@ -1136,7 +1104,7 @@ class Crawler:
         links_parts: list[DataFrame] = []
         round_no = 0
         state_cols = [f.name for f in schemas.SEEDS.fields] + ["pages", "page_k"]
-        # one prescan for the whole phase (see _index_pruned_corpus)
+        # one corpus prune for the whole phase (see _index_pruned_corpus)
         corpus = self._index_pruned_corpus()
         while alive > 0:
             cand = self._with_index_page(
@@ -1150,7 +1118,9 @@ class Crawler:
             cand = cand.withColumn(
                 "host_tokens",
                 F.when(F.col("cache_hit"), F.lit(polite_ops.UNLIMITED)).otherwise(
-                    _tokens_col(F.col("sleep_time_between_requests"), self.round_budget_s)
+                    polite_ops.tokens_for_col(
+                        F.col("sleep_time_between_requests"), self.round_budget_s
+                    )
                 ),
             )
             cand = polite_ops.admit_per_host(cand, order_cols=("pagination_index", "seed_id"))
@@ -1277,7 +1247,7 @@ class Crawler:
         """Apply allocate_budget output as the per-round token ceiling:
         host_tokens = least(sleep/Crawl-delay tokens, budget), clamped >= 1
         so a zero/negative budget still lets the host drain (matching
-        _tokens_col's min-1 progress guarantee) instead of deferring its
+        tokens_for_col's min-1 progress guarantee) instead of deferring its
         rows forever."""
         if self.host_budgets is None:
             return new_urls
@@ -1330,8 +1300,9 @@ class Crawler:
                 ),
             )
             .withColumn("url", F.coalesce(F.col("url"), F.lit("")))
+            .withColumn("url_hash", F.xxhash64("url"))
+            .select(*schemas.FRONTIER.fieldNames())
         )
-        hashed = dedup_ops.with_url_hashes(frontier)
         # salted host partitioning (SURVEY.md §4.1): bound any partition's
         # share of a Zipf-hot host before the frontier hits storage.
         # Partition count scales with the frontier's size (links row count is
@@ -1341,10 +1312,10 @@ class Crawler:
         # bulk of build_frontier's fixed cost on small crawls); a bulk crawl
         # still spreads across every core.
         n_rows = links.count() + len(explicit_rows)
-        self._frontier_rows = n_rows  # drives crawl()'s job-diet decision
+        self._frontier_rows = n_rows
         n_parts = max(1, min(self.spark.sparkContext.defaultParallelism, -(-n_rows // 4096)))
         salted = part_ops.salted_repartition(
-            hashed,
+            frontier,
             n_parts,
             rows_per_bucket=FRONTIER_ROWS_PER_BUCKET,
         )
@@ -1538,7 +1509,8 @@ class Crawler:
                 .drop("crawl_delay")
             )
         new_urls = new_urls.withColumn(
-            "host_tokens", _tokens_col(F.col("sleep_time_between_requests"), self.round_budget_s)
+            "host_tokens",
+            polite_ops.tokens_for_col(F.col("sleep_time_between_requests"), self.round_budget_s),
         )
         return self._cap_host_tokens(new_urls), cache_hits, blocked
 
@@ -1680,9 +1652,10 @@ class Crawler:
         merged = self._merge_status(frontier, self._status_map(decisions.filter(in_cap)))
         n_decided = sum(r["count"] for r in rows)
         if self.next_instance_page_url_fn is not None or n_decided > 20_000:
-            # instance-pagination rounds re-read the frontier repeatedly, and
-            # bulk frontiers get re-evaluated by the extraction-prune probes:
-            # pin those
+            # instance-pagination rounds re-read the frontier every round,
+            # and a lazy bulk frontier would re-run the status merge (a
+            # dedup aggregation over every decision) in each consumer: the
+            # extraction's body join and each action on CrawlResult.frontier
             frontier = self._materialize(merged, "frontier_round")
         else:
             # politeness-bounded crawl with nothing re-entering the loop:
@@ -1740,7 +1713,11 @@ class Crawler:
         table + per-round status deltas replayed in round order (full
         commits drop superseded delta tables, so every delta present is
         newer than the carried full table)."""
-        frontier = self.catalog.table(snap, "frontier")
+        # projected: frontier tables committed before url_hash32 left the
+        # frontier still carry it
+        frontier = self.catalog.table(snap, "frontier").select(
+            *schemas.FRONTIER.fieldNames()
+        )
         delta_names = sorted(
             (n for n in snap.tables if n.startswith("frontier_delta_r")),
             key=lambda n: int(n.rsplit("r", 1)[1]),
@@ -1765,18 +1742,16 @@ class Crawler:
 
     # ------------------------------------------------------ extraction phase
     def attach_bodies(
-        self, frontier: DataFrame, prune_files: bool | list[str] = False
+        self, frontier: DataFrame, corpus: DataFrame | None = None
     ) -> DataFrame:
         """Frontier rows + page bodies. Missing/blocked/empty-url rows get a
         NULL body → decoded '' — the reference's EMPTY_STRING fetch-failure
         encoding (lib/upton.rb:35, lib/upton/downloader.rb:67).
 
-        ``prune_files``: restrict the html-bearing corpus scan to the files a
-        url prescan matched — a politeness-bounded crawl extracts a tiny
+        ``corpus``: the pruned corpus to join instead of the whole one
+        (_pruned_corpus) — a politeness-bounded crawl extracts a tiny
         fraction of the corpus, and without pruning the extraction join
-        decompresses every page's html anyway. Callers gate it on frontier
-        size (the prescan costs a url-column scan; a frontier touching most
-        files falls back inside _pruned_pages).
+        decompresses every page's html anyway.
 
         Live mode (fetch_fn set): status='fetched' rows — exactly the rows
         the admission loop charged a politeness token — acquire bodies
@@ -1794,9 +1769,9 @@ class Crawler:
             rest = frontier.filter(F.col("status") != "fetched")
             joined = self._materialize(
                 self._transport_bodies(live, "url"), "live_bodies"
-            ).unionByName(self._join_bodies(rest, "url"))
+            ).unionByName(self._join_bodies(rest, "url", corpus))
         else:
-            joined = self._join_bodies(frontier, "url", prune_files=prune_files)
+            joined = self._join_bodies(frontier, "url", corpus)
         return joined.withColumn(
             "html",
             F.when(F.col("status").isin("fetched", "cache_hit"), F.col("html")).otherwise(
@@ -1894,7 +1869,7 @@ class Crawler:
         with self._maybe_job_diet(small):
             links, seen = self.run_index_phase(seen)
             frontier = self.build_frontier(links)
-        small = small and (self._frontier_rows or 0) <= JOB_DIET_MAX_ROWS
+        small = small and self._frontier_rows <= JOB_DIET_MAX_ROWS
         self._uncommitted_links = links if self.catalog is not None else None
         with self._maybe_job_diet(small):
             frontier, seen = self.run_fetch_rounds(
@@ -1914,7 +1889,8 @@ class Crawler:
         # rides the broadcast body join — the driver-side hash relation
         # shrinks ~2x vs broadcasting all frontier columns
         slim = frontier.select("url", "seed_id", "instance_index", "pagination_index", "status")
-        extracted = self.extract(self.attach_bodies(slim, prune_files=self._extract_prune(frontier)))
+        corpus = self._pruned_corpus(slim, self._frontier_rows)
+        extracted = self.extract(self.attach_bodies(slim, corpus))
         result = CrawlResult(extracted, frontier, seen, self.lineage_df(), links)
         if self.catalog is not None:
             tables = {"extracted": extracted, "frontier": frontier,
@@ -1941,9 +1917,9 @@ class Crawler:
         if snap is None or "urls_seen" not in snap.tables:
             raise ValueError("nothing to evict from")
         seen = self._catalog_seen(snap)
-        gone = dedup_ops.with_url_hashes(
-            self.spark.createDataFrame([(u,) for u in urls], "url string")
-        ).select("url_hash")
+        gone = self.spark.createDataFrame([(u,) for u in urls], "url string").select(
+            F.xxhash64("url").alias("url_hash")
+        )
         remaining = seen.join(gone, "url_hash", "left_anti")
         self.catalog.commit(
             snap.round,
@@ -1969,6 +1945,7 @@ class Crawler:
             else self.spark.createDataFrame([], schema=_LINKS_SCHEMA)
         )
         self._seen_count = seen.count()
+        self._frontier_rows = frontier.count()
         start_round = snap.round + 1 if snap.round >= 0 else 0
         frontier, seen = self.run_fetch_rounds(
             frontier, seen, max_rounds=max_fetch_rounds, start_round=start_round
@@ -2007,7 +1984,7 @@ class Crawler:
             )
             if nxt.isEmpty():
                 break
-            new_rows = dedup_ops.with_url_hashes(
+            new_rows = (
                 self._with_priority(
                     nxt.select(
                         "seed_id", "instance_index", F.col("next_url").alias("url")
@@ -2018,31 +1995,12 @@ class Crawler:
                 )
                 .withColumn("attempts", F.lit(0))
                 .withColumn("status", F.lit("queued"))
+                .withColumn("url_hash", F.xxhash64("url"))
+                .select(*schemas.FRONTIER.fieldNames())
             )
             frontier = self._materialize(frontier.unionByName(new_rows), "frontier_pag")
             frontier, seen = self.run_fetch_rounds(frontier, seen, phase=f"instance_pag_{k}")
         return frontier
-
-    def _extract_prune(self, frontier: DataFrame) -> bool | list[str]:
-        """Prune the extraction corpus scan only for small frontiers: the
-        count is a parquet-footer job on the materialized frontier, and the
-        threshold keeps bulk crawls (whose frontier touches most corpus
-        files anyway) from paying a useless url-column prescan. Tiny
-        frontiers return the driver-collected url list itself — the prescan
-        then probes the url→file map with an IN filter instead of
-        broadcasting the frontier into a semi-join."""
-        if self.pages_path is None or not self.broadcast_frontier:
-            return False
-        # one limit-probe job covers the common small-frontier case (the
-        # limit short-circuits, so a huge frontier pays ~nothing); only
-        # mid-size frontiers fall through to the footer count
-        rows = frontier.select("url").distinct().limit(10_001).collect()
-        if len(rows) <= 10_000:
-            urls = [r["url"] for r in rows if r["url"]]
-            return urls if urls else True
-        if frontier.count() > EXTRACT_PRUNE_MAX_URLS:
-            return False
-        return True
 
     def lineage_df(self) -> DataFrame:
         return self.spark.createDataFrame(self._lineage_rows, schema=schemas.LINEAGE)

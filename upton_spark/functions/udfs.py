@@ -97,16 +97,6 @@ def set_query_param_udf(url: pd.Series, param: pd.Series, value: pd.Series) -> p
     )
 
 
-@F.pandas_udf(T.StringType())
-def canonicalize_udf(url: pd.Series) -> pd.Series:
-    return pd.Series([urlkit.canonicalize(u) if u is not None else None for u in url])
-
-
-@F.pandas_udf(T.StringType())
-def slug_udf(url: pd.Series) -> pd.Series:
-    return pd.Series([urlkit.slug(u) if u is not None else None for u in url])
-
-
 MAX_FILENAME_LENGTH = 130  # reference downloader.rb:18
 
 
@@ -127,12 +117,6 @@ def host_col(url_col):
     This is the partitioning/politeness key, so it must stay in codegen:
     at 10^10 rows a Python hop here would dominate the plan."""
     return F.lower(F.parse_url(url_col, F.lit("HOST")))
-
-
-def url_hash_cols(url_col):
-    """(xxhash64, murmur3) pair for Bloom double-hashing — both computed
-    JVM-side (SURVEY.md §2.8 murmur3 mandate)."""
-    return F.xxhash64(url_col), F.hash(url_col)
 
 
 @F.pandas_udf(

@@ -8,10 +8,11 @@ Python). No approximate layer sits in front of it: the crawler already
 semi-joins every allowed row against the seen-set, so a Bloom pre-test saves
 no probe and only adds a bitmap build, a broadcast and a Python UDF.
 
-:func:`with_url_hashes` also attaches murmur3 ``url_hash32``, the second hash
-of :class:`BloomFilter`'s double hashing. :func:`build_bloom` (partition-local
-numpy bitmaps OR-merged on the driver) is no longer called by the crawler; the
-benchmark's kernel microbench still times it.
+:func:`with_url_hashes` attaches ``url_hash`` plus murmur3 ``url_hash32``, the
+second hash of :class:`BloomFilter`'s double hashing. Neither it nor
+:func:`build_bloom` (partition-local numpy bitmaps OR-merged on the driver) is
+called by the crawler, which computes ``url_hash`` alone; the benchmark's
+kernel microbench still uses both.
 """
 
 from __future__ import annotations

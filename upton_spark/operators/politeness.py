@@ -19,7 +19,7 @@ ordering comes from explicit columns, never partition order).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 UNLIMITED = 1 << 40
 
@@ -30,6 +30,16 @@ def tokens_for(sleep_time: float | None, round_budget_s: float) -> int:
     if sleep_time is None or sleep_time <= 0:
         return UNLIMITED
     return max(1, int(round_budget_s / sleep_time))
+
+
+def tokens_for_col(sleep_col: Column, round_budget_s: float) -> Column:
+    """:func:`tokens_for` as a Column over per-row sleeps: floor(budget /
+    sleep), min 1 so chains always progress; NULL or sleep<=0 → unlimited."""
+    return (
+        F.when(sleep_col.isNull() | (sleep_col <= 0), F.lit(UNLIMITED))
+        .otherwise(F.greatest(F.lit(1), F.floor(F.lit(round_budget_s) / sleep_col)))
+        .cast("long")
+    )
 
 
 def adaptive_delays(

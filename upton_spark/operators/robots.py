@@ -294,15 +294,6 @@ class RobotsGate:
             self._bc = None
 
 
-def robots_gate(
-    spark: SparkSession, frontier: DataFrame, robots: DataFrame | None, agent: str = "*"
-) -> DataFrame:
-    """One-shot convenience wrapper: build a RobotsGate, apply it. Round
-    loops must build the gate ONCE and reuse it (Crawler does) — calling
-    this per round re-collects and re-broadcasts the rules every time."""
-    return RobotsGate(spark, robots, agent)(frontier)
-
-
 def crawl_delays(robots: DataFrame | None, agent: str = "*") -> DataFrame | None:
     """Per-host crawl-delay dimension (host, crawl_delay) for the politeness
     join; None when no robots table."""

@@ -58,11 +58,6 @@ def bpe_encode_col(text: Column) -> Column:
     return enc(text)
 
 
-def bpe_token_count_col(text: Column) -> Column:
-    """Exact vendored-BPE token count = size(bpe_encode_col(text))."""
-    return F.size(bpe_encode_col(text))
-
-
 def chunk_token_ids(
     df: DataFrame,
     window: int = 128,

@@ -55,7 +55,6 @@ FRONTIER = T.StructType(
         T.StructField("pagination_index", T.IntegerType(), True),
         T.StructField("depth", T.IntegerType(), True),
         T.StructField("priority", T.LongType(), True),
-        T.StructField("round", T.IntegerType(), True),
         T.StructField("attempts", T.IntegerType(), True),
         T.StructField("status", T.StringType(), True),  # queued|fetched|deferred|blocked
     ]

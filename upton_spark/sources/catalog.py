@@ -199,11 +199,3 @@ class IcebergCatalog:
 
     def table(self, snap: Snapshot, name: str) -> DataFrame:
         return self.spark.read.table(snap.tables[name])
-
-
-def get_catalog(spark: SparkSession, root: str):
-    """Prefer Iceberg when its runtime is present, else ManifestCatalog."""
-    try:
-        return IcebergCatalog(spark)
-    except RuntimeError:
-        return ManifestCatalog(spark, root)

@@ -108,8 +108,8 @@ def synth_pages(
         ).alias("i"),
     ).withColumn("kind", F.lit("index"))
     # Range-partition by (kind, host, page) so index pages cluster into few
-    # output files — the physical layout that lets the crawler's file-level
-    # prescan pruning (Crawler._pruned_pages) fetch index chains without
+    # output files — the physical layout that lets the crawler's file
+    # pruning (Crawler._pruned_corpus) fetch index chains without
     # decompressing the instance html (Iceberg tables get the same effect
     # from a sort order + metadata pruning). Generation stays parallel: the
     # instance range still spreads over all partitions. ``n_files`` sets the
