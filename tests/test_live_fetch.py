@@ -153,6 +153,12 @@ def test_transport_error_becomes_empty_string_body(spark, pages, web):
     assert texts[f"{BASE}/webinar.html"] != ""
 
 
+def _next_search_page(url, k):
+    if url == f"{BASE}/propublica_search.html" and k <= 2:
+        return f"{BASE}/propublica_search.html?p={k + 1}"
+    return ""
+
+
 def test_transport_called_exactly_once_per_url_across_actions(
     spark, pages, web, tmp_path
 ):
@@ -161,19 +167,36 @@ def test_transport_called_exactly_once_per_url_across_actions(
     count-then-collect pattern, per-kind extraction scans, commits) replay
     the pin — never the live web. An unpinned lazy transport would re-fetch
     every URL per action, silently multiplying real requests past the
-    politeness budget."""
+    politeness budget. Under the instance-pagination hook the round's body
+    probe and the extraction share that pin too."""
     import os
     from collections import Counter
 
-    log_dir = str(tmp_path / "calls_once")
-    os.makedirs(log_dir)
-    res = Crawler(
-        spark, pages.limit(0), [basic_seed()], fetch_fn=_transport(web, log_dir)
-    ).crawl()
-    # several actions over the same result, like a real consumer
-    res.extracted.count()
-    res.extracted.collect()
-    res.extracted.agg(F.sum(F.length("text"))).collect()
-    counts = Counter(_read_log(log_dir))
-    dupes = {u: n for u, n in counts.items() if n > 1}
-    assert dupes == {}, f"urls fetched more than once: {dupes}"
+    search = SeedSpec(
+        0,
+        url_list=[f"{BASE}/propublica_search.html"],
+        extract_selector=".compact-list a.title-link",
+        extract_kind="list",
+        sleep_time_between_requests=0.0,
+    )
+    cases = {
+        "index": ([basic_seed()], {}),
+        "hooked": ([search], {"next_instance_page_url_fn": _next_search_page}),
+    }
+    for name, (seeds, kw) in cases.items():
+        log_dir = str(tmp_path / f"calls_once_{name}")
+        os.makedirs(log_dir)
+        res = Crawler(
+            spark, pages.limit(0), seeds, fetch_fn=_transport(web, log_dir), **kw
+        ).crawl()
+        # several actions over the same result, like a real consumer
+        res.extracted.count()
+        res.extracted.collect()
+        res.extracted.agg(F.sum(F.length("text"))).collect()
+        counts = Counter(_read_log(log_dir))
+        dupes = {u: n for u, n in counts.items() if n > 1}
+        assert dupes == {}, f"{name}: urls fetched more than once: {dupes}"
+        n_fetched = res.lineage.agg(F.sum("fetched")).collect()[0][0]
+        assert sum(counts.values()) == n_fetched, name
+    # the hooked crawl fetched ?p=1, ?p=2 and the empty ?p=3
+    assert len(counts) == 3

@@ -448,6 +448,12 @@ def test_instance_pagination_hook(spark, pages):
     # fixture pages directly).
     assert docs[0] == ["Tools & Data ", "Tools and Resources for Reporting the Stimulus "]
     assert docs[1] == ["Chapter 1. Using Google Refine to Clean Messy Data "]
+    # pagination runs inside the one fetch round loop: no phase of its own,
+    # and instance rounds count on from 0 without a restart
+    lineage = crawler.lineage_df().collect()
+    assert {r["phase"] for r in lineage} == {"index", "instance"}
+    rounds = sorted({r["round"] for r in lineage if r["phase"] == "instance"})
+    assert rounds == [0, 1, 2]  # ?p=1, ?p=2, then the empty ?p=3
 
 
 def test_robots_gate_paths_equivalent(spark):
@@ -832,3 +838,96 @@ def test_resume_reads_a_frontier_committed_with_url_hash32(spark, pages, tmp_pat
     cat.commit(snap.round, {"frontier": old_shape}, metrics=snap.metrics)
     assert "url_hash32" in cat.table(cat.latest(), "frontier").columns
     assert _texts(mk(cat).resume()) == ref
+
+
+def _next_search_page(url, k):
+    """The search instance's ?p=k+1 page while k <= 2 (?p=3 is empty)."""
+    if url == f"{BASE}/propublica_search.html" and k <= 2:
+        return f"{BASE}/propublica_search.html?p={k + 1}"
+    return ""
+
+
+def _paginated_crawler(spark, pages, catalog=None, hook=_next_search_page, **kw):
+    """The basic seed plus the paginated search instance, one token per
+    host per round (both share www.example.com)."""
+    search = SeedSpec(
+        1,
+        url_list=[f"{BASE}/propublica_search.html"],
+        extract_selector=".compact-list a.title-link",
+        extract_kind="list",
+        sleep_time_between_requests=30.0,
+    )
+    seeds = [basic_seed(sleep_time_between_requests=30.0), search]
+    return Crawler(
+        spark, pages, seeds, round_budget_s=30.0, catalog=catalog,
+        next_instance_page_url_fn=hook, **kw,
+    )
+
+
+def _frontier_multiset(result, *cols):
+    return sorted(tuple(r[c] for c in cols) for r in result.frontier.collect())
+
+
+def test_resume_over_finished_paginated_crawl_returns_its_own_extraction(
+    spark, pages, tmp_path
+):
+    """resume() over a finished catalog crawl with instance pagination adds
+    no page: same extraction, and the frontier keeps one row per page."""
+    cat = ManifestCatalog(spark, str(tmp_path / "cat"))
+    done = _paginated_crawler(spark, pages, cat).crawl()
+    cols = ("url", "pagination_index", "status")
+    want = (_texts(done), _frontier_multiset(done, *cols))
+    again = _paginated_crawler(spark, pages, cat).resume()
+    assert (_texts(again), _frontier_multiset(again, *cols)) == want
+
+
+def test_resume_after_a_kill_inside_instance_pagination(spark, pages, tmp_path):
+    """A crawl killed while it queues page 2 of an instance (the hook
+    raises) resumes to the uninterrupted crawl: each page is fetched once
+    and extracted once."""
+
+    def raising(url, k):
+        if k == 2:
+            raise RuntimeError("killed at page 2")
+        return _next_search_page(url, k)
+
+    ref = _paginated_crawler(spark, pages, ManifestCatalog(spark, str(tmp_path / "ref"))).crawl()
+    cat = ManifestCatalog(spark, str(tmp_path / "cat"))
+    # the hook runs in a Python worker: Spark re-raises its error wrapped
+    with pytest.raises(Exception, match="killed at page 2"):
+        _paginated_crawler(spark, pages, cat, hook=raising).crawl()
+    resumed = _paginated_crawler(spark, pages, cat).resume()
+    cols = ("url", "pagination_index", "status")
+    assert _texts(resumed) == _texts(ref)
+    assert _frontier_multiset(resumed, *cols) == _frontier_multiset(ref, *cols)
+
+
+def test_kill_at_every_round_of_a_paginated_crawl_resumes_identically(
+    spark, pages, tmp_path
+):
+    """Pagination rounds run inside the fetch loop, so stop_after_round
+    reaches every commit before the final one. Killed after any round
+    (deferral, full and delta commits mixed by compact_every=2) and
+    resumed, the crawl ends with the uninterrupted crawl's extraction,
+    frontier and seen-set."""
+
+    def state(result):
+        return (
+            _texts(result),
+            _frontier_multiset(result, "url", "pagination_index", "status", "attempts"),
+            sorted((r["url"], r["first_round"]) for r in result.urls_seen.collect()),
+        )
+
+    ref = _paginated_crawler(
+        spark, pages, ManifestCatalog(spark, str(tmp_path / "ref")), compact_every=2
+    ).crawl()
+    want = state(ref)
+    n_rounds = ref.lineage.filter("phase = 'instance'").select("round").distinct().count()
+    # one token per round: 5 page-0 rows, then ?p=2 and ?p=3
+    assert n_rounds == 7
+    for r in range(n_rounds):
+        cat = ManifestCatalog(spark, str(tmp_path / f"kill{r}"))
+        with pytest.raises(KilledCrawl):
+            _paginated_crawler(spark, pages, cat, compact_every=2).crawl(stop_after_round=r)
+        resumed = _paginated_crawler(spark, pages, cat, compact_every=2).resume()
+        assert state(resumed) == want, f"killed after round {r}"

@@ -1,9 +1,10 @@
 """The crawl engine — Upton's scrape lifecycle as Spark jobs.
 
 Reproduces the reference lifecycle (SURVEY.md §3: index resolution →
-pagination → instance fetch → per-page block → flatten) as driver-side
-batch over DataFrames. Each fetch phase has exactly two implementations:
-one closed-form schedule and one stateful round loop.
+index pagination → instance fetch, instance pagination included →
+per-page block → flatten) as driver-side batch over DataFrames. Each
+fetch phase has exactly two implementations: one closed-form schedule and
+one stateful round loop.
 
 * **index phase** — every page of every index chain
   (``urlkit.index_page_urls``) is generated up front and fetched in one
@@ -20,13 +21,15 @@ one closed-form schedule and one stateful round loop.
   = join against the ``pages`` corpus (the corpus *is* the stash:
   lib/upton/downloader.rb:70-98 becomes an anti-join + join); dedup via
   one exact anti-join against the seen-set; robots/blocklist gate;
-  per-host token politeness. The closed form computes every round at once
-  — a url of per-host rank r is fetched in round (r-1) div tokens
+  per-host token politeness. Instance pagination is frontier growth in the
+  same rounds: page k+1 of an instance is queued in the round after page k
+  arrives with a non-empty body. The closed form computes every round at
+  once — a url of per-host rank r is fetched in round (r-1) div tokens
   (``politeness.schedule_per_host``). The loop runs when something
   perturbs rounds or needs a boundary per round: injected fetch failures,
   a live transport, a catalog (every round is a snapshot commit carrying
-  per-partition lineage → kill/resume-safe), a simulated kill, or
-  heterogeneous seed sleeps.
+  per-partition lineage → kill/resume-safe), a simulated kill,
+  heterogeneous seed sleeps, or the next_instance_page_url hook.
 * **extraction phase** — the user "block" as a pandas UDF over the html
   column, in the reference's three canned shapes (text / list / table,
   lib/upton/utils.rb:20-40) plus identity (the reference's default block
@@ -365,6 +368,8 @@ class Crawler:
         # links of a catalog crawl, written with the fetch phase's first full
         # snapshot so a resumed crawl returns them (see run_fetch_rounds)
         self._uncommitted_links: DataFrame | None = None
+        # (url, html) the live transport fetched this crawl (_live_bodies)
+        self._live_pins: DataFrame | None = None
         self.seeds_df = spark.createDataFrame(
             [
                 (
@@ -1284,24 +1289,12 @@ class Crawler:
         explicit = self.spark.createDataFrame(
             explicit_rows, schema="seed_id int, instance_index long, url string"
         )
-        frontier = (
-            self._with_redirects(from_index.unionByName(explicit))
-            .withColumn("pagination_index", F.lit(0))
-            .withColumn("host", host_col(F.col("url")))
-            .withColumn("depth", F.lit(1))
-        )
-        frontier = (
-            self._with_priority(frontier)
-            .withColumn("attempts", F.lit(0))
-            .withColumn(
-                "status",
-                F.when(F.col("url").isNull() | (F.col("url") == ""), "empty_url").otherwise(
-                    "queued"
-                ),
+        frontier = self._as_frontier(
+            self._with_priority(
+                self._with_redirects(from_index.unionByName(explicit)).withColumn(
+                    "pagination_index", F.lit(0)
+                )
             )
-            .withColumn("url", F.coalesce(F.col("url"), F.lit("")))
-            .withColumn("url_hash", F.xxhash64("url"))
-            .select(*schemas.FRONTIER.fieldNames())
         )
         # salted host partitioning (SURVEY.md §4.1): bound any partition's
         # share of a Zipf-hot host before the frontier hits storage.
@@ -1321,12 +1314,25 @@ class Crawler:
         )
         return self._materialize(salted, "frontier")
 
+    @staticmethod
+    def _as_frontier(df: DataFrame) -> DataFrame:
+        """schemas.FRONTIER rows, not yet attempted, from (seed_id,
+        instance_index, pagination_index, priority, url): 'queued', or
+        'empty_url' for a NULL or empty url."""
+        url = F.coalesce(F.col("url"), F.lit(""))
+        status = F.when(url == "", "empty_url").otherwise("queued")
+        return df.select(
+            url.alias("url"), F.xxhash64(url).alias("url_hash"),
+            host_col(F.col("url")).alias("host"), "seed_id", "instance_index",
+            "pagination_index", F.lit(1).alias("depth"), "priority",
+            F.lit(0).alias("attempts"), status.alias("status"),
+        )
+
     def run_fetch_rounds(
         self,
         frontier: DataFrame,
         seen: DataFrame,
         *,
-        phase: str = "instance",
         max_rounds: int = 64,
         stop_after_round: int | None = None,
         start_round: int = 0,
@@ -1336,12 +1342,13 @@ class Crawler:
 
         Each loop round: admission setup (robots gate, seen-set anti-join
         with free cache hits, tokens) → per-host token admission →
-        mark fetched, merge seen → snapshot commit with per-host-bucket
-        lineage. Deferred rows re-enter next round. Returns (frontier,
-        seen) with statuses resolved."""
+        mark fetched, merge seen → instance pagination queues the next
+        pages (_next_pages) → snapshot commit with per-host-bucket
+        lineage. Deferred rows and new pages enter the next round. Returns
+        (frontier, seen) with statuses resolved."""
         if self._oneshot_eligible(stop_after_round):
             return self._run_fetch_rounds_oneshot(
-                frontier, seen, phase=phase, max_rounds=max_rounds, start_round=start_round
+                frontier, seen, max_rounds=max_rounds, start_round=start_round
             )
         round_no = start_round
         rounds_done = 0
@@ -1349,10 +1356,8 @@ class Crawler:
         while rounds_done < max_rounds:
             # emptiness needs a driver check only on entry: later iterations
             # only continue when the previous round left deferred/retry rows
-            if (
-                rounds_done == 0
-                and frontier.filter(F.col("status") == "queued").isEmpty()
-            ):
+            # or queued new pages
+            if rounds_done == 0 and frontier.filter(F.col("status") == "queued").isEmpty():
                 break
             new_urls, cache_hits, blocked = self._admission_setup(frontier, seen)
             new_urls = polite_ops.admit_per_host(new_urls)
@@ -1390,8 +1395,14 @@ class Crawler:
             )
             counts, _ = self._collect_decision_counts(decisions, F.col("decision"))
             n_admitted = _total(counts, "fetched")
+            n_next = 0
+            if self.next_instance_page_url_fn and n_admitted + _total(counts, "cache_hit"):
+                next_pages = self._materialize(self._next_pages(frontier, decisions), "next_pages")
+                n_next = next_pages.count()
 
-            ending = _total(counts, "deferred") == 0 and _total(counts, "retry") == 0
+            ending = (
+                _total(counts, "deferred") == 0 and _total(counts, "retry") == 0 and not n_next
+            )
             seen_delta = None
             if self.instance_cached and n_admitted:
                 self._seen_count += n_admitted
@@ -1402,18 +1413,23 @@ class Crawler:
                     materialize=False,
                 )
                 seen_layers += 1
-            self._note_lineage(phase, round_no, counts)
+            self._note_lineage("instance", round_no, counts)
 
             status_map = self._status_map(decisions.filter(F.col("decision") != "deferred"))
             frontier = self._merge_status(frontier, status_map)
+            if n_next:
+                frontier = frontier.unionByName(next_pages)
+                self._frontier_rows += n_next
 
             # delta-based rounds: the whole frontier/seen-set is rewritten
             # only on compaction (every compact_every rounds) or when the
             # loop ends; in between, state stays a bounded stack of lazy
             # broadcast-join/union layers over the last compacted parquet
             # and the catalog carries per-round deltas (politeness-bounded
-            # size — never O(frontier)).
-            compact = ending or (rounds_done + 1) % self.compact_every == 0
+            # size — never O(frontier)). A round that queued new pages
+            # rewrites and commits the whole frontier: a status delta cannot
+            # carry rows, so a kill redoes the round or finds them committed.
+            compact = ending or n_next or (rounds_done + 1) % self.compact_every == 0
             if compact:
                 frontier = self._materialize(frontier, "frontier_round")
                 if seen_layers and not ending:
@@ -1421,7 +1437,7 @@ class Crawler:
                     seen_layers = 0
             if self.catalog is not None:
                 metrics = {
-                    "phase": phase,
+                    "phase": "instance",
                     "round": round_no,
                     "fetched": n_admitted,
                     "deferred_by_politeness": _total(counts, "deferred"),
@@ -1431,11 +1447,10 @@ class Crawler:
                     "failed": _total(counts, "failed"),
                     "urls_seen": self._seen_count,
                 }
-                # rounds_done == 0 forces a FULL commit at the start of
-                # every run_fetch_rounds invocation (main loop, each
-                # instance-pagination phase): deltas in the manifest are
-                # therefore always relative to a full table from the SAME
-                # invocation — phases can never mix delta round keys
+                # rounds_done == 0 forces a FULL commit on the first round
+                # of crawl() and resume(): deltas in the manifest are
+                # therefore always relative to a full table this crawl
+                # wrote, never to an earlier crawl's frontier
                 if compact or rounds_done == 0:
                     tables = {"frontier": frontier, "urls_seen": seen,
                               "lineage": self.lineage_df()}
@@ -1566,24 +1581,27 @@ class Crawler:
         * no kill-simulation (stop_after_round targets the loop),
         * no live transport (it must fetch round-by-round under the real
           politeness pacing, not every round's fetches in one instant),
+        * no next_instance_page_url hook (page k+1 enters the frontier only
+          once page k's body is known, so no pass over the frontier at
+          entry can schedule it),
         * a uniform seed sleep budget: with one sleep across seeds, every
           row on a host shares host_tokens (robots Crawl-delay maxes in
           per-host, so it stays uniform), making the closed form exact.
           Heterogeneous budgets make admission rank interleaving
           state-dependent -> loop.
         Equivalence is pinned by test_oneshot_matches_loop_*."""
-        if self.fetch_failures is not None or self.catalog is not None:
-            return False
-        if stop_after_round is not None or self.fetch_fn is not None:
-            return False
-        return len({s.sleep_time_between_requests for s in self.seeds}) <= 1
+        loop_only = (
+            self.fetch_failures, self.catalog, stop_after_round, self.fetch_fn,
+            self.next_instance_page_url_fn,
+        )
+        sleeps = {s.sleep_time_between_requests for s in self.seeds}
+        return all(v is None for v in loop_only) and len(sleeps) <= 1
 
     def _run_fetch_rounds_oneshot(
         self,
         frontier: DataFrame,
         seen: DataFrame,
         *,
-        phase: str,
         max_rounds: int,
         start_round: int,
     ) -> tuple[DataFrame, DataFrame]:
@@ -1646,15 +1664,14 @@ class Crawler:
                 per_pid[("deferred", p)] = per_pid.get(("deferred", p), 0) + v
             if self.instance_cached:
                 self._seen_count += sum(fetched_by_round.get(r, {}).values())
-            self._note_lineage(phase, r, per_pid)
+            self._note_lineage("instance", r, per_pid)
 
         in_cap = (F.col("decision") != "fetched") | (F.col("round") < cap)
         merged = self._merge_status(frontier, self._status_map(decisions.filter(in_cap)))
         n_decided = sum(r["count"] for r in rows)
-        if self.next_instance_page_url_fn is not None or n_decided > 20_000:
-            # instance-pagination rounds re-read the frontier every round,
-            # and a lazy bulk frontier would re-run the status merge (a
-            # dedup aggregation over every decision) in each consumer: the
+        if n_decided > 20_000:
+            # a lazy bulk frontier would re-run the status merge (a dedup
+            # aggregation over every decision) in each consumer: the
             # extraction's body join and each action on CrawlResult.frontier
             frontier = self._materialize(merged, "frontier_round")
         else:
@@ -1740,6 +1757,46 @@ class Crawler:
             seen = seen.unionByName(self.catalog.table(snap, name))
         return seen
 
+    def _next_pages(self, frontier: DataFrame, decisions: DataFrame) -> DataFrame:
+        """Instance pagination as frontier growth (the next_instance_page_url
+        hook, lib/upton.rb:321-334): queued rows for page k+1 of every
+        instance whose page k this round's ``decisions`` decided fetched or
+        cache_hit with a non-empty body. A chain stops on an empty or unchanged
+        url, an empty body, or past ``max_instance_pages``. The hook
+        receives the ORIGINAL instance url each time, like the reference
+        (lib/upton.rb:326), and page k+1 keeps its instance's priority, so
+        admission ranks it ahead of later instances as Upton fetches it."""
+        fn = self.next_instance_page_url_fn
+
+        @F.pandas_udf(T.StringType())
+        def next_page(url: pd.Series, k: pd.Series) -> pd.Series:
+            return pd.Series([fn(u, int(i)) if u else "" for u, i in zip(url, k)])
+
+        decided = decisions.filter(F.col("decision").isin("fetched", "cache_hit")).select(
+            "url_hash", F.col("decision").alias("status")
+        )
+        base = (
+            frontier.filter(
+                (F.col("status") == "queued")
+                & (F.col("pagination_index") < self.max_instance_pages)
+            )
+            .drop("status")
+            .join(decided, "url_hash")
+        )
+        base = self.attach_bodies(base).filter(F.col("html").isNotNull() & (F.length("html") > 0))
+        orig = frontier.filter(F.col("pagination_index") == 0).select(
+            "seed_id", "instance_index", F.col("url").alias("orig_url")
+        )
+        k = F.col("pagination_index") + 1
+        nxt = base.join(orig, ["seed_id", "instance_index"]).select(
+            "seed_id", "instance_index", "priority", "url", k.alias("pagination_index"),
+            next_page(F.col("orig_url"), k).alias("next_url"),
+        )
+        return self._as_frontier(
+            nxt.filter((F.col("next_url") != "") & (F.col("next_url") != F.col("url")))
+            .drop("url").withColumnRenamed("next_url", "url")
+        )
+
     # ------------------------------------------------------ extraction phase
     def attach_bodies(
         self, frontier: DataFrame, corpus: DataFrame | None = None
@@ -1755,21 +1812,14 @@ class Crawler:
 
         Live mode (fetch_fn set): status='fetched' rows — exactly the rows
         the admission loop charged a politeness token — acquire bodies
-        through the transport; cache_hit rows still read the stash, and
-        blocked/failed rows never touch the transport. The transport stage
-        is MATERIALIZED (parquet pin) before anything downstream sees it:
-        extraction plans are replayed by every action over them (scrape's
-        guard probe + collect, one scan per extract kind, catalog commits),
-        and a lazy transport would re-fetch every URL on each replay —
-        breaking the one-token-one-fetch contract the admission loop paid
-        for. The pin doubles as the stash write shape a real deployment
-        would persist."""
+        through the transport (_live_bodies); cache_hit rows still read the
+        stash, and blocked/failed rows never touch the transport."""
         if self.fetch_fn is not None:
             live = frontier.filter(F.col("status") == "fetched")
             rest = frontier.filter(F.col("status") != "fetched")
-            joined = self._materialize(
-                self._transport_bodies(live, "url"), "live_bodies"
-            ).unionByName(self._join_bodies(rest, "url", corpus))
+            joined = live.join(self._live_bodies(live), "url").unionByName(
+                self._join_bodies(rest, "url", corpus)
+            )
         else:
             joined = self._join_bodies(frontier, "url", corpus)
         return joined.withColumn(
@@ -1778,6 +1828,24 @@ class Crawler:
                 F.lit(None).cast("binary")
             ),
         )
+
+    def _live_bodies(self, live: DataFrame) -> DataFrame:
+        """(url, html) of every url in ``live``, each fetched through the
+        transport ONCE per crawl. The transport stage is MATERIALIZED
+        (parquet pin) before anything downstream sees it: extraction plans
+        are replayed by every action over them (scrape's guard probe +
+        collect, one scan per extract kind, catalog commits), and a lazy
+        transport would re-fetch every URL on each replay — breaking the
+        one-token-one-fetch contract the admission loop paid for. Urls an
+        earlier call pinned (instance pagination's body probe, _next_pages)
+        are read back, not fetched again. The pins double as the stash
+        write shape a real deployment would persist."""
+        urls = live.select("url").distinct()
+        if self._live_pins is not None:
+            urls = urls.join(self._live_pins.select("url"), "url", "left_anti")
+        fresh = self._materialize(self._transport_bodies(urls), "live_bodies")
+        self._live_pins = fresh if self._live_pins is None else self._live_pins.unionByName(fresh)
+        return self._live_pins
 
     def extract(self, frontier_with_body: DataFrame) -> DataFrame:
         """Apply the per-seed extraction block; one branch per kind, unioned
@@ -1854,6 +1922,7 @@ class Crawler:
         self, *, max_fetch_rounds: int = 64, stop_after_round: int | None = None
     ) -> CrawlResult:
         self._lineage_rows = []
+        self._live_pins = None
         seen = self._empty_seen()
         if self.catalog is not None:
             snap = self.catalog.latest()
@@ -1875,16 +1944,11 @@ class Crawler:
             frontier, seen = self.run_fetch_rounds(
                 frontier, seen, max_rounds=max_fetch_rounds, stop_after_round=stop_after_round
             )
-        return self._finish(frontier, seen, links, small)
+        return self._finish(frontier, seen, links)
 
-    def _finish(
-        self, frontier: DataFrame, seen: DataFrame, links: DataFrame, small: bool = False
-    ) -> CrawlResult:
-        """The end of crawl() and resume(): instance pagination (job-dieted
-        when ``small``), extraction, then the final catalog commit (links
-        only if no round committed them)."""
-        with self._maybe_job_diet(small):
-            frontier = self._instance_pagination(frontier, seen)
+    def _finish(self, frontier: DataFrame, seen: DataFrame, links: DataFrame) -> CrawlResult:
+        """The end of crawl() and resume(): extraction, then the final
+        catalog commit (links only if no round committed them)."""
         # project the frontier down to what extraction consumes before it
         # rides the broadcast body join — the driver-side hash relation
         # shrinks ~2x vs broadcasting all frontier columns
@@ -1937,6 +2001,7 @@ class Crawler:
         snap = self.catalog.latest()
         if snap is None:
             raise ValueError("nothing to resume")
+        self._live_pins = None
         frontier = self._catalog_frontier(snap)
         seen = self._catalog_seen(snap)
         links = (
@@ -1951,56 +2016,6 @@ class Crawler:
             frontier, seen, max_rounds=max_fetch_rounds, start_round=start_round
         )
         return self._finish(frontier, seen, links)
-
-    def _instance_pagination(self, frontier: DataFrame, seen: DataFrame) -> DataFrame:
-        """Optional next_instance_page_url hook (lib/upton.rb:321-334):
-        page k+1 of an instance enters the frontier while page k's body is
-        non-empty; chains stop on empty/unchanged URL or empty body. The
-        hook receives the ORIGINAL instance url each time, like the
-        reference (lib/upton.rb:326)."""
-        fn = self.next_instance_page_url_fn
-        if fn is None:
-            return frontier
-
-        @F.pandas_udf(T.StringType())
-        def next_page(url: pd.Series, k: pd.Series) -> pd.Series:
-            return pd.Series([fn(u, int(i)) if u else "" for u, i in zip(url, k)])
-
-        for k in range(1, self.max_instance_pages + 1):
-            base = frontier.filter(
-                (F.col("pagination_index") == k - 1)
-                & F.col("status").isin("fetched", "cache_hit")
-            )
-            base = self.attach_bodies(base).filter(
-                F.col("html").isNotNull() & (F.length("html") > 0)
-            )
-            orig = frontier.filter(F.col("pagination_index") == 0).select(
-                "seed_id", "instance_index", F.col("url").alias("orig_url")
-            )
-            nxt = (
-                base.join(orig, ["seed_id", "instance_index"])
-                .withColumn("next_url", next_page(F.col("orig_url"), F.lit(k)))
-                .filter((F.col("next_url") != "") & (F.col("next_url") != F.col("url")))
-            )
-            if nxt.isEmpty():
-                break
-            new_rows = (
-                self._with_priority(
-                    nxt.select(
-                        "seed_id", "instance_index", F.col("next_url").alias("url")
-                    )
-                    .withColumn("pagination_index", F.lit(k))
-                    .withColumn("host", host_col(F.col("url")))
-                    .withColumn("depth", F.lit(1))
-                )
-                .withColumn("attempts", F.lit(0))
-                .withColumn("status", F.lit("queued"))
-                .withColumn("url_hash", F.xxhash64("url"))
-                .select(*schemas.FRONTIER.fieldNames())
-            )
-            frontier = self._materialize(frontier.unionByName(new_rows), "frontier_pag")
-            frontier, seen = self.run_fetch_rounds(frontier, seen, phase=f"instance_pag_{k}")
-        return frontier
 
     def lineage_df(self) -> DataFrame:
         return self.spark.createDataFrame(self._lineage_rows, schema=schemas.LINEAGE)
