@@ -228,48 +228,92 @@ def test_token_bucket_fn_matches_admit_per_host(spark):
 
 def test_catalog_contract_shared(spark, tmp_path, monkeypatch):
     """ManifestCatalog and IcebergCatalog satisfy one commit/latest/load
-    contract: Snapshot returns with metrics, parent chaining, carry-forward
-    of unwritten tables, and drop_prefixes supersession. Iceberg runs
-    against a stubbed writeTo (no jar in this sandbox) — the seam the
-    adapter exists for."""
+    contract: Snapshot returns with metrics and parent chaining; a commit
+    replaces a table (a DataFrame), appends to it (Append, which creates a
+    missing table) or removes it (None), and carries forward every table it
+    does not name; the manifest holds each table's row count, and a read
+    gives back the writer's schema. Iceberg runs against a stubbed writeTo
+    and table read (no jar in this sandbox) — the seam the adapter exists
+    for."""
     import pyspark.sql.classic.dataframe as cdf
+    from pyspark.sql.readwriter import DataFrameReader
 
     from upton_spark.sources import catalog as catmod
 
+    schema = "a int, b string"
+
+    def df(*rows):
+        return spark.createDataFrame(list(rows), schema)
+
+    def read(cat, snap, name):
+        return sorted(tuple(r) for r in cat.table(snap, name).collect())
+
     def contract(cat):
-        df = spark.createDataFrame([(1,)], "a int")
-        s1 = cat.commit(0, {"frontier": df, "frontier_delta_r0": df}, metrics={"fetched": 4})
+        two = df((1, "a"), (2, "b"))
+        s1 = cat.commit(0, {"frontier": two, "frontier_status": two}, metrics={"fetched": 4})
         assert (s1.snapshot_id, s1.round, s1.parent) == (1, 0, None)
         assert s1.metrics == {"fetched": 4}
-        s2 = cat.commit(1, {"urls_seen": df})
+        assert cat.rows(s1, "frontier") == 2
+        got = cat.table(s1, "frontier").schema
+        assert [(f.name, f.dataType) for f in got] == [(f.name, f.dataType) for f in two.schema]
+        s2 = cat.commit(1, {"urls_seen": two, "frontier_status": catmod.Append(df((1, "a")))})
         assert s2.parent == 1
-        assert {"frontier", "frontier_delta_r0", "urls_seen"} <= set(s2.tables)
-        s3 = cat.commit(1, {"frontier": df}, drop_prefixes=("frontier_delta_r",))
-        assert "frontier_delta_r0" not in s3.tables
-        assert "urls_seen" in s3.tables
+        assert set(s2.tables) == {"frontier", "frontier_status", "urls_seen"}
+        assert cat.rows(s2, "frontier_status") == 3
+        assert read(cat, s2, "frontier_status") == [(1, "a"), (1, "a"), (2, "b")]
+        s3 = cat.commit(2, {
+            "frontier": df((3, "c")),
+            "frontier_status": None,
+            "urls_seen": catmod.Append(df((3, "c"))),
+            "links": catmod.Append(two),
+        })
+        assert set(s3.tables) == {"frontier", "urls_seen", "links"}
+        assert (cat.rows(s3, "frontier"), read(cat, s3, "frontier")) == (1, [(3, "c")])
+        assert cat.rows(s3, "urls_seen") == 3
+        assert read(cat, s3, "urls_seen") == [(1, "a"), (2, "b"), (3, "c")]
+        assert (cat.rows(s3, "links"), read(cat, s3, "links")) == (2, [(1, "a"), (2, "b")])
         assert cat.latest().snapshot_id == 3
         assert cat.snapshots() == [1, 2, 3]
         assert cat.load(2).round == 1
+        return s1, s2, s3
 
-    contract(catmod.ManifestCatalog(spark, str(tmp_path / "manifest_cat")))
+    s1, s2, s3 = contract(catmod.ManifestCatalog(spark, str(tmp_path / "manifest_cat")))
+    # an append lists new files after the old ones; a replace lists only its own
+    first = s1.tables["frontier_status"]["files"]
+    assert len(first) == 1 and s2.tables["frontier_status"]["files"][:1] == first
+    assert len(s2.tables["frontier_status"]["files"]) == 2
+    assert s3.tables["urls_seen"]["files"][:1] == s2.tables["urls_seen"]["files"]
+    assert s3.tables["frontier"]["files"] != s1.tables["frontier"]["files"]
 
-    writes = []
+    writes, store = [], {}
 
     class FakeWriter:
-        def __init__(self, ident):
-            self.ident = ident
+        def __init__(self, df, ident):
+            self.df, self.ident = df, ident
 
         def using(self, fmt):
             assert fmt == "iceberg"
             return self
 
         def createOrReplace(self):
-            writes.append(self.ident)
+            writes.append(("replace", self.ident))
+            store[self.ident] = (self.df.schema, self.df.collect())
+
+        def append(self):
+            writes.append(("append", self.ident))
+            schema, rows = store[self.ident]
+            store[self.ident] = (schema, rows + self.df.collect())
 
     monkeypatch.setattr(catmod, "iceberg_on_classpath", lambda spark: True)
-    monkeypatch.setattr(cdf.DataFrame, "writeTo", lambda self, ident: FakeWriter(ident))
+    monkeypatch.setattr(cdf.DataFrame, "writeTo", lambda self, ident: FakeWriter(self, ident))
+    monkeypatch.setattr(
+        DataFrameReader, "table",
+        lambda self, ident: spark.createDataFrame(store[ident][1], store[ident][0]),
+    )
     contract(catmod.IcebergCatalog(spark))
-    assert "upton.frontier" in writes and "upton.urls_seen" in writes
+    assert ("replace", "upton.frontier") in writes
+    assert ("append", "upton.frontier_status") in writes
+    assert ("replace", "upton.links") in writes  # Append to a missing table
 
 
 def test_iceberg_real_warehouse_smoke(spark, tmp_path):

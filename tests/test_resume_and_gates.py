@@ -184,10 +184,10 @@ def test_resume_over_finished_crawl_returns_its_own_links(spark, pages, tmp_path
 
 def test_delta_commits_and_resume_across_compaction(spark, pages, tmp_path):
     """At-scale round commits are DELTA-based: between compactions a round
-    writes only its status map / newly-seen rows (politeness-bounded), never
-    the whole frontier; full tables land every compact_every rounds and at
-    the end, superseding the deltas. Resume must replay deltas in round
-    order and stay byte-identical across a compaction boundary."""
+    appends only its status map (politeness-bounded) to ``frontier_status``,
+    never the whole frontier; the full frontier lands every compact_every
+    rounds and at the end, removing the status rows. Resume must apply the
+    status rows and stay byte-identical across a compaction boundary."""
     ref = Crawler(
         spark, pages, [basic_seed(sleep_time_between_requests=30.0)], round_budget_s=30.0
     ).crawl()
@@ -205,8 +205,11 @@ def test_delta_commits_and_resume_across_compaction(spark, pages, tmp_path):
     with pytest.raises(KilledCrawl):
         crawler.crawl(stop_after_round=2)  # rounds 0(full),1(compact),2(delta)
     snap = cat.latest()
-    delta_tables = [n for n in snap.tables if n.startswith("frontier_delta_r")]
-    assert delta_tables == ["frontier_delta_r2"]  # r1 superseded by compaction
+    compacted = cat.load(snap.parent)
+    # round 2 appended only its status rows; the frontier is round 1's
+    assert snap.tables["frontier"] == compacted.tables["frontier"]
+    assert "frontier_status" not in compacted.tables  # r1's compaction removed it
+    assert {r["round"] for r in cat.table(snap, "frontier_status").collect()} == {2}
     resumed = Crawler(
         spark,
         pages,
@@ -217,9 +220,9 @@ def test_delta_commits_and_resume_across_compaction(spark, pages, tmp_path):
     ).resume()
     assert _texts(resumed) == ref_texts
     assert _links(resumed) == _links(ref)
-    # final commit supersedes all deltas
+    # the final commit writes the full frontier and removes the status rows
     final = cat.latest()
-    assert not any(n.startswith("frontier_delta_r") for n in final.tables)
+    assert "frontier_status" not in final.tables
 
 
 def test_recrawl_uses_stash(spark, pages, tmp_path):
@@ -909,19 +912,21 @@ def test_kill_at_every_round_of_a_paginated_crawl_resumes_identically(
     reaches every commit before the final one. Killed after any round
     (deferral, full and delta commits mixed by compact_every=2) and
     resumed, the crawl ends with the uninterrupted crawl's extraction,
-    frontier and seen-set."""
+    frontier, seen-set and lineage, in the result and in the final
+    snapshot's lineage table."""
 
-    def state(result):
+    def state(result, cat):
         return (
             _texts(result),
             _frontier_multiset(result, "url", "pagination_index", "status", "attempts"),
             sorted((r["url"], r["first_round"]) for r in result.urls_seen.collect()),
+            sorted(tuple(r) for r in result.lineage.collect()),
+            sorted(tuple(r) for r in cat.table(cat.latest(), "lineage").collect()),
         )
 
-    ref = _paginated_crawler(
-        spark, pages, ManifestCatalog(spark, str(tmp_path / "ref")), compact_every=2
-    ).crawl()
-    want = state(ref)
+    ref_cat = ManifestCatalog(spark, str(tmp_path / "ref"))
+    ref = _paginated_crawler(spark, pages, ref_cat, compact_every=2).crawl()
+    want = state(ref, ref_cat)
     n_rounds = ref.lineage.filter("phase = 'instance'").select("round").distinct().count()
     # one token per round: 5 page-0 rows, then ?p=2 and ?p=3
     assert n_rounds == 7
@@ -930,4 +935,117 @@ def test_kill_at_every_round_of_a_paginated_crawl_resumes_identically(
         with pytest.raises(KilledCrawl):
             _paginated_crawler(spark, pages, cat, compact_every=2).crawl(stop_after_round=r)
         resumed = _paginated_crawler(spark, pages, cat, compact_every=2).resume()
-        assert state(resumed) == want, f"killed after round {r}"
+        assert state(resumed, cat) == want, f"killed after round {r}"
+
+
+def test_kill_after_each_retry_round_resumes_identically(spark, pages, tmp_path):
+    """Retries cross a kill: killed after each delta round whose status map
+    holds a 'retry' and resumed, the crawl ends with the uninterrupted
+    crawl's frontier statuses and attempts, seen-set and extraction. The
+    resume applies every status row appended since the last full frontier
+    in one merge, a url's 'retry' rows of two rounds included."""
+    failures = spark.createDataFrame(
+        [(f"{BASE}/discussion.html", 1), (f"{BASE}/prosecutor.html", 99)],
+        "url string, fail_times int",
+    )
+
+    def mk(catalog):
+        return Crawler(
+            spark, pages, [basic_seed(sleep_time_between_requests=30.0)],
+            round_budget_s=30.0, compact_every=3, fetch_failures=failures,
+            max_fetch_attempts=3, catalog=catalog,
+        )
+
+    def state(result):
+        return (
+            _texts(result),
+            _frontier_multiset(result, "url", "status", "attempts"),
+            sorted((r["url"], r["first_round"]) for r in result.urls_seen.collect()),
+        )
+
+    ref_cat = ManifestCatalog(spark, str(tmp_path / "ref"))
+    want = state(mk(ref_cat).crawl())
+    assert (f"{BASE}/discussion.html", "fetched", 1) in want[1]
+    assert (f"{BASE}/prosecutor.html", "failed", 3) in want[1]
+    # delta rounds are the snapshots holding status rows
+    kills = [
+        s.round for s in map(ref_cat.load, ref_cat.snapshots())
+        if s.metrics.get("retried") and "frontier_status" in s.tables
+    ]
+    # one token per round: discussion retries in round 1, prosecutor in
+    # rounds 3 and 4; rounds 2 and 5 compact
+    assert kills == [1, 3, 4]
+    for r in kills:
+        cat = ManifestCatalog(spark, str(tmp_path / f"kill{r}"))
+        with pytest.raises(KilledCrawl):
+            mk(cat).crawl(stop_after_round=r)
+        assert state(mk(cat).resume()) == want, f"killed after round {r}"
+
+
+def test_resume_runs_no_spark_job_before_its_first_round(spark, pages, tmp_path, monkeypatch):
+    """resume() takes the seen-set and frontier row counts from the
+    manifest and reads each table with its recorded schema, so reloading a
+    snapshot committed in full costs no Spark job."""
+    seed = basic_seed(sleep_time_between_requests=30.0)
+    cat = ManifestCatalog(spark, str(tmp_path / "cat"))
+    with pytest.raises(KilledCrawl):
+        Crawler(spark, pages, [seed], round_budget_s=30.0, catalog=cat).crawl(stop_after_round=0)
+    assert "frontier_status" not in cat.latest().tables  # round 0 commits in full
+
+    class FirstRound(Exception):
+        pass
+
+    def first_round(*args, **kwargs):
+        raise FirstRound
+
+    crawler = Crawler(spark, pages, [seed], round_budget_s=30.0, catalog=cat)
+    monkeypatch.setattr(crawler, "run_fetch_rounds", first_round)
+    sc = spark.sparkContext
+    sc.setJobGroup("resume_reload", "resume() up to its first round")
+    try:
+        with pytest.raises(FirstRound):
+            crawler.resume()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("resume_reload")) == []
+    crawler.close()
+
+
+def test_seen_set_commits_append_only_the_new_rows(spark, pages, tmp_path):
+    """A crawl over a committed history seen-set appends file groups that
+    hold only the urls it marked seen: the history's files stay listed
+    first and untouched, and the manifest's row count is the history's plus
+    the new rows."""
+    from pyspark.sql import functions as F
+
+    n_history = 5_000
+    history = spark.range(n_history).select(
+        F.format_string(f"{BASE}/history/%d.html", "id").alias("url")
+    ).select(
+        F.xxhash64("url").alias("url_hash"),
+        "url",
+        F.lit(0).alias("first_round"),
+        F.to_timestamp(F.lit("2020-01-01 00:00:00")).alias("fetched_at"),
+    )
+    cat = ManifestCatalog(spark, str(tmp_path / "cat"))
+    base = cat.commit(-1, {"urls_seen": history}, metrics={"phase": "history"})
+    base_files = base.tables["urls_seen"]["files"]
+
+    result = Crawler(spark, pages, [basic_seed()], catalog=cat, index_cached=True).crawl()
+    entry = cat.latest().tables["urls_seen"]
+    assert entry["files"][: len(base_files)] == base_files
+    added = entry["files"][len(base_files):]
+    assert added
+    new_urls = []
+    for path in added:
+        group = spark.read.parquet(path)
+        new_urls += [r["url"] for r in group.select("url").collect()]
+    history_urls = {r["url"] for r in history.select("url").collect()}
+    assert not history_urls & set(new_urls)
+    assert len(new_urls) == len(set(new_urls))
+    # the index page (index_cached) and the four instance pages
+    assert len(new_urls) == 5
+    assert spark.read.parquet(*base_files).count() == n_history
+    assert cat.rows(cat.latest(), "urls_seen") == n_history + len(new_urls)
+    assert result.urls_seen.count() == n_history + len(new_urls)

@@ -80,7 +80,7 @@ from upton_spark.functions.udfs import (
 from upton_spark.operators import partitioning as part_ops
 from upton_spark.operators import politeness as polite_ops
 from upton_spark.operators import robots as robots_ops
-from upton_spark.sources.catalog import ManifestCatalog
+from upton_spark.sources.catalog import Append, ManifestCatalog
 
 N_LINEAGE_BUCKETS = 32  # host-hash buckets used as lineage "partitions"
 # small-crawl job-diet bounds (see Crawler.job_diet): a crawl whose seed
@@ -208,13 +208,15 @@ class Crawler:
         block_traps: bool = False,
         host_delays: DataFrame | None = None,
     ):
-        # ``compact_every``: the fetch loop keeps frontier/seen-set updates
-        # DELTA-based — each round commits only that round's status map and
-        # newly-seen rows (politeness-bounded size) instead of rewriting the
-        # whole frontier, which at a 10^10-row frontier would make every
-        # round O(frontier). Full tables are materialized/committed on entry,
-        # every ``compact_every`` rounds (bounding lazy plan depth and
-        # resume replay length), and when the loop ends.
+        # ``compact_every``: the fetch loop keeps frontier updates
+        # DELTA-based — a round appends only its status map to the catalog
+        # (politeness-bounded size) instead of rewriting the whole
+        # frontier, which at a 10^10-row frontier would make every round
+        # O(frontier). The full frontier is materialized/committed on entry,
+        # every ``compact_every`` rounds (bounding lazy plan depth and the
+        # status rows a resume applies), and when the loop ends; the
+        # in-memory seen-set is rewritten on the same rounds. The catalog's
+        # seen-set and lineage only ever grow by appends.
         # ``clock`` pins the fetched_at stash-annotation timestamp (the
         # reference stamps Time.now into cached files, downloader.rb:100-116)
         # to a fixed 'yyyy-MM-dd HH:mm:ss' value for deterministic tests;
@@ -361,6 +363,11 @@ class Crawler:
         self.next_instance_page_url_fn = next_instance_page_url_fn
         self.max_instance_pages = max_instance_pages
         self._lineage_rows: list[tuple] = []
+        # how many _lineage_rows the catalog holds; None: the next commit
+        # replaces the catalog's lineage (a crawl starts a new one)
+        self._lineage_committed: int | None = None
+        # seen-set rows added since the last commit (_mark_seen)
+        self._seen_new: list[DataFrame] = []
         self._seen_count = 0
         # set by build_frontier and resume(); gates the job diet and the
         # extraction's corpus prune
@@ -734,13 +741,13 @@ class Crawler:
 
     def _mark_seen(
         self, seen: DataFrame, fetched: DataFrame, round_col, materialize: bool = True,
-    ) -> tuple[DataFrame, DataFrame]:
-        """seen ∪ fetched urls → (merged, new_rows). ``fetched`` carries
-        ``url``; ``round_col`` is each row's fetch round and a url's lowest
-        one becomes its first_round. Callers advance self._seen_count
-        first. ``materialize=False`` returns the lazy union (delta-based
-        rounds: the caller compacts every compact_every rounds);
-        ``new_rows`` is the seen-set delta for catalog commits."""
+    ) -> DataFrame:
+        """seen ∪ fetched urls. ``fetched`` carries ``url``; ``round_col``
+        is each row's fetch round and a url's lowest one becomes its
+        first_round. Callers advance self._seen_count first.
+        ``materialize=False`` returns the lazy union (delta-based rounds:
+        the caller compacts every compact_every rounds). The new rows wait
+        in ``_seen_new`` for the next catalog commit to append them."""
         hashed = fetched.groupBy("url").agg(
             F.min(round_col).cast("int").alias("first_round")
         ).withColumn("url_hash", F.xxhash64("url"))
@@ -751,10 +758,9 @@ class Crawler:
         new_rows = hashed.select(
             "url_hash", "url", "first_round", F.to_timestamp(F.lit(stamp)).alias("fetched_at")
         )
+        self._seen_new.append(new_rows)
         merged = seen.unionByName(new_rows)
-        if not materialize:
-            return merged, new_rows
-        return self._materialize(merged, "urls_seen"), new_rows
+        return self._materialize(merged, "urls_seen") if materialize else merged
 
     # ----------------------------------------------------------- index phase
     def run_index_phase(self, seen: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -1033,7 +1039,7 @@ class Crawler:
                 self._seen_count += _total(per_round.get(rnd, {}), "fetched")
             self._note_lineage("index", rnd, per_round.get(rnd, {}))
         if self.index_cached and any(_total(c, "fetched") for c in per_round.values()):
-            seen, _ = self._mark_seen(
+            seen = self._mark_seen(
                 seen,
                 assigned.filter(~F.col("cache_hit")).select(
                     F.col("fetch_url").alias("url"), "round"
@@ -1141,7 +1147,7 @@ class Crawler:
             n_live = _total(counts, "fetched")
             if self.index_cached and n_live:
                 self._seen_count += n_live
-                seen, _ = self._mark_seen(
+                seen = self._mark_seen(
                     seen,
                     fused.filter(F.col("admitted") & ~F.col("cache_hit")).select(
                         F.col("fetch_url").alias("url")
@@ -1403,10 +1409,9 @@ class Crawler:
             ending = (
                 _total(counts, "deferred") == 0 and _total(counts, "retry") == 0 and not n_next
             )
-            seen_delta = None
             if self.instance_cached and n_admitted:
                 self._seen_count += n_admitted
-                seen, seen_delta = self._mark_seen(
+                seen = self._mark_seen(
                     seen,
                     decisions.filter(F.col("decision") == "fetched"),
                     F.col("round"),
@@ -1421,14 +1426,15 @@ class Crawler:
                 frontier = frontier.unionByName(next_pages)
                 self._frontier_rows += n_next
 
-            # delta-based rounds: the whole frontier/seen-set is rewritten
-            # only on compaction (every compact_every rounds) or when the
-            # loop ends; in between, state stays a bounded stack of lazy
+            # delta-based rounds: the whole frontier is rewritten only on
+            # compaction (every compact_every rounds) or when the loop ends;
+            # in between, state stays a bounded stack of lazy
             # broadcast-join/union layers over the last compacted parquet
-            # and the catalog carries per-round deltas (politeness-bounded
-            # size — never O(frontier)). A round that queued new pages
-            # rewrites and commits the whole frontier: a status delta cannot
-            # carry rows, so a kill redoes the round or finds them committed.
+            # and the catalog appends the round's status map
+            # (politeness-bounded size — never O(frontier)). A round that
+            # queued new pages rewrites and commits the whole frontier: a
+            # status row cannot carry rows, so a kill redoes the round or
+            # finds them committed.
             compact = ending or n_next or (rounds_done + 1) % self.compact_every == 0
             if compact:
                 frontier = self._materialize(frontier, "frontier_round")
@@ -1436,7 +1442,17 @@ class Crawler:
                     seen = self._materialize(seen, "urls_seen")
                     seen_layers = 0
             if self.catalog is not None:
-                metrics = {
+                # rounds_done == 0 forces a full frontier commit on the
+                # first round of crawl() and resume(): status rows in the
+                # catalog therefore always apply to a frontier this crawl
+                # wrote, never to an earlier crawl's
+                if compact or rounds_done == 0:
+                    tables = {"frontier": frontier, "frontier_status": None}
+                else:
+                    tables = {"frontier_status": Append(
+                        status_map.withColumn("round", F.lit(round_no))
+                    )}
+                self._commit(round_no, tables, {
                     "phase": "instance",
                     "round": round_no,
                     "fetched": n_admitted,
@@ -1446,29 +1462,7 @@ class Crawler:
                     "retried": _total(counts, "retry"),
                     "failed": _total(counts, "failed"),
                     "urls_seen": self._seen_count,
-                }
-                # rounds_done == 0 forces a FULL commit on the first round
-                # of crawl() and resume(): deltas in the manifest are
-                # therefore always relative to a full table this crawl
-                # wrote, never to an earlier crawl's frontier
-                if compact or rounds_done == 0:
-                    tables = {"frontier": frontier, "urls_seen": seen,
-                              "lineage": self.lineage_df()}
-                    if self._uncommitted_links is not None:
-                        # the crawl's first full snapshot carries its links,
-                        # so a resume after any later kill returns them
-                        tables["links"] = self._uncommitted_links
-                        self._uncommitted_links = None
-                    self.catalog.commit(
-                        round_no, tables, metrics=metrics,
-                        drop_prefixes=("frontier_delta_r", "urls_seen_delta_r"),
-                    )
-                else:
-                    deltas = {f"frontier_delta_r{round_no}": status_map,
-                              "lineage": self.lineage_df()}
-                    if seen_delta is not None:
-                        deltas[f"urls_seen_delta_r{round_no}"] = seen_delta
-                    self.catalog.commit(round_no, deltas, metrics=metrics)
+                })
             round_no += 1
             rounds_done += 1
             if stop_after_round is not None and round_no > stop_after_round:
@@ -1560,9 +1554,7 @@ class Crawler:
         status = F.col("decision")
         if not self.instance_cached:
             status = F.when(status == "cache_hit", "fetched").otherwise(status)
-        return decided.select("url_hash", status.alias("new_status")).dropDuplicates(
-            ["url_hash"]
-        )
+        return decided.select("url_hash", status.alias("new_status"))
 
     def _oneshot_eligible(self, stop_after_round: int | None) -> bool:
         """The politeness round schedule is PREDICTABLE — a queued url with
@@ -1682,7 +1674,7 @@ class Crawler:
 
         if self.instance_cached and n_fetched_total:
             # self._seen_count already advanced round by round above
-            seen, _ = self._mark_seen(
+            seen = self._mark_seen(
                 seen,
                 decisions.filter(in_cap & (F.col("decision") == "fetched")),
                 F.col("round"),
@@ -1691,71 +1683,61 @@ class Crawler:
         return frontier, seen
 
     def _merge_status(self, frontier: DataFrame, status_map: DataFrame) -> DataFrame:
-        """Apply one round's status delta (url_hash, new_status) to the
-        frontier: terminal statuses overwrite 'queued'; 'retry'/'failed'
-        increment attempts; 'retry' keeps the row queued. Used both by the
-        live loop and by resume-time delta replay (deltas MUST apply in
-        round order — a url decided 'retry' one round may be re-decided
-        later)."""
-        sm = status_map.withColumnRenamed("new_status", "_new_status")
+        """Apply status rows (url_hash, new_status) to the frontier's
+        queued rows: each 'retry' or 'failed' row adds one attempt, and the
+        url takes its non-retry status, if it has one. After a full
+        frontier a url gets zero or more 'retry' rows and then at most one
+        other status (a url re-enters only through _next_pages, which
+        forces a full commit), so one merge applies one round's map in the
+        loop and every round's committed rows on resume alike."""
+        new = F.col("new_status")
+        sm = status_map.groupBy("url_hash").agg(
+            F.count(F.when(new.isin("retry", "failed"), 1)).alias("_tries"),
+            F.max(F.when(new != "retry", new)).alias("_new_status"),
+        )
         if self.broadcast_frontier:
-            # one row per decided url per round — under the same contract
+            # at most one row per decided url — under the same contract
             # that makes the frontier broadcastable, broadcast it so the
             # frontier is never shuffled for the status merge
             sm = F.broadcast(sm)
+        queued = F.col("status") == "queued"
         return (
             frontier.join(sm, "url_hash", "left")
             .withColumn(
                 "attempts",
-                F.when(
-                    (F.col("status") == "queued")
-                    & F.col("_new_status").isin("retry", "failed"),
-                    F.col("attempts") + 1,
-                ).otherwise(F.col("attempts")),
+                F.when(queued & (F.col("_tries") > 0), F.col("attempts") + F.col("_tries"))
+                .otherwise(F.col("attempts")),
             )
             .withColumn(
                 "status",
-                F.when(
-                    (F.col("status") == "queued")
-                    & F.col("_new_status").isNotNull()
-                    & (F.col("_new_status") != "retry"),
-                    F.col("_new_status"),
-                ).otherwise(F.col("status")),
+                F.when(queued & F.col("_new_status").isNotNull(), F.col("_new_status"))
+                .otherwise(F.col("status")),
             )
-            .drop("_new_status")
+            .drop("_tries", "_new_status")
         )
 
     def _catalog_frontier(self, snap) -> DataFrame:
-        """Reconstruct the frontier at a snapshot: last full 'frontier'
-        table + per-round status deltas replayed in round order (full
-        commits drop superseded delta tables, so every delta present is
-        newer than the carried full table)."""
+        """The frontier at a snapshot: the last full 'frontier' table with
+        the 'frontier_status' rows appended since applied (a full commit
+        removes them)."""
         # projected: frontier tables committed before url_hash32 left the
         # frontier still carry it
         frontier = self.catalog.table(snap, "frontier").select(
             *schemas.FRONTIER.fieldNames()
         )
-        delta_names = sorted(
-            (n for n in snap.tables if n.startswith("frontier_delta_r")),
-            key=lambda n: int(n.rsplit("r", 1)[1]),
-        )
-        for name in delta_names:
-            frontier = self._merge_status(frontier, self.catalog.table(snap, name))
-        if delta_names:
-            frontier = self._materialize(frontier, "frontier_resume")
-        return frontier
+        if "frontier_status" not in snap.tables:
+            return frontier
+        status = self.catalog.table(snap, "frontier_status")
+        return self._materialize(self._merge_status(frontier, status), "frontier_resume")
 
     def _catalog_seen(self, snap) -> DataFrame:
-        """Reconstruct the seen-set at a snapshot: full table + newer
-        per-round deltas (grow-only, so a plain union)."""
-        seen = self.catalog.table(snap, "urls_seen")
-        delta_names = sorted(
-            (n for n in snap.tables if n.startswith("urls_seen_delta_r")),
-            key=lambda n: int(n.rsplit("r", 1)[1]),
-        )
-        for name in delta_names:
-            seen = seen.unionByName(self.catalog.table(snap, name))
-        return seen
+        """The committed seen-set at ``snap`` (empty without one); sets
+        ``_seen_count`` from the manifest."""
+        if snap is None or "urls_seen" not in snap.tables:
+            self._seen_count = 0
+            return self._empty_seen()
+        self._seen_count = self.catalog.rows(snap, "urls_seen")
+        return self.catalog.table(snap, "urls_seen")
 
     def _next_pages(self, frontier: DataFrame, decisions: DataFrame) -> DataFrame:
         """Instance pagination as frontier growth (the next_instance_page_url
@@ -1921,14 +1903,9 @@ class Crawler:
     def crawl(
         self, *, max_fetch_rounds: int = 64, stop_after_round: int | None = None
     ) -> CrawlResult:
-        self._lineage_rows = []
-        self._live_pins = None
-        seen = self._empty_seen()
-        if self.catalog is not None:
-            snap = self.catalog.latest()
-            if snap is not None and "urls_seen" in snap.tables:
-                seen = self._catalog_seen(snap)
-                self._seen_count = seen.count()
+        self._lineage_rows, self._lineage_committed = [], None
+        self._live_pins, self._seen_new = None, []
+        seen = self._catalog_seen(self.catalog.latest() if self.catalog is not None else None)
         # small-crawl job diet (see job_diet): a bounded seed list keeps the
         # index-candidate universe bounded too (<= seeds x pagination_max_
         # pages), so the diet can start before any counting; the fetch phase
@@ -1946,62 +1923,77 @@ class Crawler:
             )
         return self._finish(frontier, seen, links)
 
+    def _commit(self, round_no: int, tables: dict, metrics: dict):
+        """Commit ``tables`` plus what changed since the last commit: the
+        crawl's links until a commit holds them, the seen-set's new rows and
+        the lineage rows noted since, both appended. A crawl's first commit
+        replaces the lineage instead: a new crawl starts a new one."""
+        if self._uncommitted_links is not None:
+            tables["links"], self._uncommitted_links = self._uncommitted_links, None
+        if self._seen_new:
+            tables["urls_seen"] = Append(functools.reduce(DataFrame.unionByName, self._seen_new))
+            self._seen_new = []
+        done = self._lineage_committed
+        if done is None or done < len(self._lineage_rows):
+            rows = self.spark.createDataFrame(self._lineage_rows[done or 0:], schema=schemas.LINEAGE)
+            tables["lineage"] = rows if done is None else Append(rows)
+            self._lineage_committed = len(self._lineage_rows)
+        return self.catalog.commit(round_no, tables, metrics=metrics)
+
     def _finish(self, frontier: DataFrame, seen: DataFrame, links: DataFrame) -> CrawlResult:
         """The end of crawl() and resume(): extraction, then the final
-        catalog commit (links only if no round committed them)."""
+        catalog commit. A catalog crawl returns the committed lineage, so a
+        resumed one holds the rounds before the kill too."""
         # project the frontier down to what extraction consumes before it
         # rides the broadcast body join — the driver-side hash relation
         # shrinks ~2x vs broadcasting all frontier columns
         slim = frontier.select("url", "seed_id", "instance_index", "pagination_index", "status")
         corpus = self._pruned_corpus(slim, self._frontier_rows)
         extracted = self.extract(self.attach_bodies(slim, corpus))
-        result = CrawlResult(extracted, frontier, seen, self.lineage_df(), links)
-        if self.catalog is not None:
-            tables = {"extracted": extracted, "frontier": frontier,
-                      "urls_seen": seen, "lineage": result.lineage}
-            if self._uncommitted_links is not None:
-                tables["links"] = self._uncommitted_links
-                self._uncommitted_links = None
-            self.catalog.commit(
-                -1, tables,
-                metrics={"phase": "final", "urls_seen": self._seen_count},
-                drop_prefixes=("frontier_delta_r", "urls_seen_delta_r"),
-            )
-        return result
+        if self.catalog is None:
+            return CrawlResult(extracted, frontier, seen, self.lineage_df(), links)
+        snap = self._commit(
+            -1, {"extracted": extracted, "frontier": frontier, "frontier_status": None},
+            {"phase": "final", "urls_seen": self._seen_count},
+        )
+        return CrawlResult(extracted, frontier, seen, self.catalog.table(snap, "lineage"), links)
 
     def evict(self, urls: list[str]) -> None:
         """Re-crawl eviction: forget URLs so the next crawl refetches them.
 
         The seen-set is exact, so deletion is exact too: an anti-join drops
-        the rows and the snapshot is recommitted; the next crawl reads the
-        surviving rows."""
+        the rows and the snapshot replaces the seen-set with the survivors
+        (the one commit that rewrites it); the next crawl reads them."""
         if self.catalog is None:
             raise ValueError("evict requires a catalog")
         snap = self.catalog.latest()
         if snap is None or "urls_seen" not in snap.tables:
             raise ValueError("nothing to evict from")
-        seen = self._catalog_seen(snap)
         gone = self.spark.createDataFrame([(u,) for u in urls], "url string").select(
             F.xxhash64("url").alias("url_hash")
         )
-        remaining = seen.join(gone, "url_hash", "left_anti")
+        remaining = self._catalog_seen(snap).join(gone, "url_hash", "left_anti")
         self.catalog.commit(
             snap.round,
             {"urls_seen": remaining},
             metrics={"phase": "evict", "evicted": len(urls)},
-            drop_prefixes=("urls_seen_delta_r",),
         )
 
     def resume(self, *, max_fetch_rounds: int = 64) -> CrawlResult:
         """Continue from the last committed snapshot: reload frontier/seen,
-        re-run remaining fetch rounds, finish extraction. Identical ordering
-        and seen-set vs an uninterrupted run (north_star resume contract)."""
+        re-run remaining fetch rounds, finish extraction. Identical ordering,
+        seen-set and lineage vs an uninterrupted run (north_star resume
+        contract). Row counts come from the manifest: no Spark job runs
+        before the first round."""
         if self.catalog is None:
             raise ValueError("resume requires a catalog")
         snap = self.catalog.latest()
         if snap is None:
             raise ValueError("nothing to resume")
-        self._live_pins = None
+        # the new rounds' lineage appends to the committed one
+        self._lineage_rows = []
+        self._lineage_committed = 0 if "lineage" in snap.tables else None
+        self._live_pins, self._seen_new = None, []
         frontier = self._catalog_frontier(snap)
         seen = self._catalog_seen(snap)
         links = (
@@ -2009,8 +2001,7 @@ class Crawler:
             if "links" in snap.tables
             else self.spark.createDataFrame([], schema=_LINKS_SCHEMA)
         )
-        self._seen_count = seen.count()
-        self._frontier_rows = frontier.count()
+        self._frontier_rows = self.catalog.rows(snap, "frontier")
         start_round = snap.round + 1 if snap.round >= 0 else 0
         frontier, seen = self.run_fetch_rounds(
             frontier, seen, max_rounds=max_fetch_rounds, start_round=start_round

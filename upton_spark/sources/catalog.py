@@ -7,21 +7,31 @@ ordering and URL-seen set. The reference's only persistence is its stash
 directory (lib/upton/downloader.rb:122-150); the engine generalizes that to
 versioned table state.
 
-Two implementations behind one seam (SURVEY.md §7.4):
+The catalog owns table history, as Iceberg does (SURVEY.md §7.4): a
+snapshot maps each table name to its data files, the writer's schema and
+its row count. A commit names what changed and nothing else. Each value of
+its ``tables`` dict is a DataFrame (replace the table), an :class:`Append`
+(add its rows as new files; earlier files stay listed) or ``None`` (remove
+the table); tables it does not name carry forward from the parent. Row
+counts come from an ``Observation`` on the write itself, so neither a
+commit nor a reader spends a Spark job on counting, and reads pass the
+recorded schema, so none spends one on inferring it.
+
+Two implementations behind one seam:
 
 * :class:`ManifestCatalog` — Parquet data files + one JSON manifest per
-  snapshot (files, metrics, parent pointer), atomic via write-to-temp+rename.
-  Used everywhere in this sandbox: the local Spark distribution ships no
-  Iceberg runtime jars.
+  snapshot (files, schema, rows, metrics, parent pointer), atomic via
+  write-to-temp+rename. Used everywhere in this sandbox: the local Spark
+  distribution ships no Iceberg runtime jars.
 * :class:`IcebergCatalog` — thin adapter that issues real Iceberg
-  ``writeTo(...).createOrReplace()`` commits when
+  ``writeTo(...)`` commits (``createOrReplace`` or ``append``) when
   ``org.apache.iceberg.spark.SparkCatalog`` is on the classpath; raises a
   clear error otherwise.
 
 Both also serve the side purpose that makes the iterative crawl loop viable
-at all: committing a round materializes the DataFrames to Parquet and
-re-reads them, truncating Catalyst lineage that would otherwise grow without
-bound across rounds.
+at all: committing a round materializes the DataFrames and re-reading them
+truncates Catalyst lineage that would otherwise grow without bound across
+rounds.
 """
 
 from __future__ import annotations
@@ -31,7 +41,7 @@ import os
 import tempfile
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 
 @dataclass
@@ -39,47 +49,77 @@ class Snapshot:
     snapshot_id: int
     round: int
     parent: int | None
-    tables: dict[str, str] = field(default_factory=dict)  # name -> data path
+    # name -> {"files": [data paths], "schema": StructType json, "rows": int}
+    tables: dict[str, dict] = field(default_factory=dict)
     metrics: dict = field(default_factory=dict)
 
 
-class ManifestCatalog:
-    """Parquet + JSON-manifest snapshot catalog (Iceberg-style, jar-free)."""
+@dataclass(frozen=True)
+class Append:
+    """A commit value that adds ``df``'s rows to a table instead of
+    replacing it (a table the parent lacks is created)."""
 
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-        os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
+    df: DataFrame
 
-    # -- write -------------------------------------------------------------
+
+class _Catalog:
+    """The commit logic both catalogs share; subclasses write one table
+    (``_write``) and publish a snapshot (``_publish``)."""
+
     def commit(
         self,
         round_no: int,
-        tables: dict[str, DataFrame],
+        tables: dict[str, DataFrame | Append | None],
         metrics: dict | None = None,
-        drop_prefixes: tuple[str, ...] = (),
     ) -> Snapshot:
-        """Commit a snapshot. ``drop_prefixes`` stops carrying forward parent
-        tables whose name matches — used when a full-table compaction commit
-        supersedes the per-round delta tables (``frontier_delta_r*``,
-        ``urls_seen_delta_r*``) accumulated since the last full commit."""
         parent = self.latest()
         sid = (parent.snapshot_id + 1) if parent else 1
-        snap = Snapshot(sid, round_no, parent.snapshot_id if parent else None, {}, metrics or {})
-        for name, df in tables.items():
-            path = os.path.join(self.root, "data", name, f"snap={sid:08d}")
-            df.write.mode("overwrite").parquet(path)
-            snap.tables[name] = path
-        # carry forward tables not rewritten this round
-        if parent:
-            for name, path in parent.tables.items():
-                if any(name.startswith(p) for p in drop_prefixes):
-                    continue
-                snap.tables.setdefault(name, path)
-        self._write_manifest(snap)
+        entries = dict(parent.tables) if parent else {}
+        for name, value in tables.items():
+            if value is None:
+                entries.pop(name, None)
+                continue
+            append = isinstance(value, Append)
+            df = value.df if append else value
+            old = entries.get(name) if append else None
+            obs = Observation()
+            files = self._write(
+                name, df.observe(obs, F.count(F.lit(1)).alias("rows")), sid, old
+            )
+            rows = obs.get["rows"]
+            entries[name] = (
+                {"files": files, "schema": old["schema"], "rows": old["rows"] + rows}
+                if old
+                else {"files": files, "schema": df.schema.jsonValue(), "rows": rows}
+            )
+        snap = Snapshot(
+            sid, round_no, parent.snapshot_id if parent else None, entries, metrics or {}
+        )
+        self._publish(snap)
         return snap
 
-    def _write_manifest(self, snap: Snapshot) -> None:
+    def rows(self, snap: Snapshot, name: str) -> int:
+        """The table's row count at ``snap``, from the manifest."""
+        return snap.tables[name]["rows"]
+
+
+class ManifestCatalog(_Catalog):
+    """Parquet + JSON-manifest snapshot catalog (Iceberg-style, jar-free).
+    Data paths are absolute, so a manifest copied into another catalog root
+    still reads its files."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark = spark
+        self.root = os.path.abspath(root)
+        os.makedirs(os.path.join(self.root, "snapshots"), exist_ok=True)
+
+    # -- write -------------------------------------------------------------
+    def _write(self, name: str, df: DataFrame, sid: int, old: dict | None) -> list[str]:
+        path = os.path.join(self.root, "data", name, f"snap={sid:08d}")
+        df.write.mode("overwrite").parquet(path)
+        return (old["files"] if old else []) + [path]
+
+    def _publish(self, snap: Snapshot) -> None:
         payload = {
             "snapshot_id": snap.snapshot_id,
             "round": snap.round,
@@ -116,7 +156,9 @@ class ManifestCatalog:
         return self.load(ids[-1]) if ids else None
 
     def table(self, snap: Snapshot, name: str) -> DataFrame:
-        return self.spark.read.parquet(snap.tables[name])
+        entry = snap.tables[name]
+        schema = T.StructType.fromJson(entry["schema"])
+        return self.spark.read.schema(schema).parquet(*entry["files"])
 
 
 def iceberg_on_classpath(spark: SparkSession) -> bool:
@@ -129,20 +171,21 @@ def iceberg_on_classpath(spark: SparkSession) -> bool:
         return False
 
 
-class IcebergCatalog:
+class IcebergCatalog(_Catalog):
     """Real Iceberg snapshot commits — requires the Iceberg Spark runtime jar.
 
-    Same ``commit``/``latest``/``table`` contract as ManifestCatalog (one
-    shared contract test pins it: tests/test_sinks_and_evict.py): commit
-    returns a Snapshot carrying metrics and the carried-forward table map
-    (drop_prefixes honored), so engine code is catalog-agnostic. Physical
-    differences: data lands as Iceberg ``createOrReplace`` table commits
-    (Iceberg's own metadata tree supersedes the JSON manifest; metrics are
-    additionally set as table properties on the first table committed), and
-    ``table`` reads back through the catalog identifier. The snapshot LIST
-    is tracked in-process for interface parity — a restarting driver should
-    resume from Iceberg's snapshot log, which this sandbox (jar-less) can't
-    exercise."""
+    Same ``commit``/``latest``/``table``/``rows`` contract as
+    ManifestCatalog (one shared contract test pins it:
+    tests/test_multimodal_and_streaming.py), so engine code is
+    catalog-agnostic. Physical differences: a replaced table is an Iceberg
+    ``createOrReplace`` commit and an appended one an Iceberg ``append``
+    commit (Iceberg's own metadata tree lists the data files, so an entry's
+    ``files`` is the table identifier); metrics are additionally set as
+    table properties on the snapshot's first table; ``table`` reads back
+    through the catalog identifier, which always holds the table's current
+    state. The snapshot LIST is tracked in-process for interface parity — a
+    restarting driver should resume from Iceberg's snapshot log, which this
+    sandbox (jar-less) can't exercise."""
 
     def __init__(self, spark: SparkSession, namespace: str = "upton"):
         if not iceberg_on_classpath(spark):
@@ -154,36 +197,25 @@ class IcebergCatalog:
         self.namespace = namespace
         self._snapshots: list[Snapshot] = []
 
-    def commit(
-        self,
-        round_no: int,
-        tables: dict[str, DataFrame],
-        metrics: dict | None = None,
-        drop_prefixes: tuple[str, ...] = (),
-    ) -> Snapshot:
-        parent = self.latest()
-        sid = (parent.snapshot_id + 1) if parent else 1
-        snap = Snapshot(sid, round_no, parent.snapshot_id if parent else None, {}, metrics or {})
-        for name, df in tables.items():
-            ident = f"{self.namespace}.{name}"
+    def _write(self, name: str, df: DataFrame, sid: int, old: dict | None) -> list[str]:
+        ident = f"{self.namespace}.{name}"
+        if old:
+            df.writeTo(ident).append()
+        else:
             df.writeTo(ident).using("iceberg").createOrReplace()
-            snap.tables[name] = ident
-        if metrics and tables:
-            first = next(iter(snap.tables.values()))
+        return [ident]
+
+    def _publish(self, snap: Snapshot) -> None:
+        if snap.metrics and snap.tables:
+            first = next(iter(snap.tables.values()))["files"][0]
             props = ", ".join(
-                f"'upton.metrics.{k}'='{v}'" for k, v in metrics.items()
+                f"'upton.metrics.{k}'='{v}'" for k, v in snap.metrics.items()
             )
             try:
                 self.spark.sql(f"ALTER TABLE {first} SET TBLPROPERTIES ({props})")
             except Exception:
                 pass  # metrics are advisory; the snapshot object carries them
-        if parent:
-            for name, ident in parent.tables.items():
-                if any(name.startswith(p) for p in drop_prefixes):
-                    continue
-                snap.tables.setdefault(name, ident)
         self._snapshots.append(snap)
-        return snap
 
     def snapshots(self) -> list[int]:
         return [s.snapshot_id for s in self._snapshots]
@@ -198,4 +230,4 @@ class IcebergCatalog:
         raise KeyError(snapshot_id)
 
     def table(self, snap: Snapshot, name: str) -> DataFrame:
-        return self.spark.read.table(snap.tables[name])
+        return self.spark.read.table(snap.tables[name]["files"][0])
