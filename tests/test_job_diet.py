@@ -1,8 +1,8 @@
 """Small-crawl job-diet semantics (crawler.py:job_diet).
 
-crawl() disables AQE while the crawl is provably small (seeds and built
-frontier under the JOB_DIET bounds) and restores the session conf either
-way. The diet must be invisible in results: a crawl with the diet forced
+crawl() and resume() disable AQE while the crawl is provably small (seeds
+and built frontier under the JOB_DIET bounds) and restore the session conf
+either way. The diet must be invisible in results: a crawl with the diet forced
 off is bit-identical (extraction, seen-set, per-round lineage) to the
 default dieted run — AQE only re-plans partitioning/join strategy, and
 every small-side join on these paths carries an explicit broadcast hint.
@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import upton_spark.crawler as crawler_mod
-from upton_spark.crawler import Crawler, SeedSpec
+from upton_spark.crawler import Crawler, KilledCrawl, SeedSpec
 from upton_spark.sources.catalog import ManifestCatalog
 from upton_spark.sources.fixtures import BASE, fixture_pages
 
@@ -151,6 +151,29 @@ def test_frontier_overflow_restores_aqe_for_fetch(spark, pages, monkeypatch):
     result = crawler.crawl()
     assert seen == ["true"]
     # correctness unaffected by the mid-crawl regime flip
+    assert result.extracted.agg(F.count("*")).collect()[0][0] == 4
+
+
+def test_small_resume_runs_its_fetch_rounds_under_the_diet(spark, pages, tmp_path):
+    """resume() makes the same diet decision as crawl(), from the seed
+    count and the committed frontier's row count in the manifest."""
+    seed = _seed(sleep_time_between_requests=30.0)
+    cat = ManifestCatalog(spark, str(tmp_path / "cat"))
+    with pytest.raises(KilledCrawl):
+        Crawler(spark, pages, [seed], round_budget_s=30.0, catalog=cat).crawl(stop_after_round=0)
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    crawler = Crawler(spark, pages, [seed], round_budget_s=30.0, catalog=cat)
+    orig = crawler.run_fetch_rounds
+
+    def spying_fetch(*a, **kw):
+        seen.append(spark.conf.get("spark.sql.adaptive.enabled"))
+        return orig(*a, **kw)
+
+    seen = []
+    crawler.run_fetch_rounds = spying_fetch
+    result = crawler.resume()
+    assert seen == ["false"]
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert result.extracted.agg(F.count("*")).collect()[0][0] == 4
 
 

@@ -2,10 +2,13 @@
 politeness deferral — the engine-side contracts from the north_star that the
 reference has no direct specs for."""
 
+import os
+import shutil
 from urllib.parse import parse_qs, urlparse
 
 import pytest
 
+import upton_spark.crawler as crawler_mod
 from upton_spark import schemas, urlkit
 from upton_spark.crawler import Crawler, KilledCrawl, SeedSpec
 from upton_spark.operators.robots import robots_rules_df
@@ -182,12 +185,13 @@ def test_resume_over_finished_crawl_returns_its_own_links(spark, pages, tmp_path
     assert _texts(resumed) == _texts(ref)
 
 
-def test_delta_commits_and_resume_across_compaction(spark, pages, tmp_path):
+def test_delta_commits_and_resume_across_compaction(spark, pages, tmp_path, monkeypatch):
     """At-scale round commits are DELTA-based: between compactions a round
     appends only its status map (politeness-bounded) to ``frontier_status``,
-    never the whole frontier; the full frontier lands every compact_every
+    never the whole frontier; the full frontier lands every COMPACT_EVERY
     rounds and at the end, removing the status rows. Resume must apply the
     status rows and stay byte-identical across a compaction boundary."""
+    monkeypatch.setattr(crawler_mod, "COMPACT_EVERY", 2)
     ref = Crawler(
         spark, pages, [basic_seed(sleep_time_between_requests=30.0)], round_budget_s=30.0
     ).crawl()
@@ -200,10 +204,10 @@ def test_delta_commits_and_resume_across_compaction(spark, pages, tmp_path):
         [basic_seed(sleep_time_between_requests=30.0)],
         round_budget_s=30.0,
         catalog=cat,
-        compact_every=2,
     )
     with pytest.raises(KilledCrawl):
-        crawler.crawl(stop_after_round=2)  # rounds 0(full),1(compact),2(delta)
+        # the build commit (full), rounds 0 (delta), 1 (compact), 2 (delta)
+        crawler.crawl(stop_after_round=2)
     snap = cat.latest()
     compacted = cat.load(snap.parent)
     # round 2 appended only its status rows; the frontier is round 1's
@@ -216,11 +220,10 @@ def test_delta_commits_and_resume_across_compaction(spark, pages, tmp_path):
         [basic_seed(sleep_time_between_requests=30.0)],
         round_budget_s=30.0,
         catalog=cat,
-        compact_every=2,
     ).resume()
     assert _texts(resumed) == ref_texts
     assert _links(resumed) == _links(ref)
-    # the final commit writes the full frontier and removes the status rows
+    # the ending round writes the full frontier and removes the status rows
     final = cat.latest()
     assert "frontier_status" not in final.tables
 
@@ -265,7 +268,7 @@ def test_robots_gate_blocks_before_fetch(spark, pages):
     assert blocked_total == 1
 
 
-def test_retry_state_survives_kill_and_resume(spark, pages, tmp_path):
+def test_retry_state_survives_kill_and_resume(spark, pages, tmp_path, monkeypatch):
     """attempts/status are part of the delta-committed round state: killing
     a crawl mid-retry and resuming must converge to the same terminal
     attempts, statuses, and extraction as an uninterrupted run."""
@@ -282,8 +285,9 @@ def test_retry_state_survives_kill_and_resume(spark, pages, tmp_path):
             fetch_failures=failures,
             max_fetch_attempts=3,
             catalog=catalog,
-            compact_every=2,
         )
+
+    monkeypatch.setattr(crawler_mod, "COMPACT_EVERY", 2)
 
     ref = mk().crawl()
     ref_rows = {r["url"]: (r["status"], r["attempts"]) for r in ref.frontier.collect()}
@@ -905,40 +909,185 @@ def test_resume_after_a_kill_inside_instance_pagination(spark, pages, tmp_path):
     assert _frontier_multiset(resumed, *cols) == _frontier_multiset(ref, *cols)
 
 
+def _crawl_state(result, cat):
+    """What a resumed crawl must share with the uninterrupted one:
+    extraction, frontier, seen-set and lineage, in the result and in the
+    catalog's latest snapshot."""
+    return (
+        _texts(result),
+        _frontier_multiset(result, "url", "pagination_index", "status", "attempts"),
+        sorted((r["url"], r["first_round"]) for r in result.urls_seen.collect()),
+        sorted(tuple(r) for r in result.lineage.collect()),
+        sorted(tuple(r) for r in cat.table(cat.latest(), "lineage").collect()),
+    )
+
+
 def test_kill_at_every_round_of_a_paginated_crawl_resumes_identically(
-    spark, pages, tmp_path
+    spark, pages, tmp_path, monkeypatch
 ):
     """Pagination rounds run inside the fetch loop, so stop_after_round
     reaches every commit before the final one. Killed after any round
-    (deferral, full and delta commits mixed by compact_every=2) and
+    (deferral, full and delta commits mixed by COMPACT_EVERY=2) and
     resumed, the crawl ends with the uninterrupted crawl's extraction,
     frontier, seen-set and lineage, in the result and in the final
     snapshot's lineage table."""
-
-    def state(result, cat):
-        return (
-            _texts(result),
-            _frontier_multiset(result, "url", "pagination_index", "status", "attempts"),
-            sorted((r["url"], r["first_round"]) for r in result.urls_seen.collect()),
-            sorted(tuple(r) for r in result.lineage.collect()),
-            sorted(tuple(r) for r in cat.table(cat.latest(), "lineage").collect()),
-        )
-
+    monkeypatch.setattr(crawler_mod, "COMPACT_EVERY", 2)
     ref_cat = ManifestCatalog(spark, str(tmp_path / "ref"))
-    ref = _paginated_crawler(spark, pages, ref_cat, compact_every=2).crawl()
-    want = state(ref, ref_cat)
+    ref = _paginated_crawler(spark, pages, ref_cat).crawl()
+    want = _crawl_state(ref, ref_cat)
     n_rounds = ref.lineage.filter("phase = 'instance'").select("round").distinct().count()
     # one token per round: 5 page-0 rows, then ?p=2 and ?p=3
     assert n_rounds == 7
     for r in range(n_rounds):
         cat = ManifestCatalog(spark, str(tmp_path / f"kill{r}"))
         with pytest.raises(KilledCrawl):
-            _paginated_crawler(spark, pages, cat, compact_every=2).crawl(stop_after_round=r)
-        resumed = _paginated_crawler(spark, pages, cat, compact_every=2).resume()
-        assert state(resumed, cat) == want, f"killed after round {r}"
+            _paginated_crawler(spark, pages, cat).crawl(stop_after_round=r)
+        resumed = _paginated_crawler(spark, pages, cat).resume()
+        assert _crawl_state(resumed, cat) == want, f"killed after round {r}"
 
 
-def test_kill_after_each_retry_round_resumes_identically(spark, pages, tmp_path):
+@pytest.fixture(scope="module")
+def paginated_ref(spark, pages, tmp_path_factory):
+    """(state, catalog) of one uninterrupted catalog crawl of the paginated
+    seed pair, with COMPACT_EVERY=2."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(crawler_mod, "COMPACT_EVERY", 2)
+        cat = ManifestCatalog(spark, str(tmp_path_factory.mktemp("paginated_ref")))
+        return _crawl_state(_paginated_crawler(spark, pages, cat).crawl(), cat), cat
+
+
+def test_kill_after_the_build_commit_resumes_identically(
+    spark, pages, tmp_path, monkeypatch, paginated_ref
+):
+    """A catalog crawl's first snapshot is its built frontier: killed after
+    that commit and before fetch round 0, the crawl resumes to the
+    uninterrupted crawl's extraction, frontier, seen-set and lineage."""
+    monkeypatch.setattr(crawler_mod, "COMPACT_EVERY", 2)
+    want, _ = paginated_ref
+    cat = ManifestCatalog(spark, str(tmp_path / "cat"))
+    crawler = _paginated_crawler(spark, pages, cat)
+
+    def killed(*args, **kwargs):
+        raise KilledCrawl(0)
+
+    monkeypatch.setattr(crawler, "run_fetch_rounds", killed)
+    with pytest.raises(KilledCrawl):
+        crawler.crawl()
+    assert cat.latest().metrics["phase"] == "frontier"
+    resumed = _paginated_crawler(spark, pages, cat).resume()
+    assert _crawl_state(resumed, cat) == want
+
+
+def test_resume_without_a_committed_frontier_raises(spark, pages, tmp_path, monkeypatch):
+    """A history-only catalog, or one whose crawl died before its first
+    commit (in the index phase), has nothing to resume: resume() names
+    the snapshot that lacks a frontier."""
+    cat = ManifestCatalog(spark, str(tmp_path / "cat"))
+    row = (0, f"{BASE}/webinar.html", 0, None)
+    history = cat.commit(
+        -1, {"urls_seen": spark.createDataFrame([row], schemas.URLS_SEEN)},
+        metrics={"phase": "history"},
+    )
+    crawler = Crawler(spark, pages, [basic_seed()], catalog=cat)
+
+    def index_killed(*args, **kwargs):
+        raise KilledCrawl(0)
+
+    monkeypatch.setattr(crawler, "run_index_phase", index_killed)
+    with pytest.raises(KilledCrawl):
+        crawler.crawl()
+    assert cat.snapshots() == [history.snapshot_id]
+    with pytest.raises(ValueError, match=f"snapshot {history.snapshot_id} has no frontier"):
+        Crawler(spark, pages, [basic_seed()], catalog=cat).resume()
+
+
+def test_kill_between_two_table_writes_of_a_commit_resumes_identically(
+    spark, pages, tmp_path, monkeypatch, paginated_ref
+):
+    """A commit publishes its manifest after writing every table, so a
+    crawl killed between two table writes of a round commit leaves no
+    snapshot for that round; the resume redoes the round and ends with the
+    uninterrupted crawl's extraction, frontier, seen-set and lineage."""
+    monkeypatch.setattr(crawler_mod, "COMPACT_EVERY", 2)
+    want, ref_cat = paginated_ref
+    # round 1 compacts: it writes the frontier, then its new seen rows
+    # and lineage
+    target = next(s.snapshot_id for s in map(ref_cat.load, ref_cat.snapshots()) if s.round == 1)
+    root = str(tmp_path / "cat")
+    cat = ManifestCatalog(spark, root)
+    written = []
+    write = cat._write
+
+    def killed_write(name, df, sid, old):
+        if sid == target:
+            written.append(name)
+            if len(written) == 2:
+                raise KilledCrawl(1)
+        return write(name, df, sid, old)
+
+    monkeypatch.setattr(cat, "_write", killed_write)
+    with pytest.raises(KilledCrawl):
+        _paginated_crawler(spark, pages, cat).crawl()
+    assert written[0] == "frontier" and len(written) == 2
+    assert cat.snapshots()[-1] == target - 1
+    # a new process: the same root, an unpatched catalog
+    fresh = ManifestCatalog(spark, root)
+    resumed = _paginated_crawler(spark, pages, fresh).resume()
+    assert _crawl_state(resumed, fresh) == want
+
+
+def test_resume_from_every_snapshot_of_a_crawl_matches_it(
+    spark, pages, tmp_path, monkeypatch, paginated_ref
+):
+    """The catalog-truncation form of kill/resume identity: for each
+    snapshot s of an uninterrupted crawl (its build commit and its final
+    commit included), a catalog holding only the manifests up to s resumes
+    to that crawl's extraction, frontier, seen-set and lineage."""
+    monkeypatch.setattr(crawler_mod, "COMPACT_EVERY", 2)
+    want, ref_cat = paginated_ref
+    ids = ref_cat.snapshots()
+    assert len(ids) == 9  # the build commit, 7 rounds, the final commit
+    for n, s in enumerate(ids, 1):
+        root = tmp_path / f"upto{s}"
+        cat = ManifestCatalog(spark, str(root))
+        for sid in ids[:n]:
+            name = f"{sid:08d}.json"
+            shutil.copy(os.path.join(ref_cat.root, "snapshots", name), root / "snapshots" / name)
+        resumed = _paginated_crawler(spark, pages, cat).resume()
+        assert _crawl_state(resumed, cat) == want, f"resumed from snapshot {s}"
+
+
+def test_catalog_crawl_writes_each_table_once_per_commit(spark, pages, tmp_path, monkeypatch):
+    """With a catalog the commit is the crawl's only checkpoint: crawl()
+    and resume() pin no scratch copy of the frontier or the seen-set (the
+    index phase's seen rows included), the final commit keeps the ending
+    round's frontier files, and the result's extraction reads the
+    committed table. Without a catalog the frontier is pinned in scratch."""
+    monkeypatch.setattr(crawler_mod, "COMPACT_EVERY", 2)
+    labels = []
+    materialize = Crawler._materialize
+
+    def spy(self, df, label):
+        labels.append(label)
+        return materialize(self, df, label)
+
+    monkeypatch.setattr(Crawler, "_materialize", spy)
+    cat = ManifestCatalog(spark, str(tmp_path / "cat"))
+    with pytest.raises(KilledCrawl):
+        _paginated_crawler(spark, pages, cat, index_cached=True).crawl(stop_after_round=2)
+    result = _paginated_crawler(spark, pages, cat, index_cached=True).resume()
+    assert not {"frontier", "frontier_round", "urls_seen"} & set(labels), labels
+    final = cat.latest()
+    assert final.metrics["phase"] == "final"
+    assert final.tables["frontier"] == cat.load(final.parent).tables["frontier"]
+    files = {os.path.dirname(urlparse(f).path) for f in result.extracted.inputFiles()}
+    assert files == set(final.tables["extracted"]["files"])
+    labels.clear()
+    _paginated_crawler(spark, pages).crawl()
+    assert {"frontier", "frontier_round"} <= set(labels)
+
+
+def test_kill_after_each_retry_round_resumes_identically(spark, pages, tmp_path, monkeypatch):
     """Retries cross a kill: killed after each delta round whose status map
     holds a 'retry' and resumed, the crawl ends with the uninterrupted
     crawl's frontier statuses and attempts, seen-set and extraction. The
@@ -952,9 +1101,11 @@ def test_kill_after_each_retry_round_resumes_identically(spark, pages, tmp_path)
     def mk(catalog):
         return Crawler(
             spark, pages, [basic_seed(sleep_time_between_requests=30.0)],
-            round_budget_s=30.0, compact_every=3, fetch_failures=failures,
+            round_budget_s=30.0, fetch_failures=failures,
             max_fetch_attempts=3, catalog=catalog,
         )
+
+    monkeypatch.setattr(crawler_mod, "COMPACT_EVERY", 3)
 
     def state(result):
         return (
@@ -986,17 +1137,21 @@ def test_resume_runs_no_spark_job_before_its_first_round(spark, pages, tmp_path,
     """resume() takes the seen-set and frontier row counts from the
     manifest and reads each table with its recorded schema, so reloading a
     snapshot committed in full costs no Spark job."""
-    seed = basic_seed(sleep_time_between_requests=30.0)
-    cat = ManifestCatalog(spark, str(tmp_path / "cat"))
-    with pytest.raises(KilledCrawl):
-        Crawler(spark, pages, [seed], round_budget_s=30.0, catalog=cat).crawl(stop_after_round=0)
-    assert "frontier_status" not in cat.latest().tables  # round 0 commits in full
 
     class FirstRound(Exception):
         pass
 
     def first_round(*args, **kwargs):
         raise FirstRound
+
+    seed = basic_seed(sleep_time_between_requests=30.0)
+    cat = ManifestCatalog(spark, str(tmp_path / "cat"))
+    killed = Crawler(spark, pages, [seed], round_budget_s=30.0, catalog=cat)
+    monkeypatch.setattr(killed, "run_fetch_rounds", first_round)
+    with pytest.raises(FirstRound):
+        killed.crawl()
+    # the crawl died after its build commit, which holds the full frontier
+    assert "frontier_status" not in cat.latest().tables
 
     crawler = Crawler(spark, pages, [seed], round_budget_s=30.0, catalog=cat)
     monkeypatch.setattr(crawler, "run_fetch_rounds", first_round)

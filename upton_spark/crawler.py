@@ -27,9 +27,15 @@ one stateful round loop.
   once — a url of per-host rank r is fetched in round (r-1) div tokens
   (``politeness.schedule_per_host``). The loop runs when something
   perturbs rounds or needs a boundary per round: injected fetch failures,
-  a live transport, a catalog (every round is a snapshot commit carrying
-  per-partition lineage → kill/resume-safe), a simulated kill,
-  heterogeneous seed sleeps, or the next_instance_page_url hook.
+  a live transport, a catalog, a simulated kill, heterogeneous seed
+  sleeps, or the next_instance_page_url hook.
+* **catalog = checkpoint** — a catalog crawl commits its built frontier
+  (with links, index lineage and index seen rows) as its first snapshot,
+  then one snapshot per fetch round carrying per-partition lineage, and
+  continues from the tables it committed, so the commit is the only write
+  of its state: no scratch copy of the frontier or seen-set. A crawl
+  killed any time after its frontier exists resumes from the latest
+  snapshot (kill/resume-safe); the final commit adds ``extracted``.
 * **extraction phase** — the user "block" as a pandas UDF over the html
   column, in the reference's three canned shapes (text / list / table,
   lib/upton/utils.rb:20-40) plus identity (the reference's default block
@@ -94,6 +100,16 @@ JOB_DIET_MAX_ROWS = 20_000
 JOB_DIET_SHUFFLE_WIDTH = 4
 # salted frontier partitioning: rows per salt bucket of a hot host
 FRONTIER_ROWS_PER_BUCKET = 100_000
+# fetch-loop compaction period: between compactions the loop keeps frontier
+# updates DELTA-based (a catalog round appends only its politeness-bounded
+# status map instead of rewriting the frontier, which at a 10^10-row
+# frontier would make every round O(frontier)). The full frontier is written
+# on absolute rounds r with (r + 1) % COMPACT_EVERY == 0, on rounds that
+# queue new pages and when the loop ends, bounding lazy plan depth and the
+# status rows a resume applies; the in-memory seen-set is re-read from that
+# write on the same rounds. A resumed crawl compacts on the same rounds as
+# an uninterrupted one.
+COMPACT_EVERY = 8
 
 
 @dataclass
@@ -198,7 +214,6 @@ class Crawler:
         max_fetch_attempts: int = 3,
         index_fn: Callable[[DataFrame], DataFrame] | None = None,
         clock: str | None = None,
-        compact_every: int = 8,
         url_priorities: DataFrame | None = None,
         host_budgets: DataFrame | None = None,
         blocklist_hosts: DataFrame | None = None,
@@ -208,15 +223,12 @@ class Crawler:
         block_traps: bool = False,
         host_delays: DataFrame | None = None,
     ):
-        # ``compact_every``: the fetch loop keeps frontier updates
-        # DELTA-based — a round appends only its status map to the catalog
-        # (politeness-bounded size) instead of rewriting the whole
-        # frontier, which at a 10^10-row frontier would make every round
-        # O(frontier). The full frontier is materialized/committed on entry,
-        # every ``compact_every`` rounds (bounding lazy plan depth and the
-        # status rows a resume applies), and when the loop ends; the
-        # in-memory seen-set is rewritten on the same rounds. The catalog's
-        # seen-set and lineage only ever grow by appends.
+        # ``catalog``: the crawl's only checkpoint. Its first commit holds
+        # the built frontier, every fetch round commits (the full frontier
+        # on COMPACT_EVERY's rounds, else an appended status map) and the
+        # crawl continues from the tables it committed, so nothing of its
+        # state is also copied to scratch. The catalog's seen-set and
+        # lineage only ever grow by appends.
         # ``clock`` pins the fetched_at stash-annotation timestamp (the
         # reference stamps Time.now into cached files, downloader.rb:100-116)
         # to a fixed 'yyyy-MM-dd HH:mm:ss' value for deterministic tests;
@@ -262,7 +274,6 @@ class Crawler:
         self.max_fetch_attempts = max_fetch_attempts
         self.index_fn = index_fn
         self.clock = clock
-        self.compact_every = max(1, compact_every)
         # Crawl-planning inputs (operators.webgraph family), composed into
         # the loop the way the reference's `scrape` composes its pieces
         # (lib/upton.rb:47-51) — a prioritized re-crawl is one constructor
@@ -372,9 +383,6 @@ class Crawler:
         # set by build_frontier and resume(); gates the job diet and the
         # extraction's corpus prune
         self._frontier_rows = 0
-        # links of a catalog crawl, written with the fetch phase's first full
-        # snapshot so a resumed crawl returns them (see run_fetch_rounds)
-        self._uncommitted_links: DataFrame | None = None
         # (url, html) the live transport fetched this crawl (_live_bodies)
         self._live_pins: DataFrame | None = None
         self.seeds_df = spark.createDataFrame(
@@ -462,9 +470,10 @@ class Crawler:
         """Pin round state as parquet + re-read. This BOTH truncates Catalyst
         lineage (the iterative loop's plan otherwise grows combinatorially —
         each round's frontier references the previous round several times)
-        AND matches what a catalog snapshot commit does at scale. cache() is
-        not a substitute: it keeps the logical plan, and planning time
-        explodes after a few rounds."""
+        AND matches what a catalog snapshot commit does at scale (a catalog
+        crawl pins its frontier and seen-set by committing them instead).
+        cache() is not a substitute: it keeps the logical plan, and planning
+        time explodes after a few rounds."""
         self._scratch_n += 1
         path = os.path.join(self._scratch, f"{self._scratch_n:04d}_{label}")
         df.write.mode("overwrite").parquet(path)
@@ -513,7 +522,11 @@ class Crawler:
             conf.set("spark.sql.adaptive.enabled", prev)
             conf.set("spark.sql.shuffle.partitions", prev_width)
 
-    def _maybe_job_diet(self, small: bool):
+    def _job_diet(self):
+        """job_diet() while the seed list and the frontier built so far
+        (``_frontier_rows``: 0 before build_frontier, the manifest's count
+        on resume) stay under the JOB_DIET bounds."""
+        small = len(self.seeds) <= JOB_DIET_MAX_SEEDS and self._frontier_rows <= JOB_DIET_MAX_ROWS
         return self.job_diet() if small else contextlib.nullcontext()
 
     def _pages_is_raw_scan(self) -> bool:
@@ -746,8 +759,9 @@ class Crawler:
         is each row's fetch round and a url's lowest one becomes its
         first_round. Callers advance self._seen_count first.
         ``materialize=False`` returns the lazy union (delta-based rounds:
-        the caller compacts every compact_every rounds). The new rows wait
-        in ``_seen_new`` for the next catalog commit to append them."""
+        the caller compacts every COMPACT_EVERY rounds), and so does a
+        catalog crawl, whose next commit appends the new rows waiting in
+        ``_seen_new``."""
         hashed = fetched.groupBy("url").agg(
             F.min(round_col).cast("int").alias("first_round")
         ).withColumn("url_hash", F.xxhash64("url"))
@@ -760,7 +774,8 @@ class Crawler:
         )
         self._seen_new.append(new_rows)
         merged = seen.unionByName(new_rows)
-        return self._materialize(merged, "urls_seen") if materialize else merged
+        scratch = materialize and self.catalog is None
+        return self._materialize(merged, "urls_seen") if scratch else merged
 
     # ----------------------------------------------------------- index phase
     def run_index_phase(self, seen: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -1318,7 +1333,8 @@ class Crawler:
             n_parts,
             rows_per_bucket=FRONTIER_ROWS_PER_BUCKET,
         )
-        return self._materialize(salted, "frontier")
+        # a catalog crawl's first commit writes it instead (crawl())
+        return salted if self.catalog is not None else self._materialize(salted, "frontier")
 
     @staticmethod
     def _as_frontier(df: DataFrame) -> DataFrame:
@@ -1357,13 +1373,12 @@ class Crawler:
                 frontier, seen, max_rounds=max_rounds, start_round=start_round
             )
         round_no = start_round
-        rounds_done = 0
         seen_layers = 0  # lazy union layers on `seen` since its last write
-        while rounds_done < max_rounds:
+        while round_no < start_round + max_rounds:
             # emptiness needs a driver check only on entry: later iterations
             # only continue when the previous round left deferred/retry rows
             # or queued new pages
-            if rounds_done == 0 and frontier.filter(F.col("status") == "queued").isEmpty():
+            if round_no == start_round and frontier.filter(F.col("status") == "queued").isEmpty():
                 break
             new_urls, cache_hits, blocked = self._admission_setup(frontier, seen)
             new_urls = polite_ops.admit_per_host(new_urls)
@@ -1427,32 +1442,24 @@ class Crawler:
                 self._frontier_rows += n_next
 
             # delta-based rounds: the whole frontier is rewritten only on
-            # compaction (every compact_every rounds) or when the loop ends;
-            # in between, state stays a bounded stack of lazy
-            # broadcast-join/union layers over the last compacted parquet
+            # compaction (see COMPACT_EVERY) or when the loop ends; in
+            # between, state stays a bounded stack of lazy
+            # broadcast-join/union layers over the last compacted table
             # and the catalog appends the round's status map
             # (politeness-bounded size — never O(frontier)). A round that
             # queued new pages rewrites and commits the whole frontier: a
             # status row cannot carry rows, so a kill redoes the round or
-            # finds them committed.
-            compact = ending or n_next or (rounds_done + 1) % self.compact_every == 0
-            if compact:
-                frontier = self._materialize(frontier, "frontier_round")
-                if seen_layers and not ending:
-                    seen = self._materialize(seen, "urls_seen")
-                    seen_layers = 0
-            if self.catalog is not None:
-                # rounds_done == 0 forces a full frontier commit on the
-                # first round of crawl() and resume(): status rows in the
-                # catalog therefore always apply to a frontier this crawl
-                # wrote, never to an earlier crawl's
-                if compact or rounds_done == 0:
-                    tables = {"frontier": frontier, "frontier_status": None}
-                else:
-                    tables = {"frontier_status": Append(
-                        status_map.withColumn("round", F.lit(round_no))
-                    )}
-                self._commit(round_no, tables, {
+            # finds them committed. A compaction's write is the catalog
+            # commit when there is a catalog, else a scratch pin.
+            compact = ending or n_next or (round_no + 1) % COMPACT_EVERY == 0
+            reseen = compact and seen_layers and not ending
+            if self.catalog is None:
+                frontier = self._materialize(frontier, "frontier_round") if compact else frontier
+                seen = self._materialize(seen, "urls_seen") if reseen else seen
+            else:
+                status = Append(status_map.withColumn("round", F.lit(round_no)))
+                full = {"frontier": frontier, "frontier_status": None}
+                snap = self._commit(round_no, full if compact else {"frontier_status": status}, {
                     "phase": "instance",
                     "round": round_no,
                     "fetched": n_admitted,
@@ -1463,8 +1470,10 @@ class Crawler:
                     "failed": _total(counts, "failed"),
                     "urls_seen": self._seen_count,
                 })
+                frontier = self._catalog_frontier(snap) if compact else frontier
+                seen = self._catalog_seen(snap) if reseen else seen
+            seen_layers = 0 if reseen else seen_layers
             round_no += 1
-            rounds_done += 1
             if stop_after_round is not None and round_no > stop_after_round:
                 raise KilledCrawl(round_no)
             if ending:
@@ -1904,20 +1913,24 @@ class Crawler:
         self, *, max_fetch_rounds: int = 64, stop_after_round: int | None = None
     ) -> CrawlResult:
         self._lineage_rows, self._lineage_committed = [], None
-        self._live_pins, self._seen_new = None, []
+        self._live_pins, self._seen_new, self._frontier_rows = None, [], 0
         seen = self._catalog_seen(self.catalog.latest() if self.catalog is not None else None)
-        # small-crawl job diet (see job_diet): a bounded seed list keeps the
+        # small-crawl job diet (see _job_diet): a bounded seed list keeps the
         # index-candidate universe bounded too (<= seeds x pagination_max_
         # pages), so the diet can start before any counting; the fetch phase
         # re-checks against the actual built-frontier size, so a small seed
         # list that fans out wide gets AQE back for the bulk work
-        small = len(self.seeds) <= JOB_DIET_MAX_SEEDS
-        with self._maybe_job_diet(small):
+        with self._job_diet():
             links, seen = self.run_index_phase(seen)
             frontier = self.build_frontier(links)
-        small = small and self._frontier_rows <= JOB_DIET_MAX_ROWS
-        self._uncommitted_links = links if self.catalog is not None else None
-        with self._maybe_job_diet(small):
+            if self.catalog is not None:
+                # the crawl's first snapshot: from here on a killed crawl
+                # resumes, and this crawl continues from what it committed
+                tables = {"frontier": frontier, "frontier_status": None, "links": links}
+                metrics = {"phase": "frontier", "urls_seen": self._seen_count}
+                snap = self._commit(-1, tables, metrics)
+                frontier, seen = self._catalog_frontier(snap), self._catalog_seen(snap)
+        with self._job_diet():
             frontier, seen = self.run_fetch_rounds(
                 frontier, seen, max_rounds=max_fetch_rounds, stop_after_round=stop_after_round
             )
@@ -1925,11 +1938,9 @@ class Crawler:
 
     def _commit(self, round_no: int, tables: dict, metrics: dict):
         """Commit ``tables`` plus what changed since the last commit: the
-        crawl's links until a commit holds them, the seen-set's new rows and
-        the lineage rows noted since, both appended. A crawl's first commit
-        replaces the lineage instead: a new crawl starts a new one."""
-        if self._uncommitted_links is not None:
-            tables["links"], self._uncommitted_links = self._uncommitted_links, None
+        seen-set's new rows and the lineage rows noted since, both appended.
+        A crawl's first commit replaces the lineage instead: a new crawl
+        starts a new one."""
         if self._seen_new:
             tables["urls_seen"] = Append(functools.reduce(DataFrame.unionByName, self._seen_new))
             self._seen_new = []
@@ -1942,8 +1953,10 @@ class Crawler:
 
     def _finish(self, frontier: DataFrame, seen: DataFrame, links: DataFrame) -> CrawlResult:
         """The end of crawl() and resume(): extraction, then the final
-        catalog commit. A catalog crawl returns the committed lineage, so a
-        resumed one holds the rounds before the kill too."""
+        catalog commit, which adds ``extracted`` to the frontier the last
+        round committed. A catalog crawl returns the committed extraction
+        (the extraction runs once) and lineage, so a resumed one holds the
+        rounds before the kill too."""
         # project the frontier down to what extraction consumes before it
         # rides the broadcast body join — the driver-side hash relation
         # shrinks ~2x vs broadcasting all frontier columns
@@ -1953,10 +1966,10 @@ class Crawler:
         if self.catalog is None:
             return CrawlResult(extracted, frontier, seen, self.lineage_df(), links)
         snap = self._commit(
-            -1, {"extracted": extracted, "frontier": frontier, "frontier_status": None},
-            {"phase": "final", "urls_seen": self._seen_count},
+            -1, {"extracted": extracted}, {"phase": "final", "urls_seen": self._seen_count}
         )
-        return CrawlResult(extracted, frontier, seen, self.catalog.table(snap, "lineage"), links)
+        table = functools.partial(self.catalog.table, snap)
+        return CrawlResult(table("extracted"), frontier, seen, table("lineage"), links)
 
     def evict(self, urls: list[str]) -> None:
         """Re-crawl eviction: forget URLs so the next crawl refetches them.
@@ -1980,32 +1993,31 @@ class Crawler:
         )
 
     def resume(self, *, max_fetch_rounds: int = 64) -> CrawlResult:
-        """Continue from the last committed snapshot: reload frontier/seen,
-        re-run remaining fetch rounds, finish extraction. Identical ordering,
-        seen-set and lineage vs an uninterrupted run (north_star resume
-        contract). Row counts come from the manifest: no Spark job runs
-        before the first round."""
+        """Continue from the last committed snapshot (a crawl's first one
+        holds its built frontier): reload frontier/seen, re-run remaining
+        fetch rounds, finish extraction. Identical ordering, seen-set and
+        lineage vs an uninterrupted run (north_star resume contract). Row
+        counts come from the manifest: no Spark job runs before the first
+        round."""
         if self.catalog is None:
             raise ValueError("resume requires a catalog")
         snap = self.catalog.latest()
-        if snap is None:
-            raise ValueError("nothing to resume")
+        if snap is None or "frontier" not in snap.tables:
+            at = f"snapshot {snap.snapshot_id}" if snap else "the catalog"
+            raise ValueError(f"nothing to resume: {at} has no frontier")
         # the new rounds' lineage appends to the committed one
         self._lineage_rows = []
         self._lineage_committed = 0 if "lineage" in snap.tables else None
         self._live_pins, self._seen_new = None, []
         frontier = self._catalog_frontier(snap)
         seen = self._catalog_seen(snap)
-        links = (
-            self.catalog.table(snap, "links")
-            if "links" in snap.tables
-            else self.spark.createDataFrame([], schema=_LINKS_SCHEMA)
-        )
+        links = self.catalog.table(snap, "links")
         self._frontier_rows = self.catalog.rows(snap, "frontier")
         start_round = snap.round + 1 if snap.round >= 0 else 0
-        frontier, seen = self.run_fetch_rounds(
-            frontier, seen, max_rounds=max_fetch_rounds, start_round=start_round
-        )
+        with self._job_diet():
+            frontier, seen = self.run_fetch_rounds(
+                frontier, seen, max_rounds=max_fetch_rounds, start_round=start_round
+            )
         return self._finish(frontier, seen, links)
 
     def lineage_df(self) -> DataFrame:

@@ -28,10 +28,11 @@ Two implementations behind one seam:
   ``org.apache.iceberg.spark.SparkCatalog`` is on the classpath; raises a
   clear error otherwise.
 
-Both also serve the side purpose that makes the iterative crawl loop viable
-at all: committing a round materializes the DataFrames and re-reading them
-truncates Catalyst lineage that would otherwise grow without bound across
-rounds.
+Both are also a catalog crawl's only checkpoint: the crawler commits its
+built frontier and each round's state and continues from the committed
+tables, so the commit is the one write that materializes that state, and
+re-reading it truncates the Catalyst lineage that would otherwise grow
+without bound across the iterative loop's rounds.
 """
 
 from __future__ import annotations
