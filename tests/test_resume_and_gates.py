@@ -1204,3 +1204,84 @@ def test_seen_set_commits_append_only_the_new_rows(spark, pages, tmp_path):
     assert spark.read.parquet(*base_files).count() == n_history
     assert cat.rows(cat.latest(), "urls_seen") == n_history + len(new_urls)
     assert result.urls_seen.count() == n_history + len(new_urls)
+
+
+def test_resume_after_max_fetch_rounds_matches_an_uninterrupted_crawl(spark, pages, tmp_path):
+    """A crawl stopped by max_fetch_rounds with rows still queued resumes
+    at the round after the last one its snapshots hold, and ends with the
+    uninterrupted crawl's extraction, frontier, seen-set incl. first_round
+    and lineage. A snapshot's round is the last fetch round whose state it
+    holds, so every final commit keeps its parent's round."""
+
+    def mk(catalog):
+        return Crawler(
+            spark, pages, [basic_seed(sleep_time_between_requests=30.0)],
+            round_budget_s=30.0, catalog=catalog, clock="2024-03-01 12:00:00",
+        )
+
+    ref_cat = ManifestCatalog(spark, str(tmp_path / "ref"))
+    want = _crawl_state(mk(ref_cat).crawl(), ref_cat)
+    # one token per round: the four instance pages take rounds 0-3
+    assert sorted({r[1] for r in want[3] if r[0] == "instance"}) == [0, 1, 2, 3]
+
+    cat = ManifestCatalog(spark, str(tmp_path / "cat"))
+    stopped = mk(cat).crawl(max_fetch_rounds=2)
+    assert _frontier_multiset(stopped, "status").count(("queued",)) == 2
+    stop = cat.latest()
+    assert _crawl_state(mk(cat).resume(), cat) == want
+    assert stop.round == cat.load(stop.parent).round == 1
+    for c in (ref_cat, cat):
+        final = c.latest()
+        assert final.metrics["phase"] == "final"
+        assert final.round == c.load(final.parent).round == 3
+
+
+SEARCH_LINKS = ".compact-list a.title-link"
+# case -> (the two index chains, the index lineage's (urls_seen, fetched,
+# cache_hits) per round)
+SHARED_INDEX_PAGE = {
+    # both chains' only page is propublica.html
+    "same_round": (
+        [dict(seed_url=f"{BASE}/propublica.html",
+              index_selector="section#river section h1 a")] * 2,
+        [(1, 2, 0)],
+    ),
+    # the search chain reaches ?p=2 in round 1, after the other chain
+    # fetched it in round 0
+    "earlier_round": (
+        [dict(seed_url=f"{BASE}/propublica_search.html", index_selector=SEARCH_LINKS,
+              paginated=True, pagination_param="p", pagination_max_pages=3),
+         dict(seed_url=f"{BASE}/propublica_search.html?p=2", index_selector=SEARCH_LINKS)],
+        [(2, 2, 0), (2, 0, 1), (3, 1, 0)],
+    ),
+}
+
+
+@pytest.mark.parametrize("sleep, closed_form", [(0.0, True), (15.0, False)])
+@pytest.mark.parametrize("case", sorted(SHARED_INDEX_PAGE))
+def test_urls_seen_counts_a_page_two_index_chains_share_once(
+    spark, pages, case, sleep, closed_form
+):
+    """Two index chains that fetch the same page in one round spend a token
+    each, and a chain that reaches a page another chain fetched in an
+    earlier round reads the stash; either way the seen-set gains the page
+    once. The crawler's seen count and every lineage ``urls_seen`` follow
+    the seen-set's size, in the closed form and in the loop."""
+    chains, want = SHARED_INDEX_PAGE[case]
+    seeds = [
+        SeedSpec(j, extract_selector="h1.article-title", extract_kind="text",
+                 sleep_time_between_requests=sleep, **kw)
+        for j, kw in enumerate(chains)
+    ]
+    crawler = Crawler(spark, pages, seeds, round_budget_s=30.0, index_cached=True)
+    assert crawler._index_oneshot_eligible() is closed_form
+    result = crawler.crawl()
+    lineage = sorted(tuple(r) for r in result.lineage.collect())
+    assert [(r[3], r[4], r[6]) for r in lineage if r[0] == "index"] == want
+    n_seen = result.urls_seen.count()
+    assert crawler._seen_count == n_seen
+    assert max(r[3] for r in lineage) == n_seen
+    if case == "same_round":
+        assert n_seen == 5  # the index page and the four instance pages
+        assert _texts(result) == goldens.HEADLINES * 2
+    crawler.close()

@@ -31,11 +31,15 @@ one stateful round loop.
   sleeps, or the next_instance_page_url hook.
 * **catalog = checkpoint** — a catalog crawl commits its built frontier
   (with links, index lineage and index seen rows) as its first snapshot,
-  then one snapshot per fetch round carrying per-partition lineage, and
-  continues from the tables it committed, so the commit is the only write
-  of its state: no scratch copy of the frontier or seen-set. A crawl
-  killed any time after its frontier exists resumes from the latest
-  snapshot (kill/resume-safe); the final commit adds ``extracted``.
+  then one snapshot per fetch round carrying per-partition lineage, so the
+  commit is the only write of its state: no scratch copy of the frontier
+  or seen-set. A snapshot's ``round`` is the last fetch round whose state
+  it holds (the build commit -1, round r's commit r, the final and evict
+  commits their parent's). crawl() continues from its build snapshot
+  through the same code resume() runs from the latest one (``_continue``:
+  the rounds after ``snap.round``, then the final commit, which adds
+  ``extracted``), so a crawl killed or stopped any time after its frontier
+  exists resumes as if it had not stopped.
 * **extraction phase** — the user "block" as a pandas UDF over the html
   column, in the reference's three canned shapes (text / list / table,
   lib/upton/utils.rb:20-40) plus identity (the reference's default block
@@ -80,13 +84,12 @@ from upton_spark.functions.udfs import (
     extract_table_udf,
     extract_text_udf,
     host_col,
-    index_page_urls_udf,
     main_content_udf,
 )
 from upton_spark.operators import partitioning as part_ops
 from upton_spark.operators import politeness as polite_ops
 from upton_spark.operators import robots as robots_ops
-from upton_spark.sources.catalog import Append, ManifestCatalog
+from upton_spark.sources.catalog import Append, ManifestCatalog, Snapshot
 
 N_LINEAGE_BUCKETS = 32  # host-hash buckets used as lineage "partitions"
 # small-crawl job-diet bounds (see Crawler.job_diet): a crawl whose seed
@@ -110,6 +113,8 @@ FRONTIER_ROWS_PER_BUCKET = 100_000
 # write on the same rounds. A resumed crawl compacts on the same rounds as
 # an uninterrupted one.
 COMPACT_EVERY = 8
+# instance pagination queues no page past this pagination_index
+MAX_INSTANCE_PAGES = 16
 
 
 @dataclass
@@ -178,9 +183,24 @@ def _decision_col():
     )
 
 
+def _new_urls():
+    """The index phases' live-fetched distinct URLs: two chains may fetch
+    one page in a round, and the seen-set gains it once."""
+    return F.countDistinct(F.when(_decision_col() == "fetched", F.col("fetch_url")))
+
+
 def _total(counts: dict[tuple[str, int], int], decision: str) -> int:
     """All host buckets' rows of one decision in a lineage count map."""
     return sum(v for (d, _), v in counts.items() if d == decision)
+
+
+def _seed_row(s: SeedSpec) -> tuple:
+    """``s`` as a schemas.SEEDS row."""
+    return (
+        s.seed_id, s.seed_url or "", s.index_selector, s.extract_selector, s.extract_kind,
+        s.paginated, s.pagination_param, s.pagination_max_pages, s.pagination_start_index,
+        s.pagination_interval, s.sleep_time_between_requests,
+    )
 
 
 def _csv_quote(col, sep: str):
@@ -207,7 +227,6 @@ class Crawler:
         catalog: ManifestCatalog | None = None,
         pages_path: str | None = None,
         next_instance_page_url_fn: Callable[[str, int], str] | None = None,
-        max_instance_pages: int = 16,
         assume_unique_urls: bool = False,
         broadcast_frontier: bool = True,
         fetch_failures: DataFrame | None = None,
@@ -372,11 +391,13 @@ class Crawler:
         self.user_agent = user_agent
         self.catalog = catalog
         self.next_instance_page_url_fn = next_instance_page_url_fn
-        self.max_instance_pages = max_instance_pages
         self._lineage_rows: list[tuple] = []
         # how many _lineage_rows the catalog holds; None: the next commit
         # replaces the catalog's lineage (a crawl starts a new one)
         self._lineage_committed: int | None = None
+        # the round of the catalog's latest snapshot: the last fetch round
+        # whose state it holds (-1: none, as in a crawl's build commit)
+        self._round = -1
         # seen-set rows added since the last commit (_mark_seen)
         self._seen_new: list[DataFrame] = []
         self._seen_count = 0
@@ -385,25 +406,7 @@ class Crawler:
         self._frontier_rows = 0
         # (url, html) the live transport fetched this crawl (_live_bodies)
         self._live_pins: DataFrame | None = None
-        self.seeds_df = spark.createDataFrame(
-            [
-                (
-                    s.seed_id,
-                    s.seed_url or "",
-                    s.index_selector,
-                    s.extract_selector,
-                    s.extract_kind,
-                    s.paginated,
-                    s.pagination_param,
-                    s.pagination_max_pages,
-                    s.pagination_start_index,
-                    s.pagination_interval,
-                    s.sleep_time_between_requests,
-                )
-                for s in seeds
-            ],
-            schema=schemas.SEEDS,
-        )
+        self.seeds_df = spark.createDataFrame([_seed_row(s) for s in seeds], schema=schemas.SEEDS)
         self._pages_latest: DataFrame | None = None
         # robots state is built ONCE per crawl (collect+broadcast or the
         # per-host rule-array join side) and reused across every round —
@@ -711,13 +714,12 @@ class Crawler:
         """Per-(decision, host-bucket) lineage counts from a MATERIALIZED
         round table — one tiny groupBy job over the round's parquet (the
         round table is politeness-bounded, never O(frontier)). ``extra``
-        names boolean columns/exprs to count-if in the same job (e.g. the
+        names aggregates to sum over the groups in the same job (e.g. the
         index chain's alive-next-round count), so accounting stays a single
         job per round."""
         pid = F.pmod(F.hash("host"), F.lit(N_LINEAGE_BUCKETS)).cast("int")
         aggs = [F.count(F.lit(1)).alias("__n")]
-        for name, cond in (extra or {}).items():
-            aggs.append(F.count(F.when(cond, F.lit(1))).alias(name))
+        aggs += [agg.alias(name) for name, agg in (extra or {}).items()]
         rows = (
             df.groupBy(decision_col.alias("__decision"), pid.alias("__pid"))
             .agg(*aggs)
@@ -785,32 +787,37 @@ class Crawler:
             return self.run_index_phase_oneshot(seen)
         return self.run_index_phase_sequential(seen)
 
-    def _index_seeds(self) -> list[SeedSpec]:
-        return [s for s in self.seeds if s.seed_url and s.index_selector is not None]
+    @functools.cached_property
+    def _index_chains(self) -> list[tuple[SeedSpec, list[str]]]:
+        """Each index seed (a ``seed_url`` and an ``index_selector``) with
+        its chain's page URLs in fetch order, walked once on the driver
+        (``urlkit.index_page_urls``, the only definition of a chain)."""
+        return [
+            (s, urlkit.index_page_urls(
+                s.seed_url,
+                paginated=s.paginated,
+                pagination_param=s.pagination_param,
+                pagination_start_index=s.pagination_start_index,
+                pagination_interval=s.pagination_interval,
+                pagination_max_pages=s.pagination_max_pages,
+            ))
+            for s in self.seeds
+            if s.seed_url and s.index_selector is not None
+        ]
 
     def _index_seeds_df(self) -> DataFrame:
-        """Index seeds plus ``pages``: each chain's page URLs in fetch order
-        (``urlkit.index_page_urls``, the only definition of a chain)."""
-        return self.seeds_df.filter(
-            (F.col("seed_url") != "") & F.col("index_selector").isNotNull()
-        ).withColumn(
-            "pages",
-            index_page_urls_udf(
-                F.struct(
-                    "seed_url",
-                    "paginated",
-                    "pagination_param",
-                    "pagination_start_index",
-                    "pagination_interval",
-                    "pagination_max_pages",
-                )
-            ),
+        """The index seeds as schemas.SEEDS rows plus ``pages``, their
+        chain's page URLs."""
+        pages = T.StructField("pages", T.ArrayType(T.StringType()))
+        return self.spark.createDataFrame(
+            [(*_seed_row(s), urls) for s, urls in self._index_chains],
+            schema=T.StructType(schemas.SEEDS.fields + [pages]),
         )
 
     def _index_tokens(self) -> set[int]:
         return {
             polite_ops.tokens_for(s.sleep_time_between_requests, self.round_budget_s)
-            for s in self._index_seeds()
+            for s, _ in self._index_chains
         }
 
     def _index_oneshot_eligible(self) -> bool:
@@ -878,7 +885,7 @@ class Crawler:
         reads no corpus for live pages, so it skips the probe."""
         if self.fetch_fn is not None:
             return None, False
-        urls = self._index_candidate_urls_local()
+        urls = [u for _, chain in self._index_chains for u in chain]
         pl = self._pruned_corpus(
             self._index_page_candidates().select(F.col("fetch_url").alias("url")),
             len(urls),
@@ -985,8 +992,15 @@ class Crawler:
         tokens = next(iter(self._index_tokens()), polite_ops.UNLIMITED)
         if tokens >= polite_ops.UNLIMITED:
             assigned = valid.withColumn("round", F.col("page_k"))
+            if self.index_cached:
+                # as in the loop, a page another chain fetched in an
+                # earlier round is a stash hit
+                first = F.min("round").over(Window.partitionBy("fetch_url"))
+                assigned = assigned.withColumn(
+                    "cache_hit", F.col("cache_hit") | (F.col("round") > first)
+                )
             schedule = assigned.select(
-                "host", "round", F.lit(True).alias("admitted"), "cache_hit"
+                "host", "round", F.lit(True).alias("admitted"), "cache_hit", "fetch_url"
             )
         else:
 
@@ -1041,19 +1055,24 @@ class Crawler:
             schedule = schedule.withColumn("cache_hit", F.lit(False))
 
         pid = F.pmod(F.hash("host"), F.lit(N_LINEAGE_BUCKETS)).cast("int")
+        aggs = [F.count(F.lit(1)).alias("count")]
+        if self.index_cached:  # here with unlimited tokens, so fetch_url is set
+            aggs.append(_new_urls().alias("new_urls"))
         per_round: dict[int, dict[tuple[str, int], int]] = {}
+        new_urls: dict[int, int] = {}
         for r in (
             schedule.groupBy(_decision_col().alias("d"), "round", pid.alias("pid"))
-            .count()
+            .agg(*aggs)
             .collect()
         ):
             per_round.setdefault(r["round"], {})[(r["d"], r["pid"])] = r["count"]
+            if self.index_cached:
+                new_urls[r["round"]] = new_urls.get(r["round"], 0) + r["new_urls"]
         # no candidate pages at all: the loop still notes an empty round 0
         for rnd in sorted(per_round) or [0]:
-            if self.index_cached:
-                self._seen_count += _total(per_round.get(rnd, {}), "fetched")
+            self._seen_count += new_urls.get(rnd, 0)
             self._note_lineage("index", rnd, per_round.get(rnd, {}))
-        if self.index_cached and any(_total(c, "fetched") for c in per_round.values()):
+        if any(new_urls.values()):
             seen = self._mark_seen(
                 seen,
                 assigned.filter(~F.col("cache_hit")).select(
@@ -1094,22 +1113,6 @@ class Crawler:
             F.posexplode_outer("hrefs").alias("pos", "url"),
         ).filter(F.col("pos").isNotNull())
 
-    def _index_candidate_urls_local(self) -> list[str]:
-        """_index_page_candidates' URLs computed on the driver: their count
-        gates the corpus prune, and a short list is its IN probe."""
-        return [
-            u
-            for s in self._index_seeds()
-            for u in urlkit.index_page_urls(
-                s.seed_url,
-                paginated=s.paginated,
-                pagination_param=s.pagination_param,
-                pagination_start_index=s.pagination_start_index,
-                pagination_interval=s.pagination_interval,
-                pagination_max_pages=s.pagination_max_pages,
-            )
-        ]
-
     def run_index_phase_sequential(self, seen: DataFrame) -> tuple[DataFrame, DataFrame]:
         """The index round loop. Returns (links, seen).
 
@@ -1126,7 +1129,7 @@ class Crawler:
         Politeness-bounded crawls are round-dominated, so per-round driver
         job count is the wall-clock at thousands of rounds."""
         state = self._index_seeds_df().withColumn("page_k", F.lit(0))
-        alive = len(self._index_seeds())  # known driver-side — no state.count() job
+        alive = len(self._index_chains)  # known driver-side — no state.count() job
         links_parts: list[DataFrame] = []
         round_no = 0
         state_cols = [f.name for f in schemas.SEEDS.fields] + ["pages", "page_k"]
@@ -1155,13 +1158,12 @@ class Crawler:
             fused = self._materialize(
                 self._index_bodies(cand, corpus, admitted="admitted"), "index_round"
             )
-            counts, extra = self._collect_decision_counts(
-                fused, _decision_col(),
-                extra={"__advanced": F.col("admitted") & ~F.col("body_empty")},
-            )
-            n_live = _total(counts, "fetched")
-            if self.index_cached and n_live:
-                self._seen_count += n_live
+            aggs = {"__advanced": F.count(F.when(F.col("admitted") & ~F.col("body_empty"), 1))}
+            if self.index_cached:
+                aggs["__new_urls"] = _new_urls()
+            counts, extra = self._collect_decision_counts(fused, _decision_col(), extra=aggs)
+            if extra.get("__new_urls"):
+                self._seen_count += extra["__new_urls"]
                 seen = self._mark_seen(
                     seen,
                     fused.filter(F.col("admitted") & ~F.col("cache_hit")).select(
@@ -1753,7 +1755,7 @@ class Crawler:
         hook, lib/upton.rb:321-334): queued rows for page k+1 of every
         instance whose page k this round's ``decisions`` decided fetched or
         cache_hit with a non-empty body. A chain stops on an empty or unchanged
-        url, an empty body, or past ``max_instance_pages``. The hook
+        url, an empty body, or past ``MAX_INSTANCE_PAGES``. The hook
         receives the ORIGINAL instance url each time, like the reference
         (lib/upton.rb:326), and page k+1 keeps its instance's priority, so
         admission ranks it ahead of later instances as Upton fetches it."""
@@ -1769,7 +1771,7 @@ class Crawler:
         base = (
             frontier.filter(
                 (F.col("status") == "queued")
-                & (F.col("pagination_index") < self.max_instance_pages)
+                & (F.col("pagination_index") < MAX_INSTANCE_PAGES)
             )
             .drop("status")
             .join(decided, "url_hash")
@@ -1912,6 +1914,9 @@ class Crawler:
     def crawl(
         self, *, max_fetch_rounds: int = 64, stop_after_round: int | None = None
     ) -> CrawlResult:
+        """Index phase, frontier build, fetch rounds, extraction. A catalog
+        crawl commits its built frontier and continues from that snapshot
+        as resume() would."""
         self._lineage_rows, self._lineage_committed = [], None
         self._live_pins, self._seen_new, self._frontier_rows = None, [], 0
         seen = self._catalog_seen(self.catalog.latest() if self.catalog is not None else None)
@@ -1929,10 +1934,29 @@ class Crawler:
                 tables = {"frontier": frontier, "frontier_status": None, "links": links}
                 metrics = {"phase": "frontier", "urls_seen": self._seen_count}
                 snap = self._commit(-1, tables, metrics)
-                frontier, seen = self._catalog_frontier(snap), self._catalog_seen(snap)
+        if self.catalog is not None:
+            return self._continue(snap, max_fetch_rounds, stop_after_round)
         with self._job_diet():
             frontier, seen = self.run_fetch_rounds(
                 frontier, seen, max_rounds=max_fetch_rounds, stop_after_round=stop_after_round
+            )
+        return self._finish(frontier, seen, links)
+
+    def _continue(
+        self, snap: Snapshot, max_fetch_rounds: int, stop_after_round: int | None = None
+    ) -> CrawlResult:
+        """The rest of a catalog crawl from ``snap``, the same for crawl()
+        (from its build commit) and resume() (from the latest commit): the
+        fetch rounds after ``snap.round``, then _finish. Table row counts
+        come from the manifest."""
+        frontier, seen = self._catalog_frontier(snap), self._catalog_seen(snap)
+        links = self.catalog.table(snap, "links")
+        self._frontier_rows = self.catalog.rows(snap, "frontier")
+        self._round = snap.round
+        with self._job_diet():
+            frontier, seen = self.run_fetch_rounds(
+                frontier, seen, max_rounds=max_fetch_rounds,
+                stop_after_round=stop_after_round, start_round=snap.round + 1,
             )
         return self._finish(frontier, seen, links)
 
@@ -1940,7 +1964,8 @@ class Crawler:
         """Commit ``tables`` plus what changed since the last commit: the
         seen-set's new rows and the lineage rows noted since, both appended.
         A crawl's first commit replaces the lineage instead: a new crawl
-        starts a new one."""
+        starts a new one. ``round_no`` is the last fetch round whose state
+        the snapshot holds (-1: none yet)."""
         if self._seen_new:
             tables["urls_seen"] = Append(functools.reduce(DataFrame.unionByName, self._seen_new))
             self._seen_new = []
@@ -1949,14 +1974,15 @@ class Crawler:
             rows = self.spark.createDataFrame(self._lineage_rows[done or 0:], schema=schemas.LINEAGE)
             tables["lineage"] = rows if done is None else Append(rows)
             self._lineage_committed = len(self._lineage_rows)
+        self._round = round_no
         return self.catalog.commit(round_no, tables, metrics=metrics)
 
     def _finish(self, frontier: DataFrame, seen: DataFrame, links: DataFrame) -> CrawlResult:
-        """The end of crawl() and resume(): extraction, then the final
-        catalog commit, which adds ``extracted`` to the frontier the last
-        round committed. A catalog crawl returns the committed extraction
-        (the extraction runs once) and lineage, so a resumed one holds the
-        rounds before the kill too."""
+        """The end of a crawl: extraction, then the final catalog commit,
+        which adds ``extracted`` to the frontier the last round committed
+        and keeps that round. A catalog crawl returns the committed
+        extraction (the extraction runs once) and lineage, so a resumed one
+        holds the rounds before the kill too."""
         # project the frontier down to what extraction consumes before it
         # rides the broadcast body join — the driver-side hash relation
         # shrinks ~2x vs broadcasting all frontier columns
@@ -1966,7 +1992,7 @@ class Crawler:
         if self.catalog is None:
             return CrawlResult(extracted, frontier, seen, self.lineage_df(), links)
         snap = self._commit(
-            -1, {"extracted": extracted}, {"phase": "final", "urls_seen": self._seen_count}
+            self._round, {"extracted": extracted}, {"phase": "final", "urls_seen": self._seen_count}
         )
         table = functools.partial(self.catalog.table, snap)
         return CrawlResult(table("extracted"), frontier, seen, table("lineage"), links)
@@ -1994,11 +2020,10 @@ class Crawler:
 
     def resume(self, *, max_fetch_rounds: int = 64) -> CrawlResult:
         """Continue from the last committed snapshot (a crawl's first one
-        holds its built frontier): reload frontier/seen, re-run remaining
-        fetch rounds, finish extraction. Identical ordering, seen-set and
-        lineage vs an uninterrupted run (north_star resume contract). Row
-        counts come from the manifest: no Spark job runs before the first
-        round."""
+        holds its built frontier) with the fetch rounds after the last one
+        it holds, then finish extraction. Identical ordering, seen-set and
+        lineage vs an uninterrupted run (north_star resume contract). No
+        Spark job runs before the first round."""
         if self.catalog is None:
             raise ValueError("resume requires a catalog")
         snap = self.catalog.latest()
@@ -2006,19 +2031,9 @@ class Crawler:
             at = f"snapshot {snap.snapshot_id}" if snap else "the catalog"
             raise ValueError(f"nothing to resume: {at} has no frontier")
         # the new rounds' lineage appends to the committed one
-        self._lineage_rows = []
-        self._lineage_committed = 0 if "lineage" in snap.tables else None
+        self._lineage_rows, self._lineage_committed = [], 0
         self._live_pins, self._seen_new = None, []
-        frontier = self._catalog_frontier(snap)
-        seen = self._catalog_seen(snap)
-        links = self.catalog.table(snap, "links")
-        self._frontier_rows = self.catalog.rows(snap, "frontier")
-        start_round = snap.round + 1 if snap.round >= 0 else 0
-        with self._job_diet():
-            frontier, seen = self.run_fetch_rounds(
-                frontier, seen, max_rounds=max_fetch_rounds, start_round=start_round
-            )
-        return self._finish(frontier, seen, links)
+        return self._continue(snap, max_fetch_rounds)
 
     def lineage_df(self) -> DataFrame:
         return self.spark.createDataFrame(self._lineage_rows, schema=schemas.LINEAGE)

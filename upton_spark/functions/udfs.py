@@ -83,13 +83,6 @@ def resolve_url_udf(href: pd.Series, base_url: pd.Series) -> pd.Series:
     return pd.Series([urlkit.resolve_url_or_none(h, b) for h, b in zip(href, base_url)])
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def index_page_urls_udf(seed: pd.DataFrame) -> pd.Series:
-    """Each index seed's chain of page URLs: ``seed`` is a struct of
-    ``urlkit.index_page_urls``' arguments, by name."""
-    return pd.Series([urlkit.index_page_urls(**kw) for kw in seed.to_dict("records")])
-
-
 @F.pandas_udf(T.StringType())
 def set_query_param_udf(url: pd.Series, param: pd.Series, value: pd.Series) -> pd.Series:
     return pd.Series(
